@@ -3,8 +3,15 @@
 The reference pulls pages of ≤30 nested shift docs over HTTP, following
 ``links.next`` until absent (reference etl/app/shift_data_processor.py:32-43,
 146-152, 185-215). Here the page loop stays driver-side (it is control flow,
-not data flow); each page body becomes a DataFrame with the explicit ingest
-schema — no JSON inference ever (SURVEY.md §1.1).
+not data flow); the docs of every page in a batch become ONE local relation
+with the explicit ingest schema — no JSON inference ever (SURVEY.md §1.1).
+
+One relation, not one per page: ``createDataFrame`` over local rows
+parallelizes them into defaultParallelism slices, so a union of per-page
+frames would have parallelism × pages partitions whatever the row count, and
+every downstream stage, integrity check and parquet part file would pay
+per-task cost for each. The batch's partition count must not grow with its
+page count. The rows are held on the driver either way.
 
 For big ingests the right shape is unchanged: the driver only ever touches
 page *URLs*; page *bodies* can be fetched executor-side by mapping a URL list
@@ -16,7 +23,6 @@ from __future__ import annotations
 
 import json
 from collections.abc import Callable, Iterable, Iterator
-from functools import reduce
 from urllib.parse import urljoin, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,18 +67,14 @@ def iter_http_pages(
         current = next_url(page, base)
 
 
-def page_df(spark: SparkSession, page: dict) -> DataFrame:
-    """S1 — one page body → DataFrame of nested shift docs (explicit schema)."""
-    return spark.createDataFrame(page["results"], SHIFT_DOC_SCHEMA)
-
-
 def docs_from_pages(spark: SparkSession, pages: Iterable[dict]) -> DataFrame:
-    """Union all page DataFrames into one doc DataFrame. Lazy plan — no page
-    data is retained driver-side beyond the dict being converted."""
-    dfs = [page_df(spark, p) for p in pages]
-    if not dfs:
-        return spark.createDataFrame([], SHIFT_DOC_SCHEMA)
-    return reduce(DataFrame.unionByName, dfs)
+    """S1 — all page bodies of a batch → one DataFrame of nested shift docs
+    (explicit schema). ``pages`` is drained once, page by page (an
+    ``iter_http_pages`` generator fetches as it goes); the docs form a single
+    local relation (one plan leaf), so the batch has defaultParallelism
+    partitions, never a multiple of its page count."""
+    docs = [d for p in pages for d in p["results"]]
+    return spark.createDataFrame(docs, SHIFT_DOC_SCHEMA)
 
 
 def distributed_fetch_df(

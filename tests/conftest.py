@@ -15,6 +15,7 @@ def spark():
 # (plans/r11/pytest_durations.txt) rather than scattered decorators.
 # Deselected by default via pytest.ini addopts; run with `-m slow` or
 # `-m ""`, and always exercised by the tools/gate.py pytest_slow step.
+# ETL tests that re-profiled under 10 s on 4 cores run by default.
 SLOW_TESTS = {
     "tests/test_composed_entries.py::test_composed_entry_matches_oracle[x231_curation_ledger]",
     "tests/test_composed_entries.py::test_composed_entry_matches_oracle[x232_curation_ledger_tokens]",
@@ -31,11 +32,9 @@ SLOW_TESTS = {
     "tests/test_curate_pipeline.py::test_persisted_output",
     "tests/test_curate_pipeline.py::test_split_fractions_and_leakage",
     "tests/test_curate_pipeline.py::test_token_budget_mode",
-    "tests/test_jdbc_sink.py::test_jdbc_write_batch_golden_counts",
     "tests/test_pipeline.py::test_cli_curate_smoke",
     "tests/test_pipeline.py::test_cli_prepare_smoke",
     "tests/test_pipeline.py::test_custom_datasource_reads_api",
-    "tests/test_pipeline.py::test_run_etl_over_real_http",
     "tests/test_properties.py::test_flatten_invariants",
     "tests/test_properties_sketches.py::test_rollup_fold_order_invariance",
     "tests/test_quantiles.py::test_det_variant_boundary_sizes",

@@ -8,6 +8,7 @@ import pytest
 
 from shifts_etl_spark.operators.quality import IntegrityError
 from shifts_etl_spark.pipeline import clear_data, run_etl
+from shifts_etl_spark.schemas import SHIFT_DOC_SCHEMA
 from shifts_etl_spark.sinks.staged import StagedWriter
 from shifts_etl_spark.sources.generator import generate_shift_docs, paginate
 from shifts_etl_spark.sources.pages import docs_from_pages, iter_http_pages
@@ -22,6 +23,21 @@ def test_pagination_equivalence(spark, tmp_path):
     two = docs_from_pages(spark, paginate(docs, limit=7))
     assert one.count() == two.count() == 20
     assert one.exceptAll(two).count() == 0
+
+
+def test_docs_from_pages_is_one_relation(spark):
+    """A 52-page batch is one plan leaf with at most defaultParallelism
+    partitions: the partition count must not grow with the page count."""
+    df = docs_from_pages(spark, paginate(generate_shift_docs(360), 7))
+    assert df._jdf.queryExecution().analyzed().collectLeaves().size() == 1
+    assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    assert df.count() == 360
+
+
+def test_docs_from_pages_empty_feed(spark):
+    df = docs_from_pages(spark, [{"results": [], "links": {}}])
+    assert df.schema == SHIFT_DOC_SCHEMA
+    assert df.count() == 0
 
 
 def test_run_etl_counts_golden(spark, tmp_path):
@@ -59,7 +75,6 @@ def test_rollback_on_orphan_fk(spark, tmp_path):
     # simulate an orphan by post-processing: a break pointing nowhere can't
     # arise from nested input, so check the validator directly instead
     from shifts_etl_spark.operators import flatten, quality
-    from shifts_etl_spark.schemas import SHIFT_DOC_SCHEMA
 
     d = spark.createDataFrame(docs, SHIFT_DOC_SCHEMA)
     tables = flatten.flatten_all(d)
@@ -76,6 +91,19 @@ def test_clear_data(spark, tmp_path):
     clear_data(out)
     w = StagedWriter(out)
     assert not any(w.table_exists(t) for t in ["shifts", "breaks", "kpis"])
+
+
+def test_run_etl_part_files_follow_rows_not_pages(spark, tmp_path):
+    """20 pages commit at most defaultParallelism part files per child
+    table (a per-page fan-out would write ~parallelism × 20)."""
+    out = tmp_path / "out"
+    pages = paginate(generate_shift_docs(20), 1)
+    assert len(pages) >= 20
+    counts = run_etl(spark, pages=pages, output_dir=out, anchor_date="2023-02-01")
+    assert counts["shifts"] == 20
+    for t in ["shifts", "breaks", "allowances", "award_interpretations"]:
+        n_files = len(list((out / t).rglob("part-*.parquet")))
+        assert 0 < n_files <= spark.sparkContext.defaultParallelism, t
 
 
 def test_http_pagination_iterator(spark):
