@@ -2,15 +2,16 @@
 constraints (reference initdb.sql:3-46; rollback behavior
 etl/tests/test_shift_data_processor.py:242-300, SURVEY.md §2.12).
 
-Spark enforces no constraints, so PK/FK/NOT-NULL become pre-write validation
+Spark enforces no constraints, so PK/FK become pre-write validation
 DataFrames; any violation raises IntegrityError BEFORE anything is written,
 which combined with the staged atomic sink gives the reference's
 "duplicate PK ⇒ zero rows persisted" semantics at job granularity.
 
-Scale notes: PK check is one hash-aggregate on the key (map-side partial
-count makes the shuffle tiny); FK check is a left-anti join where the parent
-key set is broadcast when dim-sized. Both short-circuit via ``.isEmpty()``
-(Spark only materializes the first partition that yields a violation).
+Scale notes: ``validate_tables`` folds every PK and FK check into one
+shuffle (a union of (check, key, role) rows grouped on (check, key), with
+map-side partial counts) and one ``isEmpty`` over the violating groups.
+Only when that finds something do the per-check functions re-run in
+order, to name the first broken constraint and sample its keys.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from pyspark.sql import DataFrame, functions as F
 
 
 class IntegrityError(Exception):
-    """Raised on PK/FK/NOT-NULL violation — the engine's analog of
+    """Raised on PK/FK violation — the engine's analog of
     psycopg2.IntegrityError in the reference rollback test."""
 
 
@@ -53,25 +54,69 @@ def check_foreign_key(
         raise IntegrityError(f"orphan foreign key in {table}.{key}: {sample}")
 
 
-def check_not_null(df: DataFrame, cols: list[str], table: str = "?") -> None:
-    preds = [F.col(c).isNull() for c in cols]
-    cond = preds[0]
-    for p in preds[1:]:
-        cond = cond | p
-    if not df.where(cond).isEmpty():
-        raise IntegrityError(f"NULL in NOT NULL column(s) {cols} of {table}")
+# Row roles of the folded check: a PK row, or one side of an FK edge.
+_PK, _CHILD, _PARENT = 0, 1, 2
+
+
+def violations(tables: dict[str, DataFrame]) -> DataFrame | None:
+    """(check, key) groups that break a PK or FK of the 4 tables: more
+    than one PK row, or child rows with no parent row. A NULL child key is
+    an orphan, as in the left-anti join of :func:`orphan_rows`. Keys are
+    compared as strings (every PK/FK column in schemas.py is one). None
+    when ``tables`` holds no constrained table."""
+    from ..schemas import FOREIGN_KEYS, PRIMARY_KEYS
+
+    def rows(df: DataFrame, check: int, key: str, role: int) -> DataFrame:
+        return df.select(
+            F.lit(check).alias("check"),
+            F.col(key).cast("string").alias("key"),
+            F.lit(role).alias("role"),
+        )
+
+    parts = []
+    for name, pk in PRIMARY_KEYS.items():
+        if name in tables:
+            parts.append(rows(tables[name], len(parts), pk, _PK))
+    for name, (key, parent) in FOREIGN_KEYS.items():
+        if name in tables and parent in tables:
+            check = len(parts)
+            parts.append(rows(tables[name], check, key, _CHILD))
+            parts.append(rows(tables[parent], check, key, _PARENT))
+    if not parts:
+        return None
+    union = parts[0]
+    for p in parts[1:]:
+        union = union.unionByName(p)
+
+    def n(role: int):
+        return F.sum((F.col("role") == role).cast("long"))
+
+    groups = union.groupBy("check", "key").agg(
+        n(_PK).alias("n_pk"), n(_CHILD).alias("n_child"), n(_PARENT).alias("n_parent")
+    )
+    orphan = (F.col("n_child") > 0) & (
+        (F.col("n_parent") == 0) | F.col("key").isNull()
+    )
+    return groups.where((F.col("n_pk") > 1) | orphan)
 
 
 def validate_tables(tables: dict[str, DataFrame]) -> None:
-    """Run the reference's constraint set over the 4 flattened tables."""
+    """Run the reference's constraint set over the 4 flattened tables: one
+    shuffle and one ``isEmpty`` on the clean path. On a violation the
+    per-check functions re-run in order, so the error names the first
+    broken constraint exactly as a check-by-check pass would."""
     from ..schemas import FOREIGN_KEYS, PRIMARY_KEYS
 
+    bad = violations(tables)
+    if bad is None or bad.isEmpty():
+        return
     for name, pk in PRIMARY_KEYS.items():
         if name in tables:
             check_unique(tables[name], pk, name)
     for name, (key, parent) in FOREIGN_KEYS.items():
         if name in tables and parent in tables:
             check_foreign_key(tables[name], key, tables[parent], name)
+    raise IntegrityError(f"integrity violation: {bad.limit(5).collect()}")
 
 
 def k_anonymity_histogram(

@@ -13,9 +13,10 @@ from __future__ import annotations
 
 import datetime as dt
 from collections.abc import Iterable
+from functools import reduce
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from .operators import flatten, kpi, quality
@@ -53,19 +54,39 @@ def run_etl(
     # (etl_http run_cpu_s ~8 s -> 17-18 s, 4 cores).
     docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
     try:
+        # Build the cache with one job before validating: the folded check
+        # scans docs ten times in one union, and against a not-yet-built
+        # cache AQE launches one materialization job per scan (10 jobs,
+        # 40 tasks on 4 cores).
+        docs.count()
         tables = flatten.flatten_all(docs)
         quality.validate_tables(tables)
 
         writer = StagedWriter(output_dir)
         batch = writer.write_batch(tables)
 
-        shifts = writer.read_table(spark, "shifts")
-        breaks = writer.read_table(spark, "breaks")
-        allowances = writer.read_table(spark, "allowances")
+        # Read back with the schemas just written: inference would cost a
+        # footer-reading job per read.
+        schemas = {name: df.schema for name, df in tables.items()}
+        shifts = writer.read_table(spark, "shifts", schema=schemas["shifts"])
+        breaks = writer.read_table(spark, "breaks", schema=schemas["breaks"])
+        allowances = writer.read_table(spark, "allowances", schema=schemas["allowances"])
         kpis = kpi.compute_kpis(spark, shifts, breaks, allowances, anchor_date)
         writer.write_batch({"kpis": kpis}, batch_id=f"{batch}-kpis")
+        schemas["kpis"] = kpis.schema
 
-        counts = {name: writer.read_table(spark, name).count() for name in OUTPUT_TABLES}
+        # One aggregate over every committed batch of all five tables,
+        # instead of a count job pair per table.
+        rows = [
+            writer.read_table(spark, name, schema=schemas[name]).select(
+                F.lit(name).alias("table")
+            )
+            for name in OUTPUT_TABLES
+        ]
+        union = reduce(DataFrame.unionByName, rows)
+        counts = dict.fromkeys(OUTPUT_TABLES, 0)
+        for r in union.groupBy("table").count().collect():
+            counts[r["table"]] = r["count"]
         return counts
     finally:
         docs.unpersist()
@@ -115,8 +136,6 @@ def prepare_training_data(
     mixed, split corpus with a per-stage accounting ledger. Use this one
     to produce model inputs, curate() to decide what goes in the corpus.
     """
-    from pyspark.sql import functions as F
-
     from .operators import dedup
     from .operators.chunking import chunk_documents, pack_sequences
     from .operators.textstats import quality_filter, repetition_stats, scrub_pii
@@ -287,7 +306,7 @@ def curate(
     split with full accounting, this function) and of
     ``streaming.micro_batch.streaming_curation_admit`` (the online
     admission variant of the same filters)."""
-    from pyspark.sql import Window, functions as F
+    from pyspark.sql import Window
 
     from .operators import curation as cur, dedup as dd
     from .operators.textstats import normalize_text, quality_score, token_count

@@ -26,6 +26,7 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class StagedWriter:
@@ -78,12 +79,19 @@ class StagedWriter:
         return out
 
     def read_table(
-        self, spark: SparkSession, name: str, as_of: str | None = None
+        self,
+        spark: SparkSession,
+        name: str,
+        as_of: str | None = None,
+        schema: StructType | None = None,
     ) -> DataFrame:
         """Current state, or — with ``as_of`` = a batch id — the snapshot
         as of that commit (every batch committed up to and including it).
         Raises if the snapshot needs a batch that compaction has since
-        rewritten (compaction truncates history, like VACUUM)."""
+        rewritten (compaction truncates history, like VACUUM).
+
+        ``schema``, when the caller knows what it wrote, skips the
+        one-task job Spark otherwise runs to infer it from parquet footers."""
         if as_of is not None:
             all_commits = self.commits()
             ids = [bid for bid, _ in all_commits]
@@ -108,8 +116,9 @@ class StagedWriter:
         if not batches:
             from ..schemas import TABLE_SCHEMAS
 
-            return spark.createDataFrame([], TABLE_SCHEMAS[name])
-        return spark.read.parquet(*batches)
+            return spark.createDataFrame([], schema or TABLE_SCHEMAS[name])
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*batches)
 
     def table_exists(self, name: str) -> bool:
         d = self.root / name

@@ -5,10 +5,17 @@ atomicity, clear — the engine analogs of the reference's test suite
 import copy
 
 import pytest
+from pyspark.sql import functions as F
 
+from shifts_etl_spark.operators import flatten, quality
 from shifts_etl_spark.operators.quality import IntegrityError
-from shifts_etl_spark.pipeline import clear_data, run_etl
-from shifts_etl_spark.schemas import SHIFT_DOC_SCHEMA
+from shifts_etl_spark.pipeline import OUTPUT_TABLES, clear_data, run_etl
+from shifts_etl_spark.schemas import (
+    FOREIGN_KEYS,
+    PRIMARY_KEYS,
+    SHIFT_DOC_SCHEMA,
+    TABLE_SCHEMAS,
+)
 from shifts_etl_spark.sinks.staged import StagedWriter
 from shifts_etl_spark.sources.generator import generate_shift_docs, paginate
 from shifts_etl_spark.sources.pages import docs_from_pages, iter_http_pages
@@ -74,8 +81,6 @@ def test_rollback_on_orphan_fk(spark, tmp_path):
     docs = copy.deepcopy(GOLDEN_DOCS)
     # simulate an orphan by post-processing: a break pointing nowhere can't
     # arise from nested input, so check the validator directly instead
-    from shifts_etl_spark.operators import flatten, quality
-
     d = spark.createDataFrame(docs, SHIFT_DOC_SCHEMA)
     tables = flatten.flatten_all(d)
     breaks_bad = tables["breaks"].withColumn(
@@ -83,6 +88,128 @@ def test_rollback_on_orphan_fk(spark, tmp_path):
     )
     with pytest.raises(quality.IntegrityError):
         quality.check_foreign_key(breaks_bad, "shift_id", tables["shifts"], "breaks")
+
+
+@pytest.fixture(scope="module")
+def golden_tables(spark):
+    docs = spark.createDataFrame(GOLDEN_DOCS, SHIFT_DOC_SCHEMA).persist()
+    docs.count()
+    yield flatten.flatten_all(docs)
+    docs.unpersist()
+
+
+def _violate(tables, kind, name):
+    """Break one constraint on one row: duplicate the row with the smallest
+    key (PK) or point its shift_id nowhere (FK)."""
+    df, key = tables[name], PRIMARY_KEYS[name]
+    first = min(r[key] for r in df.select(key).collect())
+    if kind == "pk":
+        bad = df.unionByName(df.where(F.col(key) == first))
+    else:
+        bad = df.withColumn(
+            "shift_id",
+            F.when(F.col(key) == first, F.lit("no-such-shift")).otherwise(
+                F.col("shift_id")
+            ),
+        )
+    return {**tables, name: bad}
+
+
+def _per_check_error(tables, kind, name) -> str:
+    with pytest.raises(IntegrityError) as e:
+        if kind == "pk":
+            quality.check_unique(tables[name], PRIMARY_KEYS[name], name)
+        else:
+            key, parent = FOREIGN_KEYS[name]
+            quality.check_foreign_key(tables[name], key, tables[parent], name)
+    return str(e.value)
+
+
+CONSTRAINTS = [("pk", t) for t in PRIMARY_KEYS] + [("fk", t) for t in FOREIGN_KEYS]
+
+
+@pytest.mark.parametrize("kind,name", CONSTRAINTS, ids=[f"{k}-{t}" for k, t in CONSTRAINTS])
+def test_validate_tables_reports_single_violation_like_per_check(golden_tables, kind, name):
+    """The folded check finds each of the seven constraints on its own and
+    raises the very message the per-check function raises."""
+    tables = _violate(golden_tables, kind, name)
+    assert quality.violations(tables).count() == 1
+    expected = _per_check_error(tables, kind, name)
+    assert name in expected
+    with pytest.raises(IntegrityError) as e:
+        quality.validate_tables(tables)
+    assert str(e.value) == expected
+
+
+def test_validate_tables_null_child_key_is_orphan(golden_tables):
+    tables = golden_tables
+    breaks = tables["breaks"].withColumn("shift_id", F.lit(None).cast("string"))
+    with pytest.raises(
+        IntegrityError, match=r"orphan foreign key in breaks\.shift_id: \[None, None\]"
+    ):
+        quality.validate_tables({**tables, "breaks": breaks})
+
+
+def _jobs(spark, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup("count-jobs", "count-jobs")
+    try:
+        fn()
+        return len(sc.statusTracker().getJobIdsForGroup("count-jobs"))
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def test_validate_tables_clean_in_few_jobs(spark):
+    """Clean tables over a built cache: one shuffle and one isEmpty, not a
+    job pair per check."""
+    docs = spark.createDataFrame(generate_shift_docs(28), SHIFT_DOC_SCHEMA).persist()
+    try:
+        docs.count()
+        tables = flatten.flatten_all(docs)
+        assert _jobs(spark, lambda: quality.validate_tables(tables)) <= 3
+    finally:
+        docs.unpersist()
+
+
+def test_warm_run_etl_compiles_no_code(spark, tmp_path):
+    """A rerun finds every generated class in the codegen cache (Spark's
+    default 100-entry cache recompiled ~90 classes per run)."""
+    metric = (
+        spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    pages = paginate(generate_shift_docs(28), 7)
+    run_etl(spark, pages=pages, output_dir=tmp_path / "a", anchor_date="2023-02-01")
+    before = metric.getCount()
+    run_etl(spark, pages=pages, output_dir=tmp_path / "b", anchor_date="2023-02-01")
+    assert metric.getCount() - before == 0
+
+
+def test_run_etl_counts_cover_all_batches(spark, tmp_path):
+    out = tmp_path / "out"
+    pages = paginate(GOLDEN_DOCS, limit=1)
+    run_etl(spark, pages=pages, output_dir=out, anchor_date="2024-01-15")
+    counts = run_etl(spark, pages=pages, output_dir=out, anchor_date="2024-01-15")
+    w = StagedWriter(out)
+    assert counts == {t: w.read_table(spark, t).count() for t in OUTPUT_TABLES}
+    assert counts["shifts"] == 4 and counts["kpis"] == 12
+
+
+def test_read_table_schema_matches_inference(spark, tmp_path):
+    out = tmp_path / "out"
+    run_etl(spark, pages=paginate(GOLDEN_DOCS, 5), output_dir=out, anchor_date="2024-01-15")
+    w = StagedWriter(out)
+    for t in OUTPUT_TABLES:
+        given = w.read_table(spark, t, schema=TABLE_SCHEMAS[t])
+        assert given.dtypes == w.read_table(spark, t).dtypes, t
+
+
+def test_read_table_infers_schema_outside_table_schemas(spark, tmp_path):
+    w = StagedWriter(tmp_path / "out")
+    w.write_batch({"curated": spark.createDataFrame([(1, "a")], "doc_id long, text string")})
+    assert "curated" not in TABLE_SCHEMAS
+    assert w.read_table(spark, "curated").dtypes == [("doc_id", "bigint"), ("text", "string")]
 
 
 def test_clear_data(spark, tmp_path):
