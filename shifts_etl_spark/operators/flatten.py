@@ -10,9 +10,10 @@ Reference behavior being re-expressed (semantics, not code):
     reference etl/app/shift_data_processor.py:72-87.
   - T4/T6/T7 child projections: reference :89-115.
   - T5 epoch-ms parse with null guard: reference :117-121.
-  - T9 one pass fans out to 4 tables: reference :62-70 — here the input
-    DataFrame should be persisted by the caller so the 4 derived plans share
-    one scan (see pipeline.run_etl).
+  - T9 one pass fans out to 4 tables: reference :62-70 — here four lazy
+    plans over the same doc frame; pipeline.run_etl's docs are a JVM-held
+    local relation (sources/pages.py), so each plan re-scans it without a
+    cache.
 
 Scale note (100 TB): each flatten is a narrow transformation — no shuffle at
 all. Explodes multiply rows ~1-3× within a partition; Catalyst prunes the
@@ -98,10 +99,10 @@ def awards_table(docs: DataFrame) -> DataFrame:
 
 
 def flatten_all(docs: DataFrame) -> dict[str, DataFrame]:
-    """T9 — fan one doc DataFrame out to the 4 normalized tables.
-
-    Caller should ``docs.persist()`` first so the four child plans share one
-    materialization instead of four source scans.
+    """T9 — fan one doc DataFrame out to the 4 normalized tables: four lazy
+    narrow plans, each scanning ``docs`` for the columns it needs. Over a
+    local relation (``docs_from_pages``) a scan is a cheap JVM-side read;
+    over a costly source, persist ``docs`` first.
     """
     return {
         "shifts": shifts_table(docs),

@@ -2,69 +2,39 @@
 (reference etl/app/shift_data_processor.py:225-279; golden values
 etl/tests/test_shift_data_processor.py:352-392, see FIXTURES.md §3).
 
-Each KPI is a one-row aggregate DataFrame; ``compute_kpis`` unions them into
-the kpis frame (kpi_name, kpi_date, kpi_value decimal(8,2)) — the Spark
-analog of the reference's 6-way VALUES of scalar subqueries (Q1/Q3).
+``compute_kpis`` builds the kpis frame (kpi_name, kpi_date, kpi_value
+decimal(8,2)) — the Spark analog of the reference's 6-way VALUES of scalar
+subqueries (Q1/Q3) — as ONE lazy query: building it runs no Spark job.
 
 ``anchor_date`` parameterizes the reference's CURRENT_DATE so results are
 deterministic in tests (SURVEY.md §7.4 pitfall #4); the live pipeline passes
 None → current_date().
 
 Scale notes (100 TB):
-  - The five plain aggregates are map-side partial aggregations — one shuffle
-    of 1 row per partition each. Trivially scalable.
+  - The five scalar KPIs are one conditional aggregate over a tagged union
+    of breaks rows, shifts rows and the 14-day allowances ⋈ shifts rows:
+    one map-side partial aggregation, one shuffle of 1 row per partition,
+    each input scanned once.
   - J1 (allowances ⋈ shifts) broadcasts the smaller side; the date filter is
     pushed below the join by Catalyst.
   - W1 (global-order running sum for gaps-and-islands) preserves the
-    reference's RANGE tie semantics WITHOUT its single-partition hazard:
-    rows collapse to one per shift_date first, then the two-pass
-    range-partitioned prefix sum (operators/windows.py) numbers the
-    islands — only the per-partition offsets frame is globally ordered.
+    reference's RANGE tie semantics WITHOUT its fact-table single-partition
+    hazard: rows collapse to one per shift_date first, and only that
+    per-date frame — one row per distinct day, ~3.6k for ten years — meets
+    the globally ordered window.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 
 def _date_anchor(anchor_date: dt.date | str | None):
     if anchor_date is None:
         return F.current_date()
     return F.to_date(F.lit(str(anchor_date)))
-
-
-def mean_break_length_in_minutes(breaks: DataFrame) -> DataFrame:
-    """A1 — AVG(break_finish - break_start) in minutes, 0 on empty.
-    EXTRACT(EPOCH FROM AVG(interval))/60 == AVG(epoch-seconds diff)/60."""
-    secs = F.unix_timestamp("break_finish") - F.unix_timestamp("break_start")
-    return breaks.agg(
-        F.coalesce(F.avg(secs) / 60.0, F.lit(0.0)).alias("kpi_value")
-    )
-
-
-def mean_shift_cost(shifts: DataFrame) -> DataFrame:
-    """A2 — AVG(shift_cost), 0 on empty."""
-    return shifts.agg(
-        F.coalesce(F.avg("shift_cost"), F.lit(0.0)).alias("kpi_value")
-    )
-
-
-def max_allowance_cost_14d(
-    allowances: DataFrame, shifts: DataFrame, anchor_date=None
-) -> DataFrame:
-    """A3+J1+F2 — MAX(allowance_cost) over allowances ⋈ shifts restricted to
-    the trailing 14 days. Broadcast the shifts side (FK→PK, dim-sized)."""
-    cutoff = F.date_sub(_date_anchor(anchor_date), 14)
-    joined = allowances.join(
-        F.broadcast(shifts.select("shift_id", "shift_date")), "shift_id", "inner"
-    ).where(F.col("shift_date") >= cutoff)
-    return joined.agg(
-        F.coalesce(F.max("allowance_cost").cast("double"), F.lit(0.0)).alias(
-            "kpi_value"
-        )
-    )
 
 
 def break_free_islands(shifts: DataFrame, breaks: DataFrame) -> DataFrame:
@@ -79,14 +49,13 @@ def break_free_islands(shifts: DataFrame, breaks: DataFrame) -> DataFrame:
 
     Scale shape: the RANGE frame means tie days share one running value,
     so collapse to ONE row per shift_date first (map-side-combinable
-    aggregate carrying (date, flag_sum, n_rows)), then run the two-pass
-    range-partitioned prefix sum over the distinct dates — rows of the
-    fact table never pass through a single-partition window, and the
-    only ordered structure is the per-date frame (days, not shifts).
-    Distinct dates being unique, ROWS over them == the RANGE-tie
-    semantics over the raw rows."""
-    from .windows import scalable_running_sum
-
+    aggregate carrying (date, flag_sum, n_rows)), then number the islands
+    with a ROWS running sum over the distinct dates. Distinct dates being
+    unique, ROWS over them == the RANGE-tie semantics over the raw rows.
+    That window has no partition key, so it runs in one partition, but no
+    fact-table row enters it: it sees one row per day, a bound that holds
+    at any data size (hundreds a year). It is also lazy — no sampling job
+    at plan build, unlike a range-partitioned prefix sum."""
     j = shifts.join(breaks, "shift_id", "left").select(
         "shift_date", F.col("break_id")
     )
@@ -94,9 +63,10 @@ def break_free_islands(shifts: DataFrame, breaks: DataFrame) -> DataFrame:
     per_date = j.groupBy("shift_date").agg(
         F.sum(flag).alias("_f"), F.count(F.lit(1)).alias("_n")
     )
-    with_grp = scalable_running_sum(
-        per_date, "shift_date", "_f", out_col="grp"
+    running = Window.orderBy("shift_date").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
+    with_grp = per_date.withColumn("grp", F.sum("_f").over(running))
     return with_grp.groupBy("grp").agg(
         (
             F.sum("_n")
@@ -108,30 +78,11 @@ def break_free_islands(shifts: DataFrame, breaks: DataFrame) -> DataFrame:
 def max_break_free_shift_period_in_days(
     shifts: DataFrame, breaks: DataFrame
 ) -> DataFrame:
-    """Q2 top-1 over the islands — ORDER BY cnt DESC LIMIT 1 (Spark executes
-    TakeOrderedAndProject: top-k without a full sort)."""
-    top = (
-        break_free_islands(shifts, breaks)
-        .orderBy(F.col("cnt").desc())
-        .limit(1)
-        .select(F.col("cnt").cast("double").alias("kpi_value"))
-    )
-    # empty shifts ⇒ no islands row; reference would insert NULL — normalize 0
-    return top.agg(F.coalesce(F.max("kpi_value"), F.lit(0.0)).alias("kpi_value"))
-
-
-def min_shift_length_in_hours(shifts: DataFrame) -> DataFrame:
-    """A4 — MIN(epoch(shift_finish - shift_start)/3600), 0 on empty."""
-    hours = (
-        F.unix_timestamp("shift_finish") - F.unix_timestamp("shift_start")
-    ) / 3600.0
-    return shifts.agg(F.coalesce(F.min(hours), F.lit(0.0)).alias("kpi_value"))
-
-
-def total_number_of_paid_breaks(breaks: DataFrame) -> DataFrame:
-    """A5+F1 — COUNT(*) WHERE is_paid."""
-    return breaks.where(F.col("is_paid")).agg(
-        F.count(F.lit(1)).cast("double").alias("kpi_value")
+    """Q2 top-1 over the islands (ORDER BY cnt DESC LIMIT 1) as a one-row
+    MAX; empty shifts ⇒ no islands row, where the reference would insert
+    NULL — normalized to 0."""
+    return break_free_islands(shifts, breaks).agg(
+        F.coalesce(F.max("cnt").cast("double"), F.lit(0.0)).alias("kpi_value")
     )
 
 
@@ -142,33 +93,70 @@ def compute_kpis(
     allowances: DataFrame,
     anchor_date: dt.date | str | None = None,
 ) -> DataFrame:
-    """Build the 6-row kpis DataFrame (K3/Q1/Q3).
+    """Build the 6-row kpis DataFrame (K3/Q1/Q3) without running a job.
 
-    Callers should persist shifts/breaks first — Catalyst does not share
-    scans across the six sub-aggregates otherwise (SURVEY.md §4).
+    The five scalar KPIs read a union of three inputs, each tagged by the
+    one measure column it fills (NULL elsewhere, and every aggregate below
+    skips NULLs): breaks rows, shifts rows, and the allowance costs of the
+    trailing 14 days (A3+J1+F2, shifts broadcast — FK→PK, dim-sized). One
+    conditional aggregate computes all five, each with its reference
+    expression and type (``shift_cost`` averages as a decimal), and
+    ``stack`` unpivots them to rows; the islands KPI is the sixth row.
     """
-    parts = {
-        "mean_break_length_in_minutes": mean_break_length_in_minutes(breaks),
-        "mean_shift_cost": mean_shift_cost(shifts),
-        "max_allowance_cost_14d": max_allowance_cost_14d(
-            allowances, shifts, anchor_date
-        ),
-        "max_break_free_shift_period_in_days": max_break_free_shift_period_in_days(
-            shifts, breaks
-        ),
-        "min_shift_length_in_hours": min_shift_length_in_hours(shifts),
-        "total_number_of_paid_breaks": total_number_of_paid_breaks(breaks),
-    }
-    frames = []
-    for name, df in parts.items():
-        frames.append(
-            df.select(
-                F.lit(name).alias("kpi_name"),
-                _date_anchor(anchor_date).alias("kpi_date"),
-                F.col("kpi_value").cast("double").cast("decimal(8,2)").alias("kpi_value"),
-            )
+    anchor = _date_anchor(anchor_date)
+    recent = allowances.join(
+        F.broadcast(shifts.select("shift_id", "shift_date")), "shift_id", "inner"
+    ).where(F.col("shift_date") >= F.date_sub(anchor, 14))
+    tagged = (
+        breaks.select(
+            (F.unix_timestamp("break_finish") - F.unix_timestamp("break_start")).alias(
+                "_break_secs"
+            ),
+            F.col("is_paid").alias("_paid"),
         )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+        .unionByName(
+            shifts.select(
+                F.col("shift_cost").alias("_shift_cost"),
+                (
+                    (F.unix_timestamp("shift_finish") - F.unix_timestamp("shift_start"))
+                    / 3600.0
+                ).alias("_shift_hours"),
+            ),
+            allowMissingColumns=True,
+        )
+        .unionByName(
+            recent.select(F.col("allowance_cost").alias("_allowance_cost")),
+            allowMissingColumns=True,
+        )
+    )
+    scalars = {
+        # A1 — AVG(break_finish - break_start) in minutes: EXTRACT(EPOCH
+        # FROM AVG(interval))/60 == AVG(epoch-seconds diff)/60
+        "mean_break_length_in_minutes": F.coalesce(
+            F.avg("_break_secs") / 60.0, F.lit(0.0)
+        ),
+        # A2
+        "mean_shift_cost": F.coalesce(F.avg("_shift_cost"), F.lit(0.0)),
+        # A3+J1+F2
+        "max_allowance_cost_14d": F.coalesce(
+            F.max("_allowance_cost").cast("double"), F.lit(0.0)
+        ),
+        # A4 — MIN(epoch(shift_finish - shift_start)/3600)
+        "min_shift_length_in_hours": F.coalesce(
+            F.min("_shift_hours"), F.lit(0.0)
+        ),
+        # A5+F1 — COUNT(*) WHERE is_paid
+        "total_number_of_paid_breaks": F.count(F.when(F.col("_paid"), F.lit(1))),
+    }
+    stacked = ", ".join(f"'{name}', `{name}`" for name in scalars)
+    values = tagged.agg(
+        *(e.cast("double").alias(name) for name, e in scalars.items())
+    ).selectExpr(f"stack({len(scalars)}, {stacked}) AS (kpi_name, kpi_value)")
+    islands = max_break_free_shift_period_in_days(shifts, breaks).select(
+        F.lit("max_break_free_shift_period_in_days").alias("kpi_name"), "kpi_value"
+    )
+    return values.unionByName(islands).select(
+        "kpi_name",
+        anchor.alias("kpi_date"),
+        F.col("kpi_value").cast("decimal(8,2)").alias("kpi_value"),
+    )

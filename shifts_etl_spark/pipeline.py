@@ -4,9 +4,10 @@ etl/app/main.py:31-67, SURVEY.md §3).
 
 `run_etl` = ingest pages → flatten to 4 tables → integrity-validate →
 atomically persist → compute + persist the 6 KPIs. One lazy logical plan per
-table; the nested doc frame is persisted so the 4 children and 6 KPIs share
-a single materialization (the reference's "one scan per table" strategy,
-SURVEY.md §4).
+table and no cache: the batch is a JVM-held local relation
+(sources/pages.py), so the checks and the writes re-scan it cheaply, and
+the KPIs are one lazy query over the tables just written. No Spark job runs
+before the validation's own.
 """
 
 from __future__ import annotations
@@ -48,53 +49,42 @@ def run_etl(
         pages = pages_src.iter_http_pages(api_url, fetch=fetch)
 
     docs = pages_src.docs_from_pages(spark, pages)
-    # Keep this persist even though the source is one local collection:
-    # without it every flatten, check, write and count re-runs the
-    # Python-row -> JVM conversion, and /run-etl CPU time roughly doubled
-    # (etl_http run_cpu_s ~8 s -> 17-18 s, 4 cores).
-    docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # Build the cache with one job before validating: the folded check
-        # scans docs ten times in one union, and against a not-yet-built
-        # cache AQE launches one materialization job per scan (10 jobs,
-        # 40 tasks on 4 cores).
-        docs.count()
-        tables = flatten.flatten_all(docs)
-        quality.validate_tables(tables)
+    tables = flatten.flatten_all(docs)
+    quality.validate_tables(tables)
 
-        writer = StagedWriter(output_dir)
-        batch = writer.write_batch(tables)
+    writer = StagedWriter(output_dir)
+    batch = writer.write_batch(tables)
 
-        # Read back with the schemas just written: inference would cost a
-        # footer-reading job per read.
-        schemas = {name: df.schema for name, df in tables.items()}
-        shifts = writer.read_table(spark, "shifts", schema=schemas["shifts"])
-        breaks = writer.read_table(spark, "breaks", schema=schemas["breaks"])
-        allowances = writer.read_table(spark, "allowances", schema=schemas["allowances"])
-        kpis = kpi.compute_kpis(spark, shifts, breaks, allowances, anchor_date)
-        writer.write_batch({"kpis": kpis}, batch_id=f"{batch}-kpis")
-        schemas["kpis"] = kpis.schema
+    # Read back with the schemas just written: inference would cost a
+    # footer-reading job per read.
+    schemas = {name: df.schema for name, df in tables.items()}
+    shifts = writer.read_table(spark, "shifts", schema=schemas["shifts"])
+    breaks = writer.read_table(spark, "breaks", schema=schemas["breaks"])
+    allowances = writer.read_table(spark, "allowances", schema=schemas["allowances"])
+    kpis = kpi.compute_kpis(spark, shifts, breaks, allowances, anchor_date)
+    writer.write_batch({"kpis": kpis}, batch_id=f"{batch}-kpis")
+    schemas["kpis"] = kpis.schema
 
-        # One aggregate over every committed batch of all five tables,
-        # instead of a count job pair per table.
-        rows = [
-            writer.read_table(spark, name, schema=schemas[name]).select(
-                F.lit(name).alias("table")
-            )
-            for name in OUTPUT_TABLES
-        ]
-        union = reduce(DataFrame.unionByName, rows)
-        counts = dict.fromkeys(OUTPUT_TABLES, 0)
-        for r in union.groupBy("table").count().collect():
-            counts[r["table"]] = r["count"]
-        return counts
-    finally:
-        docs.unpersist()
+    # One aggregate over every committed batch of all five tables,
+    # instead of a count job pair per table.
+    rows = [
+        writer.read_table(spark, name, schema=schemas[name]).select(
+            F.lit(name).alias("table")
+        )
+        for name in OUTPUT_TABLES
+    ]
+    union = reduce(DataFrame.unionByName, rows)
+    counts = dict.fromkeys(OUTPUT_TABLES, 0)
+    for r in union.groupBy("table").count().collect():
+        counts[r["table"]] = r["count"]
+    return counts
 
 
 def clear_data(output_dir: str | Path) -> None:
-    """E2 — wipe all five outputs together (the FK-cascade analog)."""
-    clear_outputs(output_dir, OUTPUT_TABLES + ["_staging"])
+    """E2 — wipe all five outputs together (the FK-cascade analog), with
+    the staging area and the commit log: a log that outlived its tables
+    would make a later batch reusing a committed id a silent replay."""
+    clear_outputs(output_dir, OUTPUT_TABLES + ["_staging", "_commits.log"])
 
 
 def prepare_training_data(

@@ -3,15 +3,24 @@
 The reference pulls pages of ≤30 nested shift docs over HTTP, following
 ``links.next`` until absent (reference etl/app/shift_data_processor.py:32-43,
 146-152, 185-215). Here the page loop stays driver-side (it is control flow,
-not data flow); the docs of every page in a batch become ONE local relation
-with the explicit ingest schema — no JSON inference ever (SURVEY.md §1.1).
+not data flow); the docs of every page in a batch become ONE Arrow-built
+local relation with the explicit ingest schema — no JSON inference ever
+(SURVEY.md §1.1).
 
-One relation, not one per page: ``createDataFrame`` over local rows
-parallelizes them into defaultParallelism slices, so a union of per-page
-frames would have parallelism × pages partitions whatever the row count, and
-every downstream stage, integrity check and parquet part file would pay
-per-task cost for each. The batch's partition count must not grow with its
-page count. The rows are held on the driver either way.
+One relation, not one per page: a union of per-page frames would have
+parallelism × pages partitions whatever the row count, and every downstream
+stage, integrity check and parquet part file would pay per-task cost for
+each. The batch's partition count must not grow with its page count.
+
+Arrow, not Python rows: every doc is first checked by the same type
+verifier ``createDataFrame`` runs on Python rows (a NULL ``id`` or an int
+where the schema has a double raises the same error), then the docs become
+one Arrow table. Below ``spark.sql.execution.arrow.localRelationThreshold``
+(48 MB) Spark plans it as a ``LocalRelation`` held in the JVM, so the
+flatten, the checks, the writes and the KPIs re-scan it without repeating
+any Python-side conversion, and the batch needs no cache. Above the
+threshold it becomes an RDD of Arrow batches, decoded in the JVM on each
+scan.
 
 For big ingests the right shape is unchanged: the driver only ever touches
 page *URLs*; page *bodies* can be fetched executor-side by mapping a URL list
@@ -25,9 +34,15 @@ import json
 from collections.abc import Callable, Iterable, Iterator
 from urllib.parse import urljoin, urlparse
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
 
 from ..schemas import SHIFT_DOC_SCHEMA
+
+_verify_doc = _make_type_verifier(SHIFT_DOC_SCHEMA)
+_ARROW_DOC_SCHEMA = to_arrow_schema(SHIFT_DOC_SCHEMA)
 
 
 def base_url(url: str) -> str:
@@ -70,11 +85,16 @@ def iter_http_pages(
 def docs_from_pages(spark: SparkSession, pages: Iterable[dict]) -> DataFrame:
     """S1 — all page bodies of a batch → one DataFrame of nested shift docs
     (explicit schema). ``pages`` is drained once, page by page (an
-    ``iter_http_pages`` generator fetches as it goes); the docs form a single
-    local relation (one plan leaf), so the batch has defaultParallelism
-    partitions, never a multiple of its page count."""
+    ``iter_http_pages`` generator fetches as it goes); each doc is checked
+    against the schema, then all docs form a single Arrow-built local
+    relation (one plan leaf, a ``LocalRelation`` below 48 MB), so the batch
+    has at most defaultParallelism partitions, never a multiple of its page
+    count."""
     docs = [d for p in pages for d in p["results"]]
-    return spark.createDataFrame(docs, SHIFT_DOC_SCHEMA)
+    for d in docs:
+        _verify_doc(d)
+    table = pa.Table.from_pylist(docs, schema=_ARROW_DOC_SCHEMA)
+    return spark.createDataFrame(table, SHIFT_DOC_SCHEMA)
 
 
 def distributed_fetch_df(

@@ -1,3 +1,5 @@
+import uuid
+
 import pytest
 
 from shifts_etl_spark.session import get_spark
@@ -7,6 +9,24 @@ from shifts_etl_spark.session import get_spark
 def spark():
     s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn`` under a fresh job group and returns
+    how many Spark jobs it submitted (``statusTracker``)."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup(None, None)
+
+    return count
 
 
 # Tests measured >= ~10 s in the full-suite profile (r11; 29m17s total,

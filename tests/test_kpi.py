@@ -1,11 +1,18 @@
-"""Six golden KPI values (reference etl/tests/test_shift_data_processor.py:352-392)."""
+"""Six golden KPI values (reference etl/tests/test_shift_data_processor.py:352-392),
+and the six KPIs against the reference KPI SQL run on DuckDB."""
 
+import copy
+import datetime as dt
 from decimal import Decimal
 
+import duckdb
 import pytest
 
 from shifts_etl_spark.operators import flatten, kpi
+from shifts_etl_spark.pipeline import run_etl
 from shifts_etl_spark.schemas import SHIFT_DOC_SCHEMA
+from shifts_etl_spark.sources.generator import generate_shift_docs, paginate
+from shifts_etl_spark.sources.pages import docs_from_pages
 
 from .golden import ANCHOR_DATE, GOLDEN_DOCS, GOLDEN_KPIS
 
@@ -102,3 +109,127 @@ def test_rounding_tie_divergence_is_pinned(spark):
         F.col("x").cast("decimal(8,2)").alias("d")
     ).orderBy("x").collect()
     assert [str(r["d"]) for r in dec] == ["0.13", "0.38", "2.50"]
+
+
+# The reference's KPI statement (reference etl/app/shift_data_processor.py:
+# 225-279) in DuckDB's dialect. Timestamps hold whole seconds, as the
+# flatten layer parses them; EXTRACT(EPOCH FROM AVG(interval)) is written
+# as the AVG of epoch differences.
+REFERENCE_KPI_SQL = """
+WITH islands AS (
+  SELECT grp, COUNT(*) - CASE WHEN grp = 0 THEN 0 ELSE 1 END AS cnt
+  FROM (
+    SELECT SUM(CASE WHEN b.break_id IS NULL THEN 0 ELSE 1 END)
+             OVER (ORDER BY s.shift_date) AS grp
+    FROM shifts s LEFT JOIN breaks b ON b.shift_id = s.shift_id
+  ) GROUP BY grp
+)
+SELECT * FROM (VALUES
+  ('mean_break_length_in_minutes',
+   (SELECT COALESCE(AVG(epoch(break_finish) - epoch(break_start)) / 60, 0) FROM breaks)),
+  ('mean_shift_cost', (SELECT COALESCE(AVG(shift_cost), 0) FROM shifts)),
+  ('max_allowance_cost_14d',
+   (SELECT COALESCE(MAX(a.allowance_cost), 0)
+    FROM allowances a JOIN shifts s ON a.shift_id = s.shift_id
+    WHERE s.shift_date >= $anchor::DATE - INTERVAL 14 DAY)),
+  ('max_break_free_shift_period_in_days',
+   COALESCE((SELECT cnt FROM islands ORDER BY cnt DESC LIMIT 1), 0)),
+  ('min_shift_length_in_hours',
+   (SELECT COALESCE(MIN(epoch(shift_finish) - epoch(shift_start)) / 3600, 0) FROM shifts)),
+  ('total_number_of_paid_breaks', (SELECT COUNT(*) FROM breaks WHERE is_paid))
+) AS k(kpi_name, kpi_value)
+"""
+
+
+def _reference_kpis(docs, anchor) -> dict[str, Decimal]:
+    """The six KPIs by DuckDB over the docs flattened in plain Python."""
+    def ts(ms):
+        return dt.datetime.fromtimestamp(ms // 1000, dt.timezone.utc).replace(tzinfo=None)
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE shifts (shift_id VARCHAR, shift_date DATE, shift_start TIMESTAMP,"
+        " shift_finish TIMESTAMP, shift_cost DECIMAL(13, 4))"
+    )
+    con.execute(
+        "CREATE TABLE breaks (break_id VARCHAR, shift_id VARCHAR, break_start TIMESTAMP,"
+        " break_finish TIMESTAMP, is_paid BOOLEAN)"
+    )
+    con.execute(
+        "CREATE TABLE allowances (allowance_id VARCHAR, shift_id VARCHAR,"
+        " allowance_cost DECIMAL(13, 4))"
+    )
+    for d in docs:
+        cost = sum(a["cost"] for a in d["allowances"] + d["award_interpretations"])
+        con.execute(
+            "INSERT INTO shifts VALUES (?, ?, ?, ?, ?)",
+            [d["id"], d["date"], ts(d["start"]), ts(d["finish"]), round(cost, 4)],
+        )
+        for b in d["breaks"]:
+            con.execute(
+                "INSERT INTO breaks VALUES (?, ?, ?, ?, ?)",
+                [b["id"], d["id"], ts(b["start"]), ts(b["finish"]), b["paid"]],
+            )
+        for a in d["allowances"]:
+            con.execute("INSERT INTO allowances VALUES (?, ?, ?)", [a["id"], d["id"], a["cost"]])
+    rows = con.execute(
+        f"SELECT kpi_name, CAST(kpi_value AS DECIMAL(8, 2)) FROM ({REFERENCE_KPI_SQL})",
+        {"anchor": str(anchor)},
+    ).fetchall()
+    return dict(rows)
+
+
+def _spark_kpis(spark, docs, anchor) -> dict[str, Decimal]:
+    tables = flatten.flatten_all(docs_from_pages(spark, [{"results": docs}]))
+    rows = kpi.compute_kpis(
+        spark, tables["shifts"], tables["breaks"], tables["allowances"], anchor
+    ).collect()
+    assert {r["kpi_date"] for r in rows} == {dt.date.fromisoformat(anchor)}
+    return {r["kpi_name"]: r["kpi_value"] for r in rows}
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+@pytest.mark.parametrize("anchor", ["2023-02-10", "2023-03-31"])
+def test_kpis_match_reference_sql(spark, seed, anchor):
+    docs = generate_shift_docs(days=60, seed=seed)
+    assert _spark_kpis(spark, docs, anchor) == _reference_kpis(docs, anchor)
+
+
+def test_kpis_without_breaks(spark):
+    docs = copy.deepcopy(generate_shift_docs(days=20, seed=4))
+    for d in docs:
+        d["breaks"] = []
+    got = _spark_kpis(spark, docs, "2023-01-20")
+    assert got == _reference_kpis(docs, "2023-01-20")
+    assert got["max_break_free_shift_period_in_days"] == 20
+    assert got["total_number_of_paid_breaks"] == 0
+
+
+def test_kpis_without_recent_allowance(spark):
+    docs = generate_shift_docs(days=20, seed=5)
+    got = _spark_kpis(spark, docs, "2024-06-01")
+    assert got == _reference_kpis(docs, "2024-06-01")
+    assert got["max_allowance_cost_14d"] == 0
+
+
+def test_kpis_of_empty_tables_are_zero(spark):
+    got = _spark_kpis(spark, [], ANCHOR_DATE)
+    assert got == _reference_kpis([], ANCHOR_DATE)
+    assert got == dict.fromkeys(GOLDEN_KPIS, Decimal("0.00"))
+
+
+def test_compute_kpis_runs_no_job(spark, tables, count_jobs):
+    """Building the KPI frame is lazy: no sampling or totals job."""
+    assert count_jobs(
+        lambda: kpi.compute_kpis(
+            spark, tables["shifts"], tables["breaks"], tables["allowances"], ANCHOR_DATE
+        )
+    ) == 0
+
+
+def test_run_etl_28_days_in_14_jobs(spark, tmp_path, count_jobs):
+    pages = paginate(generate_shift_docs(days=28), 7)
+    n = count_jobs(
+        lambda: run_etl(spark, pages=pages, output_dir=tmp_path / "out", anchor_date="2023-01-28")
+    )
+    assert n <= 14

@@ -5,6 +5,7 @@ atomicity, clear — the engine analogs of the reference's test suite
 import copy
 
 import pytest
+from pyspark.errors import PySparkTypeError, PySparkValueError
 from pyspark.sql import functions as F
 
 from shifts_etl_spark.operators import flatten, quality
@@ -39,6 +40,49 @@ def test_docs_from_pages_is_one_relation(spark):
     assert df._jdf.queryExecution().analyzed().collectLeaves().size() == 1
     assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
     assert df.count() == 360
+
+
+def test_docs_from_pages_is_a_local_relation(spark):
+    """The batch is held in the JVM, so re-scans need no cache."""
+    df = docs_from_pages(spark, paginate(generate_shift_docs(28), 7))
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    assert leaves.size() == 1
+    assert leaves.apply(0).nodeName() == "LocalRelation"
+
+
+def _one_bad_doc(mutate):
+    docs = copy.deepcopy(GOLDEN_DOCS)
+    mutate(docs[1])
+    return paginate(docs, limit=1)
+
+
+def test_docs_from_pages_rejects_null_id(spark):
+    pages = _one_bad_doc(lambda d: d.update(id=None))
+    with pytest.raises(PySparkValueError) as e:
+        docs_from_pages(spark, pages)
+    assert str(e.value) == (
+        "[FIELD_NOT_NULLABLE_WITH_NAME] field id: This field is not nullable, "
+        "but got None."
+    )
+
+
+def test_docs_from_pages_rejects_int_for_double(spark):
+    pages = _one_bad_doc(lambda d: d["award_interpretations"][0].update(cost=3))
+    with pytest.raises(PySparkTypeError) as e:
+        docs_from_pages(spark, pages)
+    assert str(e.value) == (
+        "[FIELD_DATA_TYPE_UNACCEPTABLE_WITH_NAME] field cost in element in array "
+        "field award_interpretations: DoubleType() can not accept object 3 in "
+        "type <class 'int'>."
+    )
+
+
+def test_run_etl_leaves_no_cache(spark, tmp_path):
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    run_etl(spark, pages=paginate(GOLDEN_DOCS, 1), output_dir=tmp_path / "out",
+            anchor_date="2024-01-15")
+    assert persisted().size() == before
 
 
 def test_docs_from_pages_empty_feed(spark):
@@ -150,26 +194,12 @@ def test_validate_tables_null_child_key_is_orphan(golden_tables):
         quality.validate_tables({**tables, "breaks": breaks})
 
 
-def _jobs(spark, fn) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup("count-jobs", "count-jobs")
-    try:
-        fn()
-        return len(sc.statusTracker().getJobIdsForGroup("count-jobs"))
-    finally:
-        sc.setJobGroup(None, None)
-
-
-def test_validate_tables_clean_in_few_jobs(spark):
-    """Clean tables over a built cache: one shuffle and one isEmpty, not a
-    job pair per check."""
-    docs = spark.createDataFrame(generate_shift_docs(28), SHIFT_DOC_SCHEMA).persist()
-    try:
-        docs.count()
-        tables = flatten.flatten_all(docs)
-        assert _jobs(spark, lambda: quality.validate_tables(tables)) <= 3
-    finally:
-        docs.unpersist()
+def test_validate_tables_clean_in_few_jobs(spark, count_jobs):
+    """Clean tables over a batch as run_etl ingests it: one shuffle and one
+    isEmpty, not a job pair per check."""
+    docs = docs_from_pages(spark, paginate(generate_shift_docs(28), 7))
+    tables = flatten.flatten_all(docs)
+    assert count_jobs(lambda: quality.validate_tables(tables)) <= 3
 
 
 def test_warm_run_etl_compiles_no_code(spark, tmp_path):
@@ -218,6 +248,21 @@ def test_clear_data(spark, tmp_path):
     clear_data(out)
     w = StagedWriter(out)
     assert not any(w.table_exists(t) for t in ["shifts", "breaks", "kpis"])
+
+
+def test_clear_data_forgets_commits(spark, tmp_path):
+    """A batch id committed before /clear-data (e.g. a deterministic
+    streaming epoch id) is a new batch after it, not a silent replay."""
+    out = tmp_path / "out"
+    w = StagedWriter(out)
+    rows = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")
+    w.write_batch({"shifts": rows}, batch_id="epoch-0")
+    clear_data(out)
+    assert w.commits() == []
+    with pytest.raises(ValueError, match="unknown commit 'epoch-0'"):
+        w.read_table(spark, "shifts", as_of="epoch-0")
+    w.write_batch({"shifts": rows}, batch_id="epoch-0")
+    assert w.read_table(spark, "shifts").count() == 2
 
 
 def test_run_etl_part_files_follow_rows_not_pages(spark, tmp_path):
