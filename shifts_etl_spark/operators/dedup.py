@@ -2623,61 +2623,3 @@ def lsh_parameter_plan(
             ),
         ).alias("fp_capture_rate"),
     ).orderBy("bands")
-
-
-def candidate_capture_recapture(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Capture-recapture estimate of candidate-generation completeness
-    (Chapman estimator): treat the rare-shingle blocker and the banded
-    MinHash-LSH as two independent 'captures' of the near-dup pair
-    universe; N_hat = (nA+1)(nB+1)/(nAB+1) - 1 estimates the pairs
-    EITHER method could surface, and each method's coverage = n/N_hat
-    — the recall estimate you can compute WITHOUT ground truth (the
-    two captures correlate through similarity, so N_hat leans low;
-    the docstring caveat is the published one).
-
-    Scale shape: both generators are bounded (df-blocking, banded
-    buckets with the hot cap); the overlap is one id-pair equi-join;
-    everything folds to three 1-row counts."""
-    a = rare_shingle_pairs(docs, text_col, id_col, shingle_n)
-    b = minhash_lsh_pairs(docs, text_col, id_col, hash_fn="md5").select(
-        "id_a", "id_b"
-    )
-    na = a.agg(F.count(F.lit(1)).cast("long").alias("n_shingle_pairs"))
-    nb = b.agg(F.count(F.lit(1)).cast("long").alias("n_lsh_pairs"))
-    nboth = a.join(b, ["id_a", "id_b"]).agg(
-        F.count(F.lit(1)).cast("long").alias("n_both")
-    )
-    est = (
-        na.crossJoin(F.broadcast(nb))
-        .crossJoin(F.broadcast(nboth))
-        .select(
-            "n_shingle_pairs",
-            "n_lsh_pairs",
-            "n_both",
-            (
-                (F.col("n_shingle_pairs") + 1)
-                * (F.col("n_lsh_pairs") + 1).cast("double")
-                / (F.col("n_both") + 1)
-                - 1
-            ).alias("nhat"),
-        )
-    )
-    return est.select(
-        "n_shingle_pairs",
-        "n_lsh_pairs",
-        "n_both",
-        F.round(F.col("nhat"), 6).alias("chapman_estimate"),
-        F.when(
-            F.col("nhat") > 0,
-            F.round(F.col("n_shingle_pairs") / F.col("nhat"), 6),
-        ).alias("coverage_shingle"),
-        F.when(
-            F.col("nhat") > 0,
-            F.round(F.col("n_lsh_pairs") / F.col("nhat"), 6),
-        ).alias("coverage_lsh"),
-    )

@@ -2013,61 +2013,3 @@ def spearman_quality(
         F.when((vx > 0) & (vy > 0), F.round(cov / F.sqrt(vx * vy), 6))
         .alias("spearman_rho"),
     ).orderBy("source")
-
-
-def filter_parity(
-    docs: DataFrame,
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
-    """Demographic parity audit of the x18 quality filter across
-    languages: per language, keep rate with a Wilson 95% interval
-    (the x156 convention: z = 1.96, z^2 = 3.8416) against the corpus
-    keep rate — a language whose interval excludes the corpus rate is
-    being filtered disparately (usually a stopword-list or
-    length-distribution artifact, not a quality difference). The
-    fairness gate run before shipping a multilingual filter.
-
-    Determinism: keep flags and counts are integer-exact; the Wilson
-    bound is closed form off rationals plus one IEEE sqrt.
-
-    Scale shape: one |langs|-cell aggregate against a broadcast 1-row
-    corpus total."""
-    toks = tokens(F.col(text_col))
-    keep = (
-        (F.size(toks) >= 20)
-        & (digit_ratio(F.col(text_col)) <= 0.2)
-        & (mean_token_len(F.col(text_col)) >= 3.0)
-    )
-    cells = docs.groupBy(F.col(lang_col).alias("lang")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.when(keep, 1).otherwise(0)).cast("long").alias("n_keep"),
-    )
-    tot = cells.agg(
-        F.sum("n_docs").cast("long").alias("nt"),
-        F.sum("n_keep").cast("long").alias("kt"),
-    )
-    n = F.col("n_docs").cast("double")
-    p = F.col("n_keep").cast("double") / n
-    denom = 1 + F.lit(3.8416) / n
-    center = p + F.lit(3.8416) / (2 * n)
-    half = F.lit(1.96) * F.sqrt(
-        (p * (1 - p) + F.lit(3.8416) / (4 * n)) / n
-    )
-    lo = (center - half) / denom
-    hi = (center + half) / denom
-    corpus = F.col("kt") / F.col("nt").cast("double")
-    return (
-        cells.crossJoin(F.broadcast(tot))
-        .select(
-            "lang",
-            "n_docs",
-            "n_keep",
-            F.round(p, 6).alias("keep_rate"),
-            F.round(lo, 6).alias("wilson_lo"),
-            F.round(hi, 6).alias("wilson_hi"),
-            F.round(corpus, 6).alias("corpus_rate"),
-            ((corpus >= lo) & (corpus <= hi)).alias("parity_ok"),
-        )
-        .orderBy("lang")
-    )
