@@ -25,6 +25,16 @@ the pyspark version and the install's jars; no JVM is started to compute it.
   an atomic rename, only if the JVM exited with code 0: a truncated
   archive crashes the JVM that maps it. A process that finds the lock
   taken starts without an archive.
+- A build that publishes nothing (the JVM exited non-zero, was killed by a
+  caller that stopped waiting, or outlived the 120 s wait) writes
+  ``failed`` into ``<key>.lock`` and keeps it, and no process builds for
+  that key again until the file is deleted; a builder that died before
+  its hook ran is retried once. So a build that cannot finish costs one
+  or two slow starts, not every start.
+- The saving needs a cache that outlives the process. A start that finds
+  no archive is slower than one without this scheme: its set-up costs
+  about a quarter more CPU, and its JVM spends 12-16 s at exit writing
+  ~176 MB (README "Start-up archive").
 - CDS cannot dump while a non-empty directory precedes the jars on the
   class path, and spark-submit puts the conf dir there. When the conf dir
   holds only ``*.template`` files (which Spark ignores) or does not exist,
@@ -56,8 +66,11 @@ from pyspark.sql import SparkSession
 
 # first 4 bytes of a JDK dynamic (top-layer) CDS archive, in native order
 _DYNAMIC_ARCHIVE_MAGIC = 0xF00BABA8
-# the builder JVM writes ~176 MB at exit; measured 13-16 s on 4 cores
+# the builder JVM writes ~176 MB at exit: 12-16 s on 2 or 4 idle cores,
+# over 30 s on 2 cores shared with two busy processes
 _DUMP_WAIT_S = 120
+# builds per key: a builder that died without a word gets one retry
+_MAX_BUILDS = 2
 _QUIET = "-Xlog:cds=off,cds+dynamic=off"
 
 
@@ -114,6 +127,9 @@ def get_spark(
         raise
     if build is not None:
         atexit.register(build.publish, spark.sparkContext._gateway.proc)
+        # runs first (atexit is last in, first out): the accumulator server
+        # would print the JVM's exit under it as an error
+        atexit.register(spark.sparkContext.stop)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
@@ -190,13 +206,18 @@ class ArchiveBuild:
 
     @classmethod
     def take(cls, cache: Path, key: str) -> ArchiveBuild | None:
-        """Take ``<key>.lock``, or None while a live process holds it.
+        """Take ``<key>.lock``, or None while a live process holds it or
+        the key's builds have failed.
 
         The lock is an ``flock`` on the file, which the kernel drops when
         its holder dies, so a lock left by a dead process is taken over.
         (A pid test would race between two processes taking over, and a
-        reused pid would hold the lock forever.) The holder's pid is
-        written into the file for whoever looks."""
+        reused pid would hold the lock forever.) The file keeps one line
+        per build: the builder's pid, and ``failed`` after a build that
+        published nothing. A failed build is not retried, and a builder
+        that died before it could say so is retried once: a build that
+        cannot finish would otherwise slow every start. Deleting the file
+        allows a new build."""
         lock = cache / f"{key}.lock"
         fd = os.open(lock, os.O_CREAT | os.O_RDWR, 0o644)
         try:
@@ -204,10 +225,12 @@ class ArchiveBuild:
             # a finishing builder unlinks the file it held: this lock guards nothing
             if os.stat(lock).st_ino != os.fstat(fd).st_ino:
                 raise FileNotFoundError(lock)
+            builds = os.read(fd, 4096).decode(errors="replace").splitlines()
+            if "failed" in builds or len(builds) >= _MAX_BUILDS:
+                raise FileExistsError(lock)
         except OSError:
             os.close(fd)
             return None
-        os.ftruncate(fd, 0)
         os.write(fd, f"{os.getpid()}\n".encode())
         for stale in cache.glob(f"{key}.*.tmp"):  # left by a builder that died
             stale.unlink(missing_ok=True)
@@ -215,25 +238,26 @@ class ArchiveBuild:
 
     def publish(self, jvm: subprocess.Popen) -> None:
         """Let the JVM exit, which writes the archive, and publish it if
-        the JVM exited cleanly; drop archives of other keys. Runs at exit."""
+        the JVM exited cleanly; drop archives of other keys. Otherwise mark
+        the build failed. Runs at exit."""
+        jvm.stdin.close()  # the gateway JVM exits with code 0 on EOF
         try:
-            jvm.stdin.close()  # the gateway JVM exits with code 0 on EOF
-            try:
-                code = jvm.wait(timeout=_DUMP_WAIT_S)
-            except subprocess.TimeoutExpired:
-                jvm.kill()
-                jvm.wait()
-                return
-            if code != 0 or not has_archive_magic(self.tmp):
-                return
-            with open(self.tmp, "rb") as f:
-                os.fsync(f.fileno())
-            os.replace(self.tmp, self.jsa)
-            for old in self.jsa.parent.glob("*.jsa"):
-                if old != self.jsa:
-                    old.unlink(missing_ok=True)
-        finally:
-            self.release()
+            code = jvm.wait(timeout=_DUMP_WAIT_S)
+        except subprocess.TimeoutExpired:
+            jvm.kill()
+            code = jvm.wait()
+        if code != 0 or not has_archive_magic(self.tmp):
+            os.write(self.lock_fd, b"failed\n")
+            self.tmp.unlink(missing_ok=True)
+            os.close(self.lock_fd)
+            return
+        with open(self.tmp, "rb") as f:
+            os.fsync(f.fileno())
+        os.replace(self.tmp, self.jsa)
+        for old in self.jsa.parent.glob("*.jsa"):
+            if old != self.jsa:
+                old.unlink(missing_ok=True)
+        self.release()
 
     def release(self) -> None:
         """Drop the temp file and the lock (unlinked while still held)."""

@@ -65,6 +65,7 @@ SLOW_TESTS = {
     "tests/test_round9_ops.py::test_registry_less_lsh_calls_orphan_bounded",
     "tests/test_round9_ops.py::test_semantic_dedup_band_knob_certified_shape",
     "tests/test_round9_ops.py::test_semantic_dedup_banded_drops_subset_of_exact",
+    "tests/test_session.py::test_archive_round_trip",
     "tests/test_stateful_skew.py::test_stream_stream_join",
     "tests/test_stateful_skew.py::test_streaming_sessionize",
     "tests/test_streaming.py::test_stream_join_left_outer_emits_unmatched",

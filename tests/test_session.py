@@ -2,7 +2,9 @@
 
 The unit tests run no JVM: they build a fake Spark install (``jars/``,
 ``conf/``) and a fake ``java`` under a tmp dir. The round trip starts real
-driver JVMs in subprocesses, with ``XDG_CACHE_HOME`` in a tmp dir.
+driver JVMs in subprocesses, with ``XDG_CACHE_HOME`` in a tmp dir; it
+takes 30-33 s on 2 CPUs, so it is in ``SLOW_TESTS`` (run it with
+``-m slow``).
 """
 
 from __future__ import annotations
@@ -10,6 +12,7 @@ from __future__ import annotations
 import fcntl
 import json
 import os
+import shutil
 import subprocess
 import sys
 from pathlib import Path
@@ -111,20 +114,60 @@ def test_only_a_file_with_the_magic_is_shared(install):
     assert options.split()[0] == f"-XX:SharedArchiveFile={jsa}"
 
 
-def test_lock_of_a_dead_process_is_taken_over(install):
+def _die_building(cache: Path) -> int:
+    """Take ``k.lock`` in a process that starts writing its archive and
+    dies without running its exit hooks; its pid."""
+    r = subprocess.run(
+        [sys.executable, "-c",
+         "import os, sys; from pathlib import Path\n"
+         "from shifts_etl_spark.session import ArchiveBuild\n"
+         f"b = ArchiveBuild.take(Path({str(cache)!r}), 'k')\n"
+         "b.tmp.write_bytes(b'half'); print(os.getpid()); sys.stdout.flush(); os._exit(0)"],
+        env={**os.environ, "PYTHONPATH": str(REPO)}, capture_output=True, text=True, check=True)
+    return int(r.stdout)
+
+
+def test_lock_of_a_dead_builder_is_taken_over_once(install):
     _, _, cache = install
     cache.mkdir(parents=True)
-    dead = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
-                          capture_output=True, text=True, check=True)
-    lock = cache / "k.lock"
-    lock.write_text(dead.stdout)
-    (cache / f"k.{dead.stdout.strip()}.tmp").write_bytes(MAGIC)  # its half-built archive
-    build = ArchiveBuild.take(cache, "k")
-    assert build is not None
-    assert lock.read_text() == f"{os.getpid()}\n"
-    assert [p.name for p in cache.glob("k.*.tmp")] == []
+    first = _die_building(cache)
+    assert [p.name for p in cache.glob("k.*.tmp")] == [f"k.{first}.tmp"]
+    second = _die_building(cache)  # takes over, drops the half-built archive
+    assert [p.name for p in cache.glob("k.*.tmp")] == [f"k.{second}.tmp"]
+    assert (cache / "k.lock").read_text() == f"{first}\n{second}\n"
+    assert ArchiveBuild.take(cache, "k") is None  # two dead builders: no third
+
+
+@pytest.mark.parametrize("end", ["killed", "timed out"])
+def test_failed_build_is_not_retried(install, monkeypatch, end):
+    home, java, cache = install
+    options, build = start_up_archive()
+    assert options.startswith("-XX:ArchiveClassesAtExit=")
+    # stands in for a gateway JVM still writing its archive at exit
+    jvm = subprocess.Popen(
+        [sys.executable, "-c",
+         f"import time; open({str(build.tmp)!r}, 'wb').write({MAGIC!r}); time.sleep(60)"],
+        stdin=subprocess.PIPE,
+    )
+    if end == "killed":  # by a caller that stopped waiting for it
+        jvm.kill()
+        jvm.wait()
+    else:
+        monkeypatch.setattr(session, "_DUMP_WAIT_S", 0.5)
+    build.publish(jvm)
+    assert jvm.returncode != 0
+    lock = cache / f"{archive_key(str(home), str(java))}.lock"
+    assert lock.read_text() == f"{os.getpid()}\nfailed\n"
+    assert sorted(p.name for p in cache.iterdir()) == sorted(["conf", lock.name])
+
+    env = dict(os.environ)
+    assert start_up_archive() is None
+    assert dict(os.environ) == env
+
+    lock.unlink()  # deleting the mark allows a new build
+    options, build = start_up_archive()
     build.release()
-    assert not lock.exists()
+    assert options.startswith("-XX:ArchiveClassesAtExit=")
 
 
 def test_live_lock_holder_keeps_others_off(install):
@@ -158,13 +201,16 @@ def test_only_a_clean_exit_publishes(install, code):
     assert jvm.returncode == code
     assert (cache / "k.jsa").exists() == (code == 0)
     assert (cache / "old.jsa").exists() == (code != 0)
-    assert sorted(p.name for p in cache.iterdir()) == (["k.jsa"] if code == 0 else ["old.jsa"])
+    assert sorted(p.name for p in cache.iterdir()) == (
+        ["k.jsa"] if code == 0 else ["k.lock", "old.jsa"])
 
 
 CHILD = """
 import json, sys
 from shifts_etl_spark.session import get_spark
 spark = get_spark(app_name="cds-round-trip")
+if sys.argv[1:] == ["job"]:  # a Python job connects the accumulator server
+    spark.sparkContext.parallelize(range(4), 2).map(lambda x: x).count()
 pid = spark.sparkContext._gateway.proc.pid
 maps = open(f"/proc/{pid}/maps").read().split()
 print(json.dumps({
@@ -175,9 +221,9 @@ print(json.dumps({
 """
 
 
-def _child(env: dict) -> tuple[dict, str]:
+def _child(env: dict, *args: str) -> tuple[dict, str]:
     """Run CHILD on CPUs 0 and 1; its result and everything it printed."""
-    r = subprocess.run(["taskset", "-c", "0,1", sys.executable, "-c", CHILD],
+    r = subprocess.run(["taskset", "-c", "0,1", sys.executable, "-c", CHILD, *args],
                        env=env, capture_output=True, text=True, timeout=300)
     assert r.returncode == 0, r.stderr[-3000:]
     return json.loads(r.stdout.strip().splitlines()[-1]), r.stdout + r.stderr
@@ -197,28 +243,30 @@ def test_archive_round_trip(tmp_path):
     jsa = cache / f"{key}.jsa"
     cache.mkdir(parents=True)
     jsa.write_bytes(b"garbage")
+    try:
+        # 1: the garbage file is not used; the JDK's base archive is; the
+        # process builds the archive and publishes it at exit
+        first, out = _child(env, "job")
+        assert first["parallelism"] == 2  # local[N] follows the CPU affinity
+        assert "SharedArchiveFile" not in first["options"]
+        assert any(m.endswith("/classes.jsa") for m in first["mapped"])
+        assert str(jsa) not in first["mapped"]
+        assert "[cds" not in out and "Traceback" not in out
+        assert session.has_archive_magic(jsa)
+        assert sorted(p.name for p in cache.iterdir()) == sorted(["conf", jsa.name])
 
-    # 1: the garbage file is not used; the JDK's base archive is; the
-    # process builds the archive and publishes it at exit
-    first, out = _child(env)
-    assert first["parallelism"] == 2  # local[N] follows the CPU affinity
-    assert "SharedArchiveFile" not in first["options"]
-    assert any(m.endswith("/classes.jsa") for m in first["mapped"])
-    assert str(jsa) not in first["mapped"]
-    assert "[cds" not in out
-    assert session.has_archive_magic(jsa)
-    assert sorted(p.name for p in cache.iterdir()) == sorted(["conf", jsa.name])
+        # 2: the driver JVM maps the published archive
+        second, out = _child(env)
+        assert second["options"].split()[0] == f"-XX:SharedArchiveFile={jsa}"
+        assert str(jsa) in second["mapped"]
+        assert "[cds" not in out and "Traceback" not in out
 
-    # 2: the driver JVM maps the published archive
-    second, out = _child(env)
-    assert second["options"].split()[0] == f"-XX:SharedArchiveFile={jsa}"
-    assert str(jsa) in second["mapped"]
-    assert "[cds" not in out
-
-    # the same options on a JVM the archive does not match (another class
-    # path) start quietly and keep the base archive
-    r = subprocess.run([session.java_binary(), *second["options"].split(), "-version"],
-                       capture_output=True, text=True, timeout=60)
-    assert r.returncode == 0
-    assert "sharing" in r.stderr
-    assert "[cds" not in r.stdout + r.stderr
+        # the same options on a JVM the archive does not match (another
+        # class path) start quietly and keep the base archive
+        r = subprocess.run([session.java_binary(), *second["options"].split(), "-version"],
+                           capture_output=True, text=True, timeout=60)
+        assert r.returncode == 0
+        assert "sharing" in r.stderr
+        assert "[cds" not in r.stdout + r.stderr
+    finally:
+        shutil.rmtree(cache)  # the archive is ~176 MB
