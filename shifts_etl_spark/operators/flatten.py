@@ -13,7 +13,9 @@ Reference behavior being re-expressed (semantics, not code):
   - T9 one pass fans out to 4 tables: reference :62-70 — here four lazy
     plans over the same doc frame; pipeline.run_etl's docs are a JVM-held
     local relation (sources/pages.py), so each plan re-scans it without a
-    cache.
+    cache. The relation's partitions follow its bytes, not the core count
+    (one below 4 MB), so each plan runs one task per stage and writes one
+    part file per child table: a warm 28-day run takes 19 tasks, not 101.
 
 Scale note (100 TB): each flatten is a narrow transformation — no shuffle at
 all. Explodes multiply rows ~1-3× within a partition; Catalyst prunes the

@@ -11,20 +11,35 @@ def spark():
     yield s
 
 
+def _job_ids(sc, fn) -> list[int]:
+    """Run ``fn`` under a fresh job group; the ids of the jobs it submitted."""
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+
+
 @pytest.fixture
 def count_jobs(spark):
     """``count_jobs(fn)`` runs ``fn`` under a fresh job group and returns
     how many Spark jobs it submitted (``statusTracker``)."""
+    return lambda fn: len(_job_ids(spark.sparkContext, fn))
+
+
+@pytest.fixture
+def count_tasks(spark):
+    """``count_tasks(fn)`` runs ``fn`` under a fresh job group and returns
+    how many tasks its jobs completed (``statusTracker``)."""
     sc = spark.sparkContext
 
     def count(fn) -> int:
-        group = f"count-jobs-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-            return len(sc.statusTracker().getJobIdsForGroup(group))
-        finally:
-            sc.setJobGroup(None, None)
+        st = sc.statusTracker()
+        jobs = [st.getJobInfo(j) for j in _job_ids(sc, fn)]
+        stages = [st.getStageInfo(s) for j in jobs if j for s in j.stageIds]
+        return sum(s.numCompletedTasks for s in stages if s)
 
     return count
 

@@ -227,9 +227,9 @@ def test_compute_kpis_runs_no_job(spark, tables, count_jobs):
     ) == 0
 
 
-def test_run_etl_28_days_in_14_jobs(spark, tmp_path, count_jobs):
+def test_run_etl_28_days_in_13_jobs(spark, tmp_path, count_jobs):
     pages = paginate(generate_shift_docs(days=28), 7)
     n = count_jobs(
         lambda: run_etl(spark, pages=pages, output_dir=tmp_path / "out", anchor_date="2023-01-28")
     )
-    assert n <= 14
+    assert n <= 13

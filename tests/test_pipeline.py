@@ -3,10 +3,13 @@ atomicity, clear — the engine analogs of the reference's test suite
 (reference etl/tests/test_shift_data_processor.py:127-300)."""
 
 import copy
+import math
 
+import pyarrow as pa
 import pytest
 from pyspark.errors import PySparkTypeError, PySparkValueError
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from shifts_etl_spark.operators import flatten, quality
 from shifts_etl_spark.operators.quality import IntegrityError
@@ -34,11 +37,55 @@ def test_pagination_equivalence(spark, tmp_path):
 
 
 def test_docs_from_pages_is_one_relation(spark):
-    """A 52-page batch is one plan leaf with at most defaultParallelism
-    partitions: the partition count must not grow with the page count."""
+    """A 52-page batch is one plan leaf and one partition: the partition
+    count must not grow with the page count."""
     df = docs_from_pages(spark, paginate(generate_shift_docs(360), 7))
     assert df._jdf.queryExecution().analyzed().collectLeaves().size() == 1
-    assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    assert df.rdd.getNumPartitions() == 1
+    assert df.count() == 360
+
+
+def _arrow_bytes(docs) -> int:
+    return pa.Table.from_pylist(docs, schema=to_arrow_schema(SHIFT_DOC_SCHEMA)).nbytes
+
+
+@pytest.mark.parametrize("days, kb", [(28, 9), (360, 114)])
+def test_small_batch_is_one_partition(spark, days, kb):
+    """A batch far below spark.sql.files.openCostInBytes (4 MB) is one
+    partition, not the defaultParallelism LocalTableScanExec would give it."""
+    docs = generate_shift_docs(days)
+    assert round(_arrow_bytes(docs) / 1000) == kb
+    assert docs_from_pages(spark, paginate(docs, 7)).rdd.getNumPartitions() == 1
+
+
+@pytest.mark.parametrize(
+    "max_bytes, open_cost, expected", [(65536, 50000, 3), (20000, 1000, 4)]
+)
+def test_batch_partitions_follow_file_split_rule(spark, max_bytes, open_cost, expected):
+    """The batch is split as a file scan splits a file of its Arrow bytes
+    (FilePartition.maxSplitBytes), capped by the defaultParallelism
+    partitions of the local scan it coalesces."""
+    docs = generate_shift_docs(360)
+    nbytes = _arrow_bytes(docs)
+    cores = spark.sparkContext.defaultParallelism
+    split = min(max_bytes, max(open_cost, (nbytes + open_cost) // cores))
+    assert min(math.ceil(nbytes / split), cores) == expected
+    keys = {
+        "spark.sql.files.maxPartitionBytes": max_bytes,
+        "spark.sql.files.openCostInBytes": open_cost,
+    }
+    saved = {k: spark.conf.getAll.get(k) for k in keys}
+    try:
+        for k, v in keys.items():
+            spark.conf.set(k, str(v))
+        df = docs_from_pages(spark, paginate(docs, 7))
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert df.rdd.getNumPartitions() == expected
     assert df.count() == 360
 
 
@@ -195,11 +242,23 @@ def test_validate_tables_null_child_key_is_orphan(golden_tables):
 
 
 def test_validate_tables_clean_in_few_jobs(spark, count_jobs):
-    """Clean tables over a batch as run_etl ingests it: one shuffle and one
-    isEmpty, not a job pair per check."""
+    """Clean tables over a batch as run_etl ingests it: one isEmpty job,
+    not a job pair per check. Every input of the check union is one
+    partition, so its groupBy needs no exchange."""
     docs = docs_from_pages(spark, paginate(generate_shift_docs(28), 7))
     tables = flatten.flatten_all(docs)
-    assert count_jobs(lambda: quality.validate_tables(tables)) <= 3
+    assert count_jobs(lambda: quality.validate_tables(tables)) == 1
+
+
+def test_warm_run_etl_28_days_in_19_tasks(spark, tmp_path, count_tasks):
+    """A one-partition batch runs each stage, check and write in one task
+    (a defaultParallelism split of the same batch took 101)."""
+    pages = paginate(generate_shift_docs(28), 7)
+    run_etl(spark, pages=pages, output_dir=tmp_path / "a", anchor_date="2023-01-28")
+    n = count_tasks(
+        lambda: run_etl(spark, pages=pages, output_dir=tmp_path / "b", anchor_date="2023-01-28")
+    )
+    assert n <= 19
 
 
 def test_warm_run_etl_compiles_no_code(spark, tmp_path):
@@ -266,8 +325,8 @@ def test_clear_data_forgets_commits(spark, tmp_path):
 
 
 def test_run_etl_part_files_follow_rows_not_pages(spark, tmp_path):
-    """20 pages commit at most defaultParallelism part files per child
-    table (a per-page fan-out would write ~parallelism × 20)."""
+    """20 pages commit one part file per child table (a per-page fan-out
+    would write ~parallelism × 20, a core-count split parallelism)."""
     out = tmp_path / "out"
     pages = paginate(generate_shift_docs(20), 1)
     assert len(pages) >= 20
@@ -275,7 +334,7 @@ def test_run_etl_part_files_follow_rows_not_pages(spark, tmp_path):
     assert counts["shifts"] == 20
     for t in ["shifts", "breaks", "allowances", "award_interpretations"]:
         n_files = len(list((out / t).rglob("part-*.parquet")))
-        assert 0 < n_files <= spark.sparkContext.defaultParallelism, t
+        assert n_files == 1, t
 
 
 def test_http_pagination_iterator(spark):
