@@ -18,7 +18,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from shifts_etl_spark.operators.dedup import release_orphaned_caches
+from shifts_etl_spark.caching import release_orphaned_caches
 from shifts_etl_spark.plans.catalog import BENCH_QUERIES, CATALOG
 from shifts_etl_spark.session import get_spark
 from shifts_etl_spark.sources.tables import load_table

@@ -107,10 +107,10 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "prepare":
         from pyspark.sql import functions as F
 
+        from . import caching
         from .pipeline import prepare_training_data
 
-        caches: list = []
-        try:
+        with caching.scope():
             stages = prepare_training_data(
                 spark,
                 spark.read.parquet(args.input),
@@ -119,7 +119,6 @@ def main(argv: list[str] | None = None) -> int:
                 chunk_tokens=args.chunk_tokens,
                 overlap=args.overlap,
                 budget_tokens=args.budget_tokens,
-                _cache_registry=caches,
             )
             if args.output:
                 # write_batch already materialized every stage — count
@@ -135,9 +134,6 @@ def main(argv: list[str] | None = None) -> int:
                 "packs": stages["packs"].select("pack_id").distinct().count(),
                 "split": stages["split"].count(),
             }
-        finally:
-            for c in caches:
-                c.unpersist()
         print(counts)
         return 0
 

@@ -19,82 +19,12 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from .. import caching
+# perfbench drains the ambient cache owner through this name
+from ..caching import release_orphaned_caches  # noqa: F401
 from .textstats import normalize_text, tokens
-
-# Persist handles from registry-less calls land here instead of leaking
-# for the session lifetime (the r8 ADVICE finding: catalog entries call
-# the LSH operators without a _cache_registry, and a 343-entry sweep in
-# one session accumulated every run's cached (id, bucket) / signature
-# frames). The list is BOUNDED, not drained per call: when it grows past
-# _ORPHAN_CACHE_BOUND the OLDEST handles are unpersisted (FIFO), so a
-# long sweep holds at most a dozen stale frames while RECENT handles stay
-# warm — Spark's cache manager substitutes a persisted frame into any
-# later identical plan, which is what makes a warm-up + timed bench pair
-# (and a retry of the same entry) fast; an eager per-call drain measured
-# a 5× bench regression on x3 by discarding exactly that reuse. Callers
-# who control materialization should still pass _cache_registry and
-# unpersist exactly (minhash_dedup_components does).
-_ORPHANED_CACHES: list[DataFrame] = []
-_ORPHAN_CACHE_BOUND = 12
-# The bound is COUNT-based: at corpus scale each orphaned frame is
-# itself corpus-sized (~0.5 KB/doc signatures), so a long-lived driver
-# sweeping many entries can pin up to _ORPHAN_CACHE_BOUND corpus-scale
-# frames in executor storage between trims. Long-lived drivers at scale
-# should call release_orphaned_caches() between entries (storage
-# pressure only — an evicted or unpersisted frame recomputes, never
-# corrupts). The lock serializes append/trim/drain so concurrent driver
-# threads (parallel streaming queries, thread-pooled entry sweeps)
-# cannot race a pop against a concurrent drain.
-_ORPHAN_LOCK = threading.Lock()
-
-
-def _unpersist_quietly(df: DataFrame) -> None:
-    # a handle whose SparkSession has been stopped raises on unpersist;
-    # a dead context holds no cached blocks, so "already released" is
-    # the correct reading — swallowing keeps a NEW session's calls from
-    # crashing on a previous session's orphans
-    try:
-        df.unpersist()
-    except Exception:
-        pass
-
-
-def release_orphaned_caches() -> int:
-    """Unpersist every cache handle orphaned by registry-less LSH calls;
-    returns how many were released. Safe at any time — an unpersisted
-    frame recomputes, never corrupts; handles from stopped sessions are
-    treated as already released. Pops as it goes so a surprise error
-    can never leave the list half-drained."""
-    n = 0
-    while True:
-        with _ORPHAN_LOCK:
-            if not _ORPHANED_CACHES:
-                return n
-            df = _ORPHANED_CACHES.pop()
-        _unpersist_quietly(df)
-        n += 1
-
-
-def _track_cache(df: DataFrame, registry: list | None) -> DataFrame:
-    """Persist ``df`` and record the handle — in the caller's registry
-    when given, else in the bounded module orphan list (oldest handles
-    unpersist once the bound is exceeded)."""
-    df.persist()
-    if registry is not None:
-        registry.append(df)
-        return df
-    evicted: list[DataFrame] = []
-    with _ORPHAN_LOCK:
-        _ORPHANED_CACHES.append(df)
-        while len(_ORPHANED_CACHES) > _ORPHAN_CACHE_BOUND:
-            evicted.append(_ORPHANED_CACHES.pop(0))
-    for old in evicted:  # unpersist outside the lock (it can block on the JVM)
-        _unpersist_quietly(old)
-    return df
 
 
 def _cooled_band_buckets(
@@ -106,7 +36,6 @@ def _cooled_band_buckets(
     n_planes: int = 32,
     bands: int = 4,
     hot_bucket_cap: int = 64,
-    _cache_registry: list | None = None,
 ) -> tuple[DataFrame, list[str]]:
     """Shared banded-candidate machinery (one implementation for
     embedding_nn_pairs_lsh, semantic_dedup, hard_negative_topk, and the
@@ -117,14 +46,13 @@ def _cooled_band_buckets(
     candidate-join key list (block_keys + ["bucket"]). Callers self-join
     the cool frame on those keys with their own pair predicate; vectors
     re-attach BY ID afterwards, so nothing here ever shuffles an
-    embedding. The persist handle follows the _track_cache contract
-    (caller registry, else the bounded orphan list)."""
+    embedding. The cool frame's parent is persisted through
+    :mod:`caching`, so the caller's scope owns it."""
     from .simsearch import add_det_lsh_signature
 
     sig = add_det_lsh_signature(base, dim, n_planes, bands, vec_col)
-    bucketed = _track_cache(
-        sig.select(*keep, F.explode("buckets").alias("bucket")),
-        _cache_registry,
+    bucketed = caching.persist(
+        sig.select(*keep, F.explode("buckets").alias("bucket"))
     )
     keys = [*block_keys, "bucket"]
     hot = (
@@ -410,7 +338,6 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
     max_bucket_size: int | None = 500,
     hash_fn: str = "xxhash64",
-    _cache_registry: list | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash-LSH.
 
@@ -432,9 +359,9 @@ def minhash_lsh_pairs(
 
     The signature frame persists internally (every downstream subtree —
     hot-bucket count, both self-join sides, both est re-attach sides —
-    reads it); pass ``_cache_registry`` to receive the handle and
-    unpersist it once downstream work has materialized —
-    ``minhash_dedup_components`` does this for the composed chain.
+    reads it) through :mod:`caching`: a caller that materializes the
+    pairs inside a ``caching.scope()`` releases it on exit, as
+    ``minhash_dedup_components`` does for the composed chain.
 
     r11 SINGLE-cache shape: ``with_sig`` is the only persisted frame.
     Round 10 additionally cached the post-anti banded frame, but a
@@ -457,11 +384,10 @@ def minhash_lsh_pairs(
     # signature pipeline for both sides (Spark's exchange reuse does not
     # fire across the join aliases here — verified in the physical plan).
     # The cached footprint is (doc_id, 64 longs) ≈ 0.5 KB/doc.
-    with_sig = _track_cache(
+    with_sig = caching.persist(
         minhash_signatures(
             docs, text_col, id_col, num_hashes, shingle_n, hash_fn
-        ),
-        _cache_registry,
+        )
     )
 
     # band key = hash of the comma-joined slot values, salted per band.
@@ -586,7 +512,6 @@ def simhash_pairs(
     chunks: int = 4,
     n_bits: int = 64,
     hash_fn: str = "xxhash64",
-    _cache_registry: list | None = None,
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) ≤ max_hamming, found by chunk
     banding (pigeonhole: ≤3 differing bits over 4 16-bit chunks ⇒ some chunk
@@ -594,9 +519,8 @@ def simhash_pairs(
     assert n_bits % chunks == 0
     width = n_bits // chunks
     # persist for the same self-join-recompute reason as minhash_lsh_pairs
-    sh = _track_cache(
-        simhash_signatures(docs, text_col, id_col, n_bits, hash_fn),
-        _cache_registry,
+    sh = caching.persist(
+        simhash_signatures(docs, text_col, id_col, n_bits, hash_fn)
     )
     chunk_arr = F.array(
         *[
@@ -803,7 +727,6 @@ def embedding_nn_pairs_lsh(
     vec_col: str = "embedding",
     threshold: float = 0.9,
     block_col: str | None = None,
-    _cache_registry: list | None = None,
 ) -> DataFrame:
     """:func:`embedding_nn_pairs` in its documented 100 TB mode: the
     per-label blocks are replaced by sign-LSH band buckets (the x8
@@ -888,7 +811,6 @@ def embedding_nn_pairs_lsh(
         n_planes=n_planes,
         bands=bands,
         hot_bucket_cap=hot_bucket_cap,
-        _cache_registry=_cache_registry,
     )
     pairs = (
         cool.alias("l")
@@ -975,7 +897,6 @@ def incremental_minhash_dedup(
     history_sig_col: str | None = None,
     incoming_sig_df: DataFrame | None = None,
     exact_precollapse: bool = True,
-    _cache_registry: list | None = None,
 ) -> DataFrame:
     """Continuous-ingestion NEAR-dup admission — the banded-MinHash
     counterpart of :func:`incremental_exact_dedup`: an incoming doc is
@@ -1036,11 +957,10 @@ def incremental_minhash_dedup(
             F.col(id_col).alias("doc_id"),
             F.md5(normalize_text(F.col(text_col))).alias("_g"),
         )
-        gmap = _track_cache(
+        gmap = caching.persist(
             keyed.join(
                 keyed.groupBy("_g").agg(F.min("doc_id").alias("rep")), "_g"
-            ).select("doc_id", "rep"),
-            _cache_registry,
+            ).select("doc_id", "rep")
         )
         rep_ids = gmap.where(F.col("doc_id") == F.col("rep")).select(
             F.col("doc_id").alias("_rep_id")
@@ -1077,10 +997,9 @@ def incremental_minhash_dedup(
             history, text_col, id_col, num_hashes, shingle_n, hash_fn
         ).withColumn("is_hist", F.lit(True))
     # persist: banding, the two by-id sig re-attaches, and (in collapse
-    # mode) the rep filter all read this union; handles land in
-    # _cache_registry (the minhash_lsh_pairs contract) for the caller
-    # to release after materialization, or orphan for the next drain
-    sigs = _track_cache(inc_sig.unionByName(hist_sig), _cache_registry)
+    # mode) the rep filter all read this union; the caller's scope owns
+    # it (the minhash_lsh_pairs contract)
+    sigs = caching.persist(inc_sig.unionByName(hist_sig))
 
     band_hashes = F.array(
         *[
@@ -1104,7 +1023,9 @@ def incremental_minhash_dedup(
         banded = banded.join(
             F.broadcast(hot), ["band", "band_hash"], "left_anti"
         )
-    banded = _track_cache(banded, _cache_registry)
+    # both self-join sides read this; its cached plan scans the sigs
+    # cache (x240's executed plan), so it does not recompute the union
+    banded = caching.persist(banded)
 
     # partner keeps its side bit through the candidate distinct: the same
     # id can legitimately exist on BOTH sides (a doc re-ingested under
@@ -1316,9 +1237,9 @@ def minhash_dedup_components(
 
     Cache discipline: ``minhash_lsh_pairs`` persists its signature
     frame for the self-join; ``dedup_clusters`` eagerly
-    localCheckpoints its labels (truncating lineage), so those caches
-    are dead weight by the time this returns — they are unpersisted
-    here rather than leaked for the session lifetime.
+    localCheckpoints its labels (truncating lineage), so that cache is
+    dead weight by the time this returns — the scope here releases it
+    rather than leaving it to the ambient owner.
 
     Scale note: EXACT-COLLAPSE FIRST (``exact_dedup_normalized``, the
     x1/x2 hash groupBy) and hand this only the min-id copies, the way
@@ -1328,17 +1249,12 @@ def minhash_dedup_components(
     replicated corpus measured 6.8× wall-clock without the collapse vs
     2.3× with it, docs/SCALE.md), and a corpus-scale pile of identical
     docs overflows the hot-bucket cap and escapes dedup entirely."""
-    caches: list = []
-    cand = minhash_lsh_pairs(
-        docs, text_col, id_col, _cache_registry=caches, **lsh_kwargs
-    )
-    conf = ngram_jaccard_pairs(
-        docs, cand.select("id_a", "id_b"), text_col, id_col, shingle_n
-    ).where(F.col("jaccard") >= threshold)
-    comps = dedup_clusters(conf.select("id_a", "id_b"))
-    for c in caches:
-        c.unpersist()
-    return comps
+    with caching.scope():
+        cand = minhash_lsh_pairs(docs, text_col, id_col, **lsh_kwargs)
+        conf = ngram_jaccard_pairs(
+            docs, cand.select("id_a", "id_b"), text_col, id_col, shingle_n
+        ).where(F.col("jaccard") >= threshold)
+        return dedup_clusters(conf.select("id_a", "id_b"))
 
 
 def duplicate_ngram_coverage(

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import caching
+
 
 def iterate_hierarchy(
     nodes: DataFrame,
@@ -32,32 +34,30 @@ def iterate_hierarchy(
     if the iteration hasn't drained after ``max_levels`` levels (cycle
     or deeper-than-expected data) — an unbounded loop on a cyclic edge
     set would otherwise spin forever.
+
+    The edges and every level are cached through :mod:`caching` and
+    back the returned union, so the caller's scope releases them.
     """
-    edges = nodes.select(
-        F.col(key).alias("_child"), F.col(parent).alias("_parent")
-    ).persist()
-    frontier = (
-        edges.where(F.col("_parent").isNull())
-        .select(
+    edges = caching.persist(
+        nodes.select(F.col(key).alias("_child"), F.col(parent).alias("_parent"))
+    )
+    frontier = caching.persist(
+        edges.where(F.col("_parent").isNull()).select(
             F.col("_child").alias("node"),
             F.lit(0).alias("depth"),
             F.col("_child").alias("root"),
         )
-        .persist()
     )
     levels = [frontier]
     for _ in range(max_levels):
-        nxt = (
-            edges.join(frontier, edges._parent == frontier.node)
-            .select(
+        nxt = caching.persist(
+            edges.join(frontier, edges._parent == frontier.node).select(
                 F.col("_child").alias("node"),
                 (F.col("depth") + 1).alias("depth"),
                 F.col("root"),
             )
-            .persist()
         )
         if not nxt.take(1):
-            nxt.unpersist()
             break
         levels.append(nxt)
         frontier = nxt

@@ -20,6 +20,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from . import caching
 from .operators import flatten, kpi, quality
 from .sinks.staged import StagedWriter, clear_outputs
 from .sources import pages as pages_src
@@ -99,7 +100,6 @@ def prepare_training_data(
     max_length_quantile: float | None = None,
     max_cross_doc_dup_frac: float | None = None,
     lsh_kwargs: dict | None = None,
-    _cache_registry: list | None = None,
 ) -> dict[str, DataFrame]:
     """The LLM-data capstone pipeline, composed from the extension
     operators: quality-filter → optional repetition filter (Gopher-style
@@ -125,6 +125,11 @@ def prepare_training_data(
     shapes (context-window chunks, packed sequences); curate() ends in a
     mixed, split corpus with a per-stage accounting ledger. Use this one
     to produce model inputs, curate() to decide what goes in the corpus.
+
+    The input and the scrubbed stage are cached through :mod:`caching`
+    and back the returned lazy frames: a caller that consumes them
+    eagerly (the x237 ledger entry, the CLI) opens a ``caching.scope()``
+    around that use.
     """
     from .operators import dedup
     from .operators.chunking import chunk_documents, pack_sequences
@@ -145,13 +150,9 @@ def prepare_training_data(
     if not 0 <= min_jaccard <= 1:
         raise ValueError(f"min_jaccard must be in [0, 1]: got {min_jaccard}")
 
-    docs = docs.select("doc_id", "text").persist(StorageLevel.MEMORY_AND_DISK)
-    if _cache_registry is not None:
-        # the two stage caches back the RETURNED lazy frames, so this
-        # function cannot release them itself; callers that consume the
-        # stages eagerly (the x237 ledger entry) collect the handles here
-        # and unpersist once done — same convention as minhash_lsh_pairs
-        _cache_registry.append(docs)
+    docs = caching.persist(
+        docs.select("doc_id", "text"), StorageLevel.MEMORY_AND_DISK
+    )
 
     quality = quality_filter(docs)
     kept = docs.join(quality.where(F.col("keep")).select("doc_id"), "doc_id")
@@ -185,9 +186,7 @@ def prepare_training_data(
         kept = kept.join(over.select("doc_id"), "doc_id", "left_anti")
 
     scrubbed = kept.select("doc_id", scrub_pii(F.col("text")).alias("text"))
-    scrubbed = scrubbed.persist(StorageLevel.MEMORY_AND_DISK)
-    if _cache_registry is not None:
-        _cache_registry.append(scrubbed)
+    scrubbed = caching.persist(scrubbed, StorageLevel.MEMORY_AND_DISK)
 
     # Collapse exact (normalized) duplicates BEFORE the LSH stage: exact
     # copies share identical shingle sets, hence identical signatures and
@@ -476,12 +475,13 @@ def curate(
         .when(u < train_frac + val_frac, "val")
         .otherwise("test")
     )
-    # the RETURNED frame carries the cache so the caller can release it
-    # (curated.unpersist()); the last intermediate is freed here — curate
-    # leaks no cache handle the caller can't reach
-    curated = cur_df.select(
-        "doc_id", "source", "text", split.alias("split")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # the RETURNED frame carries a cache owned through caching (the
+    # caller's scope, or curated.unpersist()); the last intermediate is
+    # freed here
+    curated = caching.persist(
+        cur_df.select("doc_id", "source", "text", split.alias("split")),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     account("split", curated)
     cur_df.unpersist()
 

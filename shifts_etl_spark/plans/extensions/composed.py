@@ -25,7 +25,7 @@ The first four, per the r6 verdict:
          end-to-end curation run certified stage by stage with the
          driver's own hash check.
 
-Two more cover curate()'s remaining arms (ROUND8_PLAN candidate #2),
+Two more cover curate()'s remaining arms,
 built from the same parameterized ledger-SQL builder as x231:
   x232 — the per-source TOKEN-budget mixture (``budget_tokens``, x90's
          quality-greedy running-sum selection) in place of the
@@ -742,15 +742,14 @@ def _training_rows(spark, sf_dir, **prep_kwargs):
     """Run prepare_training_data (md5 hash family + any extra config)
     and reduce the returned stages to the 8-row stage-count ledger the
     x237/x238 oracles reproduce."""
+    from ... import caching
     from ...pipeline import prepare_training_data
 
-    caches: list = []
-    try:
+    with caching.scope():
         stages = prepare_training_data(
             spark,
             _t(spark, sf_dir, "documents"),
             lsh_kwargs={"hash_fn": "md5"},
-            _cache_registry=caches,
             **prep_kwargs,
         )
         rows = [
@@ -773,9 +772,6 @@ def _training_rows(spark, sf_dir, **prep_kwargs):
         rows += [
             (f"split_{k}", int(sp.get(k, 0))) for k in ("train", "val", "test")
         ]
-    finally:
-        for c in caches:
-            c.unpersist()
     return spark.createDataFrame(rows, "stage string, n_rows long")
 
 

@@ -10,10 +10,12 @@ The split is two filters over ONE scan definition — Spark evaluates the
 parse once per file read; quarantined raw text is written as its own
 table so reprocessing is a plain re-read of that directory.
 
-Caveat (Spark semantics): a frame that selects ONLY the corrupt column
-sees nulls — Spark must parse the full schema alongside it, which
-`read_json_with_quarantine` guarantees by caching the full-width read
-before either filter projects it down.
+Caveat (Spark semantics): Spark refuses a raw-file query that selects
+ONLY the corrupt column — it must parse the full schema alongside it.
+`read_json_with_quarantine` guarantees that with a lazy local checkpoint
+of the full-width read: the first action parses each file once, both
+filters read the checkpointed rows, and the blocks go when the frames
+do (no cache handle to release).
 """
 
 from __future__ import annotations
@@ -39,7 +41,7 @@ def read_json_with_quarantine(
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
-        .cache()  # one parse feeds both filters; tiny rows, unpersisted by caller if needed
+        .localCheckpoint(eager=False)  # one parse feeds both filters
     )
     clean = raw.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = raw.where(F.col(CORRUPT_COL).isNotNull()).select(

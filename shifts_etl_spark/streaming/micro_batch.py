@@ -18,7 +18,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators import flatten
+from .. import caching
+from ..operators import flatten, quality
 from ..schemas import SHIFT_DOC_SCHEMA
 from ..sinks.staged import StagedWriter
 
@@ -54,21 +55,23 @@ def stream_etl(
     sid = _stream_identity(checkpoint_dir)
 
     def commit_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.persist()
-        try:
-            tables = flatten.flatten_all(batch_df)
+        with caching.scope():
+            tables = flatten.flatten_all(caching.persist(batch_df))
+            # an epoch that breaks a key constraint fails the stream and
+            # commits nothing, as run_etl's batch does
+            quality.validate_tables(tables)
             writer.write_batch(tables, batch_id=_epoch_batch_id(sid, epoch_id))
             if refresh_kpis:
                 from ..operators import kpi
 
                 sp = batch_df.sparkSession
-                kpis = kpi.compute_kpis(
-                    sp,
-                    writer.read_table(sp, "shifts"),
-                    writer.read_table(sp, "breaks"),
-                    writer.read_table(sp, "allowances"),
-                    anchor_date,
+                # read back with the schemas just written: inference
+                # would cost a footer-reading job per table
+                shifts, breaks, allowances = (
+                    writer.read_table(sp, name, schema=tables[name].schema)
+                    for name in ("shifts", "breaks", "allowances")
                 )
+                kpis = kpi.compute_kpis(sp, shifts, breaks, allowances, anchor_date)
                 # overwrite-style refresh: latest epoch's KPI batch wins
                 from ..sinks.staged import clear_outputs
 
@@ -77,8 +80,6 @@ def stream_etl(
                     {"kpis": kpis},
                     batch_id=_epoch_batch_id(sid, epoch_id, "-kpis"),
                 )
-        finally:
-            batch_df.unpersist()
 
     stream = docs.writeStream.foreachBatch(commit_epoch).option(
         "checkpointLocation", str(checkpoint_dir)
@@ -564,81 +565,67 @@ def streaming_curation_admit(
     }
 
     def admit_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.persist()
-        try:
+        with caching.scope():
+            caching.persist(batch_df)
             unblocked = batch_df.where(blocked_frac <= max_blocked_frac)
             scrubbed = unblocked.select(
                 "doc_id", "source", scrub_pii(F.col("text")).alias("text")
             )
-            passing = scrubbed.where(
-                F.round(quality_score(F.col("text")), 4) >= min_quality
-            ).persist()
+            passing = caching.persist(
+                scrubbed.where(
+                    F.round(quality_score(F.col("text")), 4) >= min_quality
+                )
+            )
             sp = batch_df.sparkSession
             history = _admitted_hashes(sp, writer)
             keep = incremental_exact_dedup(
                 passing, history, history_hash_col="content_hash"
             ).select("keep_id")
-            admitted = passing.join(
-                keep.withColumnRenamed("keep_id", "doc_id"), "doc_id", "semi"
-            ).persist()
-            caches: list = []
-            survivors = admitted
-            batch_sigs = None
-            try:
-                if neardup_threshold is not None:
-                    # one signature pass serves both admission and the
-                    # sidecar append; exact_precollapse=False because the
-                    # exact stage above already collapsed the batch
-                    batch_sigs = minhash_signatures(
-                        admitted, **sig_kwargs
-                    ).persist()
-                    nd_keep = (
-                        incremental_minhash_dedup(
-                            admitted,
-                            _admitted_sigs(sp, writer, sig_kwargs),
-                            threshold=neardup_threshold,
-                            history_sig_col="sig",
-                            incoming_sig_df=batch_sigs,
-                            exact_precollapse=False,
-                            _cache_registry=caches,
-                            **nd_kwargs,
-                        )
-                        .where(F.col("keep"))
-                        .select("doc_id")
-                    )
-                    survivors = admitted.join(
-                        nd_keep, "doc_id", "semi"
-                    ).persist()
-                new_hashes = survivors.select(
-                    F.md5(normalize_text(F.col("text"))).alias("content_hash")
+            survivors = admitted = caching.persist(
+                passing.join(
+                    keep.withColumnRenamed("keep_id", "doc_id"), "doc_id", "semi"
                 )
-                tables = {
-                    "admitted": survivors,
-                    "admitted_hashes": new_hashes,
-                }
-                if neardup_threshold is not None:
-                    tables["admitted_sigs"] = (
-                        batch_sigs.withColumnRenamed("doc", "doc_id")
-                        .join(survivors.select("doc_id"), "doc_id", "semi")
-                    )
-                writer.write_batch(
-                    tables, batch_id=_epoch_batch_id(sid, epoch_id)
+            )
+            if neardup_threshold is not None:
+                # one signature pass serves both admission and the
+                # sidecar append; exact_precollapse=False because the
+                # exact stage above already collapsed the batch
+                batch_sigs = caching.persist(
+                    minhash_signatures(admitted, **sig_kwargs)
                 )
-            finally:
-                for c in caches:
-                    c.unpersist()
-                if batch_sigs is not None:
-                    batch_sigs.unpersist()
-                if survivors is not admitted:
-                    survivors.unpersist()
-                admitted.unpersist()
-                passing.unpersist()
-            if compact_every and (epoch_id + 1) % compact_every == 0:
-                writer.compact(sp, "admitted_hashes")
-                if writer.table_exists("admitted_sigs"):
-                    writer.compact(sp, "admitted_sigs")
-        finally:
-            batch_df.unpersist()
+                nd_keep = (
+                    incremental_minhash_dedup(
+                        admitted,
+                        _admitted_sigs(sp, writer, sig_kwargs),
+                        threshold=neardup_threshold,
+                        history_sig_col="sig",
+                        incoming_sig_df=batch_sigs,
+                        exact_precollapse=False,
+                        **nd_kwargs,
+                    )
+                    .where(F.col("keep"))
+                    .select("doc_id")
+                )
+                survivors = caching.persist(
+                    admitted.join(nd_keep, "doc_id", "semi")
+                )
+            new_hashes = survivors.select(
+                F.md5(normalize_text(F.col("text"))).alias("content_hash")
+            )
+            tables = {
+                "admitted": survivors,
+                "admitted_hashes": new_hashes,
+            }
+            if neardup_threshold is not None:
+                tables["admitted_sigs"] = (
+                    batch_sigs.withColumnRenamed("doc", "doc_id")
+                    .join(survivors.select("doc_id"), "doc_id", "semi")
+                )
+            writer.write_batch(tables, batch_id=_epoch_batch_id(sid, epoch_id))
+        if compact_every and (epoch_id + 1) % compact_every == 0:
+            writer.compact(sp, "admitted_hashes")
+            if writer.table_exists("admitted_sigs"):
+                writer.compact(sp, "admitted_sigs")
 
     return (
         docs.writeStream.foreachBatch(admit_epoch)

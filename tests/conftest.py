@@ -52,6 +52,7 @@ def count_tasks(spark):
 # `-m ""`, and always exercised by the tools/gate.py pytest_slow step.
 # ETL tests that re-profiled under 10 s on 4 cores run by default.
 SLOW_TESTS = {
+    "tests/test_caching.py::test_ambient_owner_stays_bounded",
     "tests/test_composed_entries.py::test_composed_entry_matches_oracle[x231_curation_ledger]",
     "tests/test_composed_entries.py::test_composed_entry_matches_oracle[x232_curation_ledger_tokens]",
     "tests/test_composed_entries.py::test_composed_entry_matches_oracle[x233_curation_decontam]",
@@ -77,7 +78,6 @@ SLOW_TESTS = {
     "tests/test_round2b_ops.py::test_pagerank_matches_numpy_power_iteration",
     "tests/test_round3_ops.py::test_snapshot_diff_matches_dict_reference",
     "tests/test_round8_ops.py::test_incremental_neardup_signature_only_history",
-    "tests/test_round9_ops.py::test_registry_less_lsh_calls_orphan_bounded",
     "tests/test_round9_ops.py::test_semantic_dedup_band_knob_certified_shape",
     "tests/test_round9_ops.py::test_semantic_dedup_banded_drops_subset_of_exact",
     "tests/test_session.py::test_archive_round_trip",

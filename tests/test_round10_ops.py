@@ -1,55 +1,14 @@
-"""Round-10 hardening tests: the ADVICE r9 fixes (orphan-list lock,
-empty-corpus contracts, the ivf stride sentinel) and the
+"""Round-10 hardening tests: the ADVICE r9 fixes (empty-corpus
+contracts, the ivf stride sentinel) and the
 minhash_lsh_pairs shuffle-contract re-attach (VERDICT r9 "What's wrong"
 #1 / next-round #5)."""
 
-import threading
-
 import pytest
 
+from shifts_etl_spark import caching
 from shifts_etl_spark.operators import dedup, simsearch
 
 SF = "/root/testdata/sf0.001"
-
-
-# --------------------------------------------------------------------------
-# orphan-cache list: thread safety (ADVICE r9 #1)
-# --------------------------------------------------------------------------
-
-class _FakeDF:
-    """Duck-typed stand-in so the lock contention test never waits on the
-    JVM — _track_cache/release only call persist()/unpersist()."""
-
-    def persist(self):
-        return self
-
-    def unpersist(self):
-        return self
-
-
-def test_orphan_list_concurrent_track_and_drain_never_raises():
-    dedup.release_orphaned_caches()
-    errs: list = []
-
-    def worker():
-        try:
-            for _ in range(300):
-                dedup._track_cache(_FakeDF(), None)
-                dedup.release_orphaned_caches()
-        except Exception as e:  # pragma: no cover - the failure branch
-            errs.append(e)
-
-    threads = [threading.Thread(target=worker) for _ in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert errs == []
-    # whatever interleaving happened, the bound holds and a final drain
-    # empties the list
-    assert len(dedup._ORPHANED_CACHES) <= dedup._ORPHAN_CACHE_BOUND
-    dedup.release_orphaned_caches()
-    assert len(dedup._ORPHANED_CACHES) == 0
 
 
 # --------------------------------------------------------------------------
@@ -101,9 +60,10 @@ def test_ivf_explicit_stride_raises_even_at_legacy_default(spark):
 
 def test_minhash_banded_join_carries_no_signatures(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(60)
-    reg: list = []
-    pairs = dedup.minhash_lsh_pairs(docs, _cache_registry=reg)
-    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    with caching.scope():
+        pairs = dedup.minhash_lsh_pairs(docs)
+        plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+        assert pairs.count() > 0
     # the candidate join output must not include sig on either side: in
     # the optimized plan the only Join over band/band_hash projects doc
     # ids, and sig columns appear solely in the two post-distinct
@@ -116,9 +76,6 @@ def test_minhash_banded_join_carries_no_signatures(spark):
     assert band_joins, "banded candidate join missing from the plan"
     for ln in band_joins:
         assert not re.search(r"\bsig\b", ln), ln
-    assert pairs.count() > 0
-    for c in reg:
-        c.unpersist()
 
 
 def test_minhash_pairs_results_unchanged_by_reattach(spark):

@@ -3,6 +3,9 @@ drop with availableNow and verify batch-equivalent results + windowed agg."""
 
 import json
 
+import pytest
+from pyspark.errors import StreamingQueryException
+
 from shifts_etl_spark.sinks.staged import StagedWriter
 from shifts_etl_spark.sources.generator import generate_shift_docs
 from shifts_etl_spark.streaming import stream_etl, streaming_event_counts
@@ -22,6 +25,21 @@ def test_stream_etl_drains_files(spark, tmp_path):
     assert w.read_table(spark, "shifts").count() == 12
     n_breaks = sum(len(d["breaks"]) for d in docs)
     assert w.read_table(spark, "breaks").count() == n_breaks
+
+
+def test_stream_etl_rejects_epoch_with_duplicate_key(spark, tmp_path):
+    """An epoch that breaks a key constraint fails the stream and commits
+    nothing, as run_etl raises IntegrityError on the same docs."""
+    docs = generate_shift_docs(days=4)
+    inp = tmp_path / "in"
+    inp.mkdir()
+    with open(inp / "page0.json", "w") as f:
+        for d in [*docs, docs[0]]:  # 5 rows, 4 shift ids
+            f.write(json.dumps(d) + "\n")
+    out = tmp_path / "out"
+    with pytest.raises(StreamingQueryException, match="IntegrityError"):
+        stream_etl(spark, inp, out, tmp_path / "ckpt", available_now=True)
+    assert StagedWriter(out).commits() == []
 
 
 def test_streaming_window_counts(spark, tmp_path):

@@ -6,6 +6,10 @@ Flags the scale red-flags the naked eye misses in 56 queries:
   - parquet scans with no pushed filter AND no column pruning when the
     query filters/projects (heuristic: ReadSchema == full table schema)
   - single-partition Exchange outside the whitelisted global-order ops
+  - a cached frame whose cached plan recomputes another live cache it
+    derives from instead of scanning it (persisting a derived frame
+    before its parent does this, and so does re-persisting a parent
+    after an eviction)
 
 Usage: python tools/audit_plans.py [sf_dir]
 """
@@ -18,6 +22,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from shifts_etl_spark.caching import release_orphaned_caches
 from shifts_etl_spark.plans.catalog import CATALOG
 from shifts_etl_spark.session import get_spark
 
@@ -349,9 +354,86 @@ CROSS_JOIN_OK = {
 }
 
 
+def _children(node) -> list:
+    # a cache scan leads into the cached plan, an adaptive plan into its
+    # initial plan (query stages would hide the cache scans)
+    name = node.getClass().getSimpleName()
+    if name == "InMemoryTableScanExec":
+        return [node.relation().cacheBuilder().cachedPlan()]
+    if name == "AdaptiveSparkPlanExec":
+        return [node.inputPlan()]
+    ch = node.children()
+    return [ch.apply(i) for i in range(ch.size())]
+
+
+def _scans(plan, jvm, transitive: bool) -> set[int]:
+    """Identities of the caches ``plan`` scans: the ones it reads
+    directly, or with ``transitive`` every cache reached through them."""
+    found, stack = set(), [plan]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "InMemoryTableScanExec":
+            found.add(jvm.System.identityHashCode(node.relation().cacheBuilder()))
+            if not transitive:
+                continue
+        stack.extend(_children(node))
+    return found
+
+
+def recomputed_caches(df) -> list[str]:
+    """Caches in ``df``'s executed plan whose cached plan holds another
+    live cache's logical plan but reads neither that cache nor a cache
+    built on it: materializing them computes the parent again."""
+    spark = df.sparkSession
+    jvm = spark._jvm
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")  # no public getter
+    field.setAccessible(True)
+    seq = field.get(cm)
+    live = {}
+    for i in range(seq.size()):
+        cd = seq.apply(i)
+        builder = cd.cachedRepresentation().cacheBuilder()
+        live[jvm.System.identityHashCode(builder)] = (cd, builder)
+    if not live:
+        return []
+    plan = df._jdf.queryExecution().executedPlan()
+    in_plan = _scans(plan, jvm, transitive=True) & live.keys()
+
+    def subtrees(lp):
+        out, stack = [], [lp]
+        while stack:
+            n = stack.pop()
+            out.append(n)
+            ch = n.children()
+            stack.extend(ch.apply(i) for i in range(ch.size()))
+        return out
+
+    contains = {
+        (r, c): any(
+            n.sameResult(live[c][0].plan()) for n in subtrees(live[r][0].plan())
+        )
+        for r in live
+        for c in live
+        if r != c
+    }
+    flags = []
+    for r in sorted(in_plan):
+        reads = _scans(live[r][1].cachedPlan(), jvm, transitive=False)
+        for c in live:
+            if c == r or c in reads or not contains[r, c]:
+                continue
+            if any(contains.get((d, c)) for d in reads):
+                continue
+            out = live[r][0].cachedRepresentation().output().mkString(", ")
+            parent = live[c][0].cachedRepresentation().output().mkString(", ")
+            flags.append(f"cache [{out}] recomputes cache [{parent}]")
+    return flags
+
+
 def audit(name: str, df) -> list[str]:
     plan = df._jdf.queryExecution().executedPlan().toString()
-    flags = []
+    flags = recomputed_caches(df)
     if name not in CROSS_JOIN_OK and (
         "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
     ):
@@ -370,6 +452,9 @@ def main() -> None:
     spark = get_spark(app_name="audit")
     n_flagged = 0
     for name, spec in CATALOG.items():
+        # judge each entry on its own caches
+        release_orphaned_caches()
+        spark.catalog.clearCache()
         try:
             flags = audit(name, spec.spark(spark, sf_dir))
         except Exception as e:  # noqa: BLE001
