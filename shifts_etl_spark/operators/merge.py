@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..sinks.staged import StagedWriter, clear_outputs
+from ..sinks.staged import StagedWriter
 
 
 def merge_dataframes(
@@ -46,26 +46,14 @@ def merge_into(
     key: str,
     delete_col: str | None = None,
 ) -> int:
-    """MERGE into a staged-sink table in place (atomic batch swap):
-    read current → merge → write merged batch → drop old batches.
-    Returns the post-merge row count."""
+    """MERGE into a staged-sink table in place: read current → merge →
+    one replace commit, which deletes the old batches only after the
+    merged batch is logged. Returns the post-merge row count."""
     writer = StagedWriter(root)
     current = writer.read_table(spark, table)
-    merged = merge_dataframes(current, updates, key, delete_col).persist()
-    n = merged.count()  # materialize BEFORE clearing the source batches
-    import uuid
-
-    old = sorted((writer.root / table).glob("batch=*"))
-    # unique id: a fixed one collides with the previous merge's promoted
-    # batch dir on the second merge into the same table
-    writer.write_batch({table: merged}, batch_id=f"merge-{uuid.uuid4().hex[:8]}")
-    # promote: drop pre-merge batches only after the merged batch landed
-    import shutil
-
-    for d in old:
-        shutil.rmtree(d, ignore_errors=True)
-    merged.unpersist()
-    return n
+    merged = merge_dataframes(current, updates, key, delete_col)
+    writer.write_batch({table: merged}, replace=True)
+    return writer.read_table(spark, table).count()
 
 
 def scd2_from_changelog(

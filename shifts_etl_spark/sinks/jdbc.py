@@ -22,10 +22,11 @@ batch already present in ``etl_commits`` is a no-op, so a crash between
 the publish commit and a streaming checkpoint cannot double-load.
 
 The interface mirrors sinks.staged.StagedWriter (write_batch / read_table
-/ clear), so ``pipeline.run_etl(writer=JdbcWriter(url))`` swaps parquet
-for a database without touching the flatten/KPI plans. Tested against the
-embedded Derby that ships with Spark; any JDBC URL (Postgres at the
-reference's scale) takes the same code path.
+/ commits), so code that loads flattened tables through a writer can take
+a JdbcWriter instead without touching the flatten/KPI plans
+(``pipeline.run_etl`` itself always writes parquet through StagedWriter).
+Tested against the embedded Derby that ships with Spark; any JDBC URL
+(Postgres at the reference's scale) takes the same code path.
 """
 
 from __future__ import annotations

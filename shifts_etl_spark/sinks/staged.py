@@ -3,14 +3,24 @@
 The reference loads 4 tables inside one Postgres transaction per page and
 rolls all of them back on any failure (reference
 etl/app/shift_data_processor.py:154-183). Vanilla Spark file sinks have no
-cross-table transaction, so atomicity is re-created with staging + promote:
+cross-table transaction, so atomicity is re-created with staging, promote
+and a commit log:
 
-  1. every table of a batch is written under  <root>/_staging/<epoch>/<table>
+  1. every table of a batch is written under  <root>/_staging/<batch>/<table>
   2. only after ALL writes succeed is each table promoted (atomic directory
-     rename) into <root>/<table>/batch=<epoch>
-  3. any failure ⇒ the staging dir is deleted; readers never see partial data
+     rename) into <root>/<table>/batch=<batch>
+  3. the batch commits when its line is appended to <root>/_commits.log;
+     any failure before that deletes the staged and promoted dirs
 
-Readers always go through ``read_table`` which scans <root>/<table>/batch=*.
+The log alone decides what a table holds: ``read_table`` resolves the
+batches of the current state and of an ``as_of`` snapshot the same way, so
+readers see only logged batches — never a dir left by a crash mid-promote.
+A replace is a commit too: ``write_batch(replace=True)`` logs a line that
+marks its tables replaced, a read returns the batches since the table's
+last replace, and the batches it supersedes are deleted only after that
+line is written (compaction, MERGE and the streaming KPI refresh all go
+through it). Deleting them truncates history, like VACUUM.
+
 On a real cluster the same protocol holds on HDFS (rename is atomic per
 directory); on S3 you would swap this class for a Delta/Iceberg commit —
 the interface is deliberately that of a transactional table format.
@@ -33,50 +43,86 @@ class StagedWriter:
     def __init__(self, root: str | Path):
         self.root = Path(root)
 
-    def write_batch(self, tables: dict[str, DataFrame], batch_id: str | None = None) -> str:
-        """All-or-nothing write of several tables (one reference 'page').
-        Each promoted batch is appended to ``_commits.log`` — the ordered
-        commit history ``read_table(as_of=...)`` replays (Delta-lite time
-        travel; single-writer by design, like the staging-rename commit).
+    def write_batch(
+        self,
+        tables: dict[str, DataFrame],
+        batch_id: str | None = None,
+        replace: bool = False,
+    ) -> str:
+        """All-or-nothing write of several tables (one reference 'page'),
+        committed by appending it to ``_commits.log`` (single-writer by
+        design, like the staging-rename commit). With ``replace`` the batch
+        supersedes everything its tables held; their older batch dirs are
+        deleted once the commit is logged.
 
         Idempotent per ``batch_id``: a replay of an already-committed batch
-        (a streaming epoch re-fed after a crash between promotion and the
-        stream's checkpoint commit) returns without writing, and orphan
-        ``batch=<id>`` dirs from a crash BEFORE the log append (partial
-        promotion) are replaced rather than wedging the rename."""
+        (a streaming epoch re-fed after a crash between commit and the
+        stream's checkpoint commit) returns without writing, and an orphan
+        ``batch=<id>`` dir from a crash before the log append is replaced
+        rather than wedging the rename."""
         batch_id = batch_id or uuid.uuid4().hex[:12]
         if any(bid == batch_id for bid, _ in self.commits()):
             return batch_id  # replayed epoch — the commit log is the truth
         staging = self.root / "_staging" / batch_id
+        promoted = []
         try:
             for name, df in tables.items():
                 df.write.mode("overwrite").parquet(str(staging / name))
             for name in tables:
-                dest = self.root / name / f"batch={batch_id}"
+                dest = self._batch_dir(name, batch_id)
                 dest.parent.mkdir(parents=True, exist_ok=True)
                 if dest.exists():  # orphan of an uncommitted partial promote
                     shutil.rmtree(dest)
                 (staging / name).rename(dest)
+                promoted.append(dest)
+            mark = "\treplace" if replace else ""
             with open(self.root / "_commits.log", "a") as log:
-                log.write(f"{batch_id}\t{','.join(sorted(tables))}\n")
+                log.write(f"{batch_id}\t{','.join(sorted(tables))}{mark}\n")
         except BaseException:
-            shutil.rmtree(staging, ignore_errors=True)
+            for d in promoted:
+                shutil.rmtree(d, ignore_errors=True)
             raise
         finally:
-            shutil.rmtree(self.root / "_staging" / batch_id, ignore_errors=True)
+            shutil.rmtree(staging, ignore_errors=True)
+        if replace:
+            for name in tables:
+                keep = self._batch_dir(name, batch_id)
+                for d in (self.root / name).glob("batch=*"):
+                    if d != keep:
+                        shutil.rmtree(d, ignore_errors=True)
         return batch_id
 
-    def commits(self) -> list[tuple[str, set[str]]]:
-        """(batch_id, tables written) per commit, oldest first."""
+    def _log(self) -> list[tuple[str, set[str], bool]]:
+        """(batch_id, tables written, replaced?) per commit, oldest first."""
         log = self.root / "_commits.log"
         if not log.exists():
             return []
         out = []
         for ln in log.read_text().splitlines():
             if ln:
-                bid, tabs = ln.split("\t", 1)
-                out.append((bid, set(tabs.split(","))))
+                bid, tabs, *mark = ln.split("\t")
+                out.append((bid, set(tabs.split(",")), mark == ["replace"]))
         return out
+
+    def commits(self) -> list[tuple[str, set[str]]]:
+        """(batch_id, tables written) per commit, oldest first."""
+        return [(bid, tabs) for bid, tabs, _ in self._log()]
+
+    def _batch_dir(self, name: str, batch_id: str) -> Path:
+        return self.root / name / f"batch={batch_id}"
+
+    def _snapshot(self, name: str, as_of: str | None = None) -> list[str]:
+        """Batch ids ``name`` holds as of commit ``as_of`` (default: the
+        latest): those committed since its last replace, oldest first."""
+        live: list[str] = []
+        for bid, tabs, replace in self._log():
+            if name in tabs:
+                live = [bid] if replace else [*live, bid]
+            if bid == as_of:
+                return live
+        if as_of is not None:
+            raise ValueError(f"unknown commit {as_of!r}")
+        return live
 
     def read_table(
         self,
@@ -86,71 +132,47 @@ class StagedWriter:
         schema: StructType | None = None,
     ) -> DataFrame:
         """Current state, or — with ``as_of`` = a batch id — the snapshot
-        as of that commit (every batch committed up to and including it).
-        Raises if the snapshot needs a batch that compaction has since
-        rewritten (compaction truncates history, like VACUUM).
+        as of that commit. Raises if the snapshot needs a batch that a
+        later replace has deleted (a replace truncates history, like
+        VACUUM).
 
         ``schema``, when the caller knows what it wrote, skips the
         one-task job Spark otherwise runs to infer it from parquet footers."""
-        if as_of is not None:
-            all_commits = self.commits()
-            ids = [bid for bid, _ in all_commits]
-            if as_of not in ids:
-                raise ValueError(f"unknown commit {as_of!r}")
-            wanted = [
-                bid
-                for bid, tabs in all_commits[: ids.index(as_of) + 1]
-                if name in tabs
-            ]
-            dirs = [self.root / name / f"batch={b}" for b in wanted]
-            vacuumed = [d.name for d in dirs if not d.exists()]
-            if vacuumed:
-                raise ValueError(
-                    f"snapshot {as_of!r} of {name!r} was vacuumed: {vacuumed}"
-                )
-            batches = sorted(str(d) for d in dirs)
-        else:
-            # enumerate concrete batch dirs (globs make Spark's scan log
-            # spurious FileNotFoundExceptions)
-            batches = sorted(str(p) for p in (self.root / name).glob("batch=*"))
-        if not batches:
+        dirs = [self._batch_dir(name, b) for b in self._snapshot(name, as_of)]
+        vacuumed = [d.name for d in dirs if not d.exists()]
+        if vacuumed:
+            raise ValueError(
+                f"snapshot {as_of!r} of {name!r} was vacuumed: {vacuumed}"
+            )
+        if not dirs:
             from ..schemas import TABLE_SCHEMAS
 
             return spark.createDataFrame([], schema or TABLE_SCHEMAS[name])
         reader = spark.read if schema is None else spark.read.schema(schema)
-        return reader.parquet(*batches)
+        return reader.parquet(*map(str, dirs))
 
     def table_exists(self, name: str) -> bool:
-        d = self.root / name
-        return d.exists() and any(d.glob("batch=*"))
+        return bool(self._snapshot(name))
 
     def compact(self, spark: SparkSession, name: str, target_partitions: int = 1) -> int:
-        """Small-file management: rewrite all batch dirs of a table into one
-        compacted batch (atomic: the compacted batch is staged and promoted
-        before the source batches are removed). Returns batches removed.
-        At scale this is the nightly OPTIMIZE pass — per-epoch micro-batches
-        otherwise accumulate one file set per commit forever."""
-        old = sorted((self.root / name).glob("batch=*"))
-        if len(old) <= 1:
+        """Small-file management: rewrite a table's batches into one
+        compacted batch, committed as a replace (staged, promoted and
+        logged before the source batches are deleted). Returns batches
+        removed. At scale this is the nightly OPTIMIZE pass — per-epoch
+        micro-batches otherwise accumulate one file set per commit forever."""
+        live = self._snapshot(name)
+        if len(live) <= 1:
             return 0
         df = self.read_table(spark, name).coalesce(target_partitions)
-        # materialize under staging first; promote, then drop the originals
-        batch_id = f"compact-{uuid.uuid4().hex[:8]}"
-        self.write_batch({name: df}, batch_id=batch_id)
-        for d in old:
-            shutil.rmtree(d, ignore_errors=True)
-        return len(old)
+        self.write_batch({name: df}, replace=True)
+        return len(live)
 
 
-def clear_outputs(root: str | Path, tables: list[str] | None = None) -> None:
-    """K4 — cascade-delete analog: wipe every output table together."""
-    root = Path(root)
-    if tables is None:
-        targets = [p for p in root.iterdir()] if root.exists() else []
-    else:
-        targets = [root / t for t in tables]
-    for t in targets:
-        if t.is_file():  # e.g. _commits.log on a full wipe
+def clear_outputs(root: str | Path, tables: list[str]) -> None:
+    """K4 — cascade-delete analog: wipe the named outputs together (table
+    dirs, and files such as ``_commits.log``)."""
+    for t in (Path(root) / name for name in tables):
+        if t.is_file():
             t.unlink(missing_ok=True)
         else:
             shutil.rmtree(t, ignore_errors=True)

@@ -28,10 +28,9 @@ any Python-side conversion, and the batch needs no cache. Above the
 threshold it becomes an RDD of Arrow batches, decoded in the JVM on each
 scan.
 
-For big ingests the right shape is unchanged: the driver only ever touches
-page *URLs*; page *bodies* can be fetched executor-side by mapping a URL list
-with mapInPandas (``distributed_fetch_df``) so 1000 executors pull pages in
-parallel — the driver never holds more than one page's metadata.
+For big ingests the driver should touch no page bodies at all:
+``spark.read.format("shifts_api")`` (sources/api_source.py) plans one
+partition per page, so executors pull the pages in parallel.
 """
 
 from __future__ import annotations
@@ -116,35 +115,3 @@ def _batch_partitions(spark: SparkSession, nbytes: int) -> int:
     split = min(conf.filesMaxPartitionBytes(), max(open_cost, per_core))
     return max(1, math.ceil(nbytes / split))
 
-
-def distributed_fetch_df(
-    spark: SparkSession,
-    urls: list[str],
-    fetch: Callable[[str], dict | None] | None = None,
-) -> DataFrame:
-    """Scale path: fetch page bodies executor-side. The driver distributes
-    only URLs; each partition fetches and parses its pages, emitting nested
-    docs with the fixed schema. JSON decode happens where the data lands."""
-    sc = spark.sparkContext
-    # createDataFrame(schema=...) binds rows POSITIONALLY — a Row built from
-    # a dict whose JSON key order differs from the schema would misassign
-    # columns silently. Emit schema-ordered tuples instead.
-    field_names = [f.name for f in SHIFT_DOC_SCHEMA.fields]
-
-    def fetch_partition(it):
-        import json as _json
-        import urllib.request
-
-        for u in it:
-            if fetch is not None:
-                page = fetch(u)
-            else:  # pragma: no cover - network path
-                with urllib.request.urlopen(u) as r:
-                    page = _json.loads(r.read())
-            if page is None:
-                raise ValueError(f"Failed to fetch {u}")
-            for doc in page["results"]:
-                yield tuple(doc.get(n) for n in field_names)
-
-    rdd = sc.parallelize(urls, max(len(urls), 1)).mapPartitions(fetch_partition)
-    return spark.createDataFrame(rdd, SHIFT_DOC_SCHEMA)

@@ -72,13 +72,11 @@ def stream_etl(
                     for name in ("shifts", "breaks", "allowances")
                 )
                 kpis = kpi.compute_kpis(sp, shifts, breaks, allowances, anchor_date)
-                # overwrite-style refresh: latest epoch's KPI batch wins
-                from ..sinks.staged import clear_outputs
-
-                clear_outputs(Path(output_dir), ["kpis"])
+                # latest epoch's KPI batch replaces the previous one
                 writer.write_batch(
                     {"kpis": kpis},
                     batch_id=_epoch_batch_id(sid, epoch_id, "-kpis"),
+                    replace=True,
                 )
 
     stream = docs.writeStream.foreachBatch(commit_epoch).option(
@@ -242,7 +240,7 @@ def streaming_merge_upsert(
     tombstones) MERGEd into a staged-sink table once per epoch via
     foreachBatch — the Structured-Streaming analog of a Delta MERGE sink.
     Exactly-once comes from the checkpoint (epochs are not re-fed) plus
-    merge_into's atomic batch swap; state never accumulates in the stream
+    merge_into's replace commit; state never accumulates in the stream
     because the table itself is the state."""
     from ..operators.merge import merge_into
 

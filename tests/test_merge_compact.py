@@ -37,6 +37,9 @@ def test_merge_upsert_and_delete(spark, tmp_path):
     assert after[ids[0]].shift_cost is None         # updated
     assert "NEW-1" in after                         # inserted
     assert after[ids[2]] == before[ids[2]]          # untouched rows survive
+    merge_commit = w.commits()[-1][0]
+    assert sorted(w.read_table(spark, "shifts", as_of=merge_commit).collect()) \
+        == sorted(after.values())
 
 
 def test_compaction(spark, tmp_path):
@@ -80,6 +83,40 @@ def test_streaming_kpis_equal_batch(spark, tmp_path):
         r.kpi_name: r.kpi_value
         for r in StagedWriter(stream_out).read_table(spark, "kpis").collect()
     }
+    assert stream_kpis == batch_kpis
+
+
+def test_streaming_kpis_survive_replayed_epoch(spark, tmp_path):
+    """A KPI refresh epoch replayed after its checkpoint commit was lost
+    (crash between the sink commit and the checkpoint's) keeps the six
+    KPI values: the replayed replace commit is skipped, nothing deleted."""
+    docs = generate_shift_docs(days=16)
+    batch_out = tmp_path / "batch"
+    run_etl(spark, pages=paginate(docs, 8), output_dir=batch_out,
+            anchor_date="2023-02-01")
+    batch_kpis = {
+        r.kpi_name: r.kpi_value
+        for r in StagedWriter(batch_out).read_table(spark, "kpis").collect()
+    }
+
+    inp = tmp_path / "in"
+    inp.mkdir()
+    for i in range(0, 16, 4):
+        with open(inp / f"p{i}.json", "w") as f:
+            for d in docs[i : i + 4]:
+                f.write(json.dumps(d) + "\n")
+    out, ck = tmp_path / "stream", tmp_path / "ck"
+    stream_etl(spark, inp, out, ck, available_now=True, refresh_kpis=True,
+               anchor_date="2023-02-01")
+    n_commits = len(StagedWriter(out).commits())
+    for f in (ck / "commits").iterdir():
+        f.unlink()
+    stream_etl(spark, inp, out, ck, available_now=True, refresh_kpis=True,
+               anchor_date="2023-02-01")
+    w = StagedWriter(out)
+    assert len(w.commits()) == n_commits  # the replay committed nothing
+    stream_kpis = {r.kpi_name: r.kpi_value for r in w.read_table(spark, "kpis").collect()}
+    assert len(stream_kpis) == 6
     assert stream_kpis == batch_kpis
 
 
@@ -137,6 +174,46 @@ def test_time_travel_vacuumed_by_compaction(spark, tmp_path):
     assert w.read_table(spark, "kpis").count() == 2  # current state intact
     with pytest.raises(ValueError, match="vacuumed"):
         w.read_table(spark, "kpis", as_of=b1)
+    compact_commit = w.commits()[-1][0]
+    assert sorted(w.read_table(spark, "kpis", as_of=compact_commit).collect()) \
+        == sorted(w.read_table(spark, "kpis").collect())
+
+
+def test_promote_failure_commits_nothing(spark, tmp_path, monkeypatch):
+    """A crash on the third of four promotes (after two tables were
+    renamed into place) leaves no table showing the batch, and a later
+    run_etl into the same directory commits cleanly."""
+    from pathlib import Path
+
+    from shifts_etl_spark.operators import flatten
+    from shifts_etl_spark.sources.pages import docs_from_pages
+
+    out = tmp_path / "crash"
+    docs = generate_shift_docs(days=6)
+    tables = flatten.flatten_all(docs_from_pages(spark, paginate(docs, 3)))
+    assert len(tables) == 4
+    rename, promotes = Path.rename, []
+
+    def failing_rename(self, target):
+        if Path(target).name.startswith("batch="):
+            promotes.append(target)
+            if len(promotes) == 3:
+                raise OSError("injected promote failure")
+        return rename(self, target)
+
+    w = StagedWriter(out)
+    monkeypatch.setattr(Path, "rename", failing_rename)
+    with pytest.raises(OSError, match="injected"):
+        w.write_batch(tables, batch_id="crashed")
+    monkeypatch.undo()
+    assert len(promotes) == 3
+    assert w.commits() == []
+    assert not any(w.table_exists(t) for t in tables)
+    assert all(w.read_table(spark, t).count() == 0 for t in tables)
+
+    counts = run_etl(spark, pages=paginate(docs, 3), output_dir=out,
+                     anchor_date="2023-02-01")
+    assert counts == {t: df.count() for t, df in tables.items()} | {"kpis": 6}
 
 
 def test_scd2_from_changelog_collapses_runs(spark):

@@ -449,34 +449,38 @@ def test_run_etl_over_real_http(spark, tmp_path):
         server.stop()
 
 
-def test_distributed_fetch_df(spark):
-    """Executor-side page fetch: URLs distributed, bodies parsed on
-    executors with the fixed schema."""
-    from shifts_etl_spark.sources.pages import distributed_fetch_df
-
-    docs = generate_shift_docs(days=9)
-    pages = paginate(docs, limit=3, base="http://x/api/shifts")
-    by_url = {f"http://x/api/shifts?p={i}": p for i, p in enumerate(pages)}
-    df = distributed_fetch_df(spark, list(by_url), fetch=by_url.get)
-    assert df.count() == 9
-    assert {r.id for r in df.select("id").collect()} == {d["id"] for d in docs}
-
-
-def test_distributed_fetch_df_key_order_independent(spark):
+def test_custom_datasource_key_order_independent(spark):
     """Pages whose JSON key order differs from the schema must still land in
-    the right columns (rows are bound positionally by createDataFrame, so
-    the fetch path emits schema-ordered tuples, never insertion-order
-    Rows)."""
-    from shifts_etl_spark.sources.pages import distributed_fetch_df
+    the right columns: the DataSource emits schema-ordered tuples, never
+    insertion-order Rows, at the top level and in the nested arrays."""
+    from shifts_etl_spark.sources.api_source import register
+    from shifts_etl_spark.sources.http_service import ShiftsApiServer
+
+    def rev(v):
+        if isinstance(v, dict):
+            return {k: rev(v[k]) for k in reversed(list(v))}
+        if isinstance(v, list):
+            return [rev(x) for x in v]
+        return v
 
     docs = generate_shift_docs(days=3)
-    reversed_docs = [dict(reversed(list(d.items()))) for d in docs]
-    pages = paginate(reversed_docs, limit=3, base="http://x/api/shifts")
-    by_url = {f"http://x/api/shifts?p={i}": p for i, p in enumerate(pages)}
-    df = distributed_fetch_df(spark, list(by_url), fetch=by_url.get)
-    # start/finish are same-typed adjacent fields — the silent-swap case
-    got = {r.id: (r.start, r.finish) for r in df.select("id", "start", "finish").collect()}
-    assert got == {d["id"]: (d["start"], d["finish"]) for d in docs}
+    server = ShiftsApiServer([rev(d) for d in docs])
+    base = server.start()
+    try:
+        register(spark)
+        df = spark.read.format("shifts_api").option("base_url", base).load()
+        # start/finish are same-typed adjacent fields — the silent-swap case
+        got = {
+            r.id: (r.start, r.finish, [(b.start, b.finish) for b in r.breaks])
+            for r in df.select("id", "start", "finish", "breaks").collect()
+        }
+    finally:
+        server.stop()
+    assert got == {
+        d["id"]: (d["start"], d["finish"],
+                  [(b["start"], b["finish"]) for b in d["breaks"]])
+        for d in docs
+    }
 
 
 def test_custom_datasource_reads_api(spark):
