@@ -153,48 +153,6 @@ def shingle_sets(
     ).select("doc", word_shingles(F.col("_toks"), shingle_n).alias("sh"))
 
 
-def shingle_rows(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(doc, shingle) rows via posexplode(tokens) + window LEAD — the
-    ORIGINAL shingling shape, r11: retained ONLY as the reference
-    implementation for the multiset-equivalence pytest
-    (tests/test_dedup_simsearch.py); every operator now uses
-    ``shingle_explode``, whose row-local array slicing skips this
-    shape's corpus-sized (doc, pos, token) exchange+sort. The
-    two-projection note below still applies to any future array
-    variant: exploding a transform(sequence, slice(tokens,...)) array
-    INLINE re-evaluates the whole tokenize pipeline per shingle
-    position (no CSE through lambda+generator → ~100× slower); tokens
-    must be materialized once per row first. Duplicate shingles are
-    kept: downstream MIN/vote aggregates are set-insensitive. Docs
-    shorter than ``shingle_n`` tokens emit their full token string."""
-    from pyspark.sql import Window
-
-    tok = _fan_out(docs).select(
-        F.col(id_col).alias("doc"),
-        F.posexplode(tokens(normalize_text(F.col(text_col)))).alias("pos", "t"),
-    )
-    w = Window.partitionBy("doc").orderBy("pos")
-    leads = [F.col("t")] + [
-        F.lead("t", i).over(w) for i in range(1, shingle_n)
-    ]
-    last = F.lead("t", shingle_n - 1).over(w)
-    return (
-        tok.select(
-            "doc",
-            "pos",
-            F.concat_ws(" ", *leads).alias("s"),  # concat_ws skips NULL tails
-            last.alias("_last"),
-        )
-        .where(F.col("_last").isNotNull() | (F.col("pos") == 0))
-        .select("doc", "s")
-    )
-
-
 def shingle_explode(
     docs: DataFrame,
     text_col: str = "text",
@@ -203,13 +161,13 @@ def shingle_explode(
     unique: bool = False,
 ) -> DataFrame:
     """(doc, s) shingle rows via explode of the per-doc shingle ARRAY —
-    zero exchanges (r10). ``shingle_rows``'s window-LEAD shape shuffles
-    and sorts EVERY token row by (doc, pos) just to assemble adjacent
+    zero exchanges (r10). The window-LEAD shape it replaced shuffled
+    and sorted EVERY token row by (doc, pos) just to assemble adjacent
     tokens; here the tokens array is materialized once per doc (the
     two-projection shape — lambda-CSE blindspot, see word_shingles) and
     shingles are sliced from it row-locally, so the first exchange a
-    consumer pays is its own aggregate's. Emits the same multiset as
-    ``shingle_rows``: per-position duplicates kept (no array_distinct —
+    consumer pays is its own aggregate's. Emits every n-token window as
+    one row: per-position duplicates kept (no array_distinct —
     MIN/vote/count consumers each decide), docs shorter than
     ``shingle_n`` tokens emit their full token string once, zero-token
     docs emit no row (explode of the NULL array).
@@ -305,7 +263,7 @@ def minhash_signatures(
     result must mirror into DuckDB). The shuffle carries (doc, 64
     longs) — documents never move. r10: shingles come from the
     zero-exchange array shape (``shingle_explode``) — the prior
-    window-LEAD shape (``shingle_rows``) shuffled+sorted every token
+    window-LEAD shape shuffled+sorted every token
     row by (doc, pos) before the MIN aggregates ever ran, a full
     corpus-sized exchange the signature math never needed (MIN is
     position- and duplicate-insensitive, and ``shingle_explode`` emits
@@ -1344,7 +1302,7 @@ def split_ngram_contamination(
 
     Returns (doc_id, split, n_shingles, n_shared, shared_frac,
     contaminated) for held-out docs with >= 1 token (zero-token docs
-    have no shingles and emit no row — the shingle_rows contract).
+    have no shingles and emit no row — the shingle_explode contract).
 
     Scale shape: shingles materialize once (posexplode + LEAD); the
     train-shingle set is a distinct projection; the audit is a

@@ -112,12 +112,11 @@ def ivf_topk(
     emb: DataFrame,
     query_ids: list[int],
     k: int = 5,
-    centroid_stride: int | None = None,
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
-    n_cells: int | None = 8,
+    n_cells: int = 8,
 ) -> DataFrame:
     """IVF-style approximate top-k: partition the corpus into cells around
     centroid vectors, search only the ``n_probe`` cells nearest each query.
@@ -127,12 +126,10 @@ def ivf_topk(
     deterministic md5 priority — corpus-DECOUPLED, so assignment cost is
     |corpus| × n_cells and stays linear at any scale. Pass
     ``clustering.kmeans_fit(...).centroids`` for trained cells — the cell
-    mechanics (the part Spark executes) are identical. ``n_cells=None``
-    falls back to the legacy 1-in-``centroid_stride`` id sample, whose
-    centroid count grows WITH the corpus — assignment (|corpus| ×
-    |centroids| broadcast cosines) carries an N²/stride term that the
-    judge measured at 2.7×-and-climbing on the 10× smoke; it stays
-    opt-in for parity only. Cost model: assignment is |corpus| ×
+    mechanics (the part Spark executes) are identical. (The 1-in-16 id
+    sample these cells replaced grew WITH the corpus — an N²/16
+    assignment term measured at 2.7×-and-climbing on the 10× smoke.)
+    Cost model: assignment is |corpus| ×
     |centroids| cosine ops against a BROADCAST centroid table (no
     shuffle of vectors); the probe join then touches only |corpus| ×
     n_probe / |centroids| pairs instead of |corpus| × |queries|.
@@ -142,25 +139,8 @@ def ivf_topk(
             [(i, c) for i, c in enumerate(centroids)],
             schema="cent_id long, cent_v array<double>",
         )
-    elif n_cells is not None:
-        if centroid_stride is not None:
-            # the r9 default flip made n_cells win over the stride
-            # sample; ANY explicit stride alongside it (16 included —
-            # None is the unset sentinel, so explicit-default is
-            # distinguishable) is a pre-flip call pattern that would
-            # otherwise silently run fixed cells — fail loudly instead
-            # (the x215 knob guard)
-            raise ValueError(
-                "centroid_stride is ignored when n_cells is set; pass "
-                "n_cells=None to use the legacy stride sample"
-            )
-        cents = _md5_priority_centroids(emb, n_cells, id_col, vec_col)
     else:
-        if centroid_stride is None:
-            centroid_stride = 16
-        cents = emb.where((F.col(id_col) % centroid_stride) == 0).select(
-            F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_v")
-        )
+        cents = _md5_priority_centroids(emb, n_cells, id_col, vec_col)
 
     # assignment is |corpus| × |cells| cosines — fold each side's norm
     # ONCE (per corpus row / per centroid) instead of per pair; only the
@@ -878,11 +858,10 @@ def ivf_probe_sweep(
     emb: DataFrame,
     query_ids: list[int],
     k: int = 5,
-    centroid_stride: int | None = None,
     probes: tuple[int, ...] = (1, 2, 4, 8),
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_cells: int | None = 8,
+    n_cells: int = 8,
 ) -> DataFrame:
     """Recall-vs-cost tuning curve for the x13 IVF index: for each
     n_probe setting, per query, the candidate count actually scanned
@@ -904,29 +883,12 @@ def ivf_probe_sweep(
     smallest deterministic md5 priority as centroids, so assignment
     stays |corpus| × n_cells (linear); cell population grows to
     N / n_cells (cap with the x8 band trick if cells must stay
-    cache-sized). ``n_cells=None`` falls back to the legacy stride
-    sample, whose centroid count grows WITH the corpus — assignment
-    (|corpus| × |centroids| broadcast cosines) turns quadratic at scale
-    (18.2× on the 10× smoke); it stays opt-in for parity only."""
+    cache-sized). (The 1-in-16 stride sample these cells replaced grew
+    WITH the corpus, so assignment turned quadratic at scale: 18.2× on
+    the 10× smoke.)"""
     from .dedup import _fan_out
 
-    if n_cells is not None and centroid_stride is not None:
-        # the r8 default flip made n_cells win over the stride sample;
-        # ANY explicit stride alongside it (16 included — None is the
-        # unset sentinel) is a pre-flip call pattern that would
-        # otherwise silently run fixed cells — fail loudly instead
-        raise ValueError(
-            "centroid_stride is ignored when n_cells is set; pass "
-            "n_cells=None to use the legacy stride sample"
-        )
-    if n_cells is not None:
-        cents = _md5_priority_centroids(emb, n_cells, id_col, vec_col)
-    else:
-        if centroid_stride is None:
-            centroid_stride = 16
-        cents = emb.where((F.col(id_col) % centroid_stride) == 0).select(
-            F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_v")
-        )
+    cents = _md5_priority_centroids(emb, n_cells, id_col, vec_col)
     max_probe = max(probes)
 
     # fold each side's norm ONCE (per corpus row / per centroid) before

@@ -2,12 +2,13 @@
 control endpoints (E1 `/run-etl`, E2 `/clear-data`; reference
 etl/app/main.py:31-67, SURVEY.md §3).
 
-`run_etl` = ingest pages → flatten to 4 tables → integrity-validate →
-atomically persist → compute + persist the 6 KPIs. One lazy logical plan per
-table and no cache: the batch is a JVM-held local relation
-(sources/pages.py), so the checks and the writes re-scan it cheaply, and
-the KPIs are one lazy query over the tables just written. No Spark job runs
-before the validation's own.
+`run_etl` = ingest pages → ``load_batch`` → persist the 6 KPIs. ``load_batch``
+(flatten to 4 tables → integrity-validate → atomically persist → the lazy
+KPI frame) is the one load path: ``streaming.micro_batch.stream_etl`` runs
+it per epoch. One lazy logical plan per table and no cache: the batch is a
+JVM-held local relation (sources/pages.py), so the checks and the writes
+re-scan it cheaply, and the KPIs are one lazy query over the tables just
+written. No Spark job runs before the validation's own.
 """
 
 from __future__ import annotations
@@ -49,29 +50,15 @@ def run_etl(
             raise ValueError("provide pages or api_url")
         pages = pages_src.iter_http_pages(api_url, fetch=fetch)
 
-    docs = pages_src.docs_from_pages(spark, pages)
-    tables = flatten.flatten_all(docs)
-    quality.validate_tables(tables)
-
     writer = StagedWriter(output_dir)
-    batch = writer.write_batch(tables)
-
-    # Read back with the schemas just written: inference would cost a
-    # footer-reading job per read.
-    schemas = {name: df.schema for name, df in tables.items()}
-    shifts = writer.read_table(spark, "shifts", schema=schemas["shifts"])
-    breaks = writer.read_table(spark, "breaks", schema=schemas["breaks"])
-    allowances = writer.read_table(spark, "allowances", schema=schemas["allowances"])
-    kpis = kpi.compute_kpis(spark, shifts, breaks, allowances, anchor_date)
+    docs = pages_src.docs_from_pages(spark, pages)
+    batch, kpis = load_batch(spark, docs, writer, anchor_date=anchor_date)
     writer.write_batch({"kpis": kpis}, batch_id=f"{batch}-kpis")
-    schemas["kpis"] = kpis.schema
 
     # One aggregate over every committed batch of all five tables,
     # instead of a count job pair per table.
     rows = [
-        writer.read_table(spark, name, schema=schemas[name]).select(
-            F.lit(name).alias("table")
-        )
+        writer.read_table(spark, name).select(F.lit(name).alias("table"))
         for name in OUTPUT_TABLES
     ]
     union = reduce(DataFrame.unionByName, rows)
@@ -79,6 +66,28 @@ def run_etl(
     for r in union.groupBy("table").count().collect():
         counts[r["table"]] = r["count"]
     return counts
+
+
+def load_batch(
+    spark: SparkSession,
+    docs: DataFrame,
+    writer,
+    batch_id: str | None = None,
+    anchor_date: dt.date | str | None = None,
+) -> tuple[str, DataFrame]:
+    """Load one batch of shift docs: flatten → integrity-validate → commit
+    the four tables as one ``writer`` batch (a ``StagedWriter`` or a
+    ``JdbcWriter``). Returns the batch id and the lazy KPI frame over
+    every committed batch; building it runs no Spark job. Raises
+    quality.IntegrityError, committing nothing, on a constraint
+    violation."""
+    tables = flatten.flatten_all(docs)
+    quality.validate_tables(tables)
+    batch = writer.write_batch(tables, batch_id=batch_id)
+    shifts, breaks, allowances = (
+        writer.read_table(spark, name) for name in ("shifts", "breaks", "allowances")
+    )
+    return batch, kpi.compute_kpis(spark, shifts, breaks, allowances, anchor_date)
 
 
 def clear_data(output_dir: str | Path) -> None:

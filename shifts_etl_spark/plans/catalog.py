@@ -28,8 +28,7 @@ class QuerySpec:
 #
 # SELF-MAINTAINING since round 3: every CORRECTNESS_r*.json the driver has
 # dropped in the repo root is parsed at import and its fully-green rows
-# (rows + schema + hash) are unioned in — the static seed below only
-# guards against the files going missing. Round 2's verdict flagged the
+# (rows + schema + hash) make up the set. Round 2's verdict flagged the
 # hand-maintained list going stale as the top window-wasting defect; this
 # removes the failure mode instead of patching it each round.
 
@@ -59,45 +58,6 @@ def _driver_green_rounds() -> dict:
                 latest[name] = max(latest.get(name, 0), rnd)
     return latest
 
-
-_DRIVER_VERIFIED_SEED = frozenset(
-    {
-        # --- round 1 greens (CORRECTNESS_r01.json) ---
-        "s5_scan_pushdown", "t1_explode_tokens", "t2_rename_projection",
-        "t3_array_fold_sum", "t5_epoch_seconds", "f1_predicates",
-        "f2_date_range", "j1_inner_broadcast", "j2_left_join", "j3_semi_join",
-        "j4_anti_join", "j5_cross_join", "j6_range_join", "j7_asof_join",
-        "j8_full_outer", "t6_explode_outer", "a1_global_aggregates",
-        "a6_pricing_summary", "a7_distinct_agg", "a8_rollup", "a9_cube",
-        "a10_grouping_sets", "a11_percentiles", "w1_running_sum",
-        "w2_gaps_islands", "w3_rank_lag", "w4_scalable_prefix_sum",
-        "w5_tumbling_window", "w6_sliding_window", "w7_session_window",
-        "w8_ntile_first_last", "q1_scalar_subquery", "q2_topk",
-        "q3_set_intersect", "q4_set_except", "q5_union_distinct",
-        "q6_scalar_functions", "q7_json_extract", "q8_kpi_union",
-        "q9_correlated_subquery", "q10_in_subquery", "q11_pivot",
-        "q12_offset_limit", "q13_decimal_exact", "q14_string_functions",
-        "q15_math_functions", "q16_date_spine", "q17_shipping_priority",
-        "q18_local_supplier_volume", "q19_event_funnel",
-        # --- round 2 greens (CORRECTNESS_r02.json, 43 rows) ---
-        "q20_idle_rich_customers", "q21_latest_per_key", "q22_nation_trade",
-        "q23_grouped_topk", "q24_returned_item_customers",
-        "q25_promo_revenue_share", "w9_range_interval_frame",
-        "x1_dedup_exact", "x2_dedup_exact_normalized", "x5_ngram_jaccard",
-        "x6_embedding_nn", "x7_sim_topk_bruteforce", "x9_text_stats",
-        "x10_text_langid", "x11_text_fingerprint", "x12_multimodal_features",
-        "x13_sim_topk_ivf", "x14_table_profile", "x16_pii_scrub",
-        "x17_vocabulary", "x18_quality_filter", "x19_tf_idf",
-        "x20_frame_sample", "x21_chunk_documents", "x22_pack_sequences",
-        "x23_stratified_sample", "x24_dataset_split", "x26_resize_images",
-        "x27_bloom_semi_join", "x28_repetition_stats", "x29_incremental_dedup",
-        "x32_expectations", "q26_gap_fill_locf", "q27_scd2_history",
-        "q28_fk_orphans", "q29_rate_anomaly", "q30_cohort_retention",
-        "q31_unpivot_metrics", "q32_event_concurrency",
-        "q33_recursive_hierarchy", "q34_waiting_orders",
-        "q35_inactive_big_balance", "q36_priority_returns",
-    }
-)
 
 # Names whose Spark + oracle semantics changed AFTER their last green driver
 # row: name -> round the semantics changed in. Rows from earlier rounds no
@@ -131,10 +91,7 @@ _SEMANTICS_CHANGED_IN = {
 }
 
 _GREEN_ROUNDS = _driver_green_rounds()
-_DRIVER_VERIFIED = (
-    _DRIVER_VERIFIED_SEED
-    | frozenset(_GREEN_ROUNDS)
-) - frozenset(
+_DRIVER_VERIFIED = frozenset(_GREEN_ROUNDS) - frozenset(
     n
     for n, rnd in _SEMANTICS_CHANGED_IN.items()
     if _GREEN_ROUNDS.get(n, 0) < rnd

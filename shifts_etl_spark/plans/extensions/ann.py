@@ -141,9 +141,10 @@ def x13_sim_topk_ivf(spark, sf_dir):
     addition to the recall-vs-brute-force pytest. Since round 9 the
     operator default is n_cells=8 corpus-decoupled md5-priority
     centroids (the x215/x230 surgery applied to the base operator —
-    assignment stays |corpus| × 8, linear; the legacy stride sample's
-    centroid count grows with N, an N²/16 assignment term the judge
-    measured at 2.7×-and-climbing on the r8 10× smoke)."""
+    assignment stays |corpus| × 8, linear; the stride sample it
+    replaced grew its centroid count with N, an N²/16 assignment term
+    measured at 2.7×-and-climbing on the r8 10× smoke; X13_STRIDE_SQL
+    keeps that sample only as the oracle's surgery base)."""
     return simsearch.ivf_topk(_t(spark, sf_dir, "embeddings"), QUERY_IDS, k=5)
 
 
@@ -1404,8 +1405,8 @@ def x215_ivf_probe_sweep(spark, sf_dir):
     operator default is n_cells=8 corpus-decoupled md5-priority
     centroids (linear assignment cost — the 100 TB path the
     r7-certified x230 entry proved out); the stride sample whose
-    centroid count grows with the corpus stays opt-in via
-    n_cells=None."""
+    centroid count grows with the corpus is gone from the operator and
+    survives only as X215_STRIDE_SQL, the oracle's surgery base."""
     return simsearch.ivf_probe_sweep(
         _t(spark, sf_dir, "embeddings"), QUERY_IDS, k=5
     )
@@ -1526,7 +1527,7 @@ ORDER BY c.n_probe, c.query_id
 # fixed md5-priority centroid sample (the r8 default, n_cells cells),
 # parameterized so x215 (8 cells), the x230 knob twin (4 cells), and —
 # since r9 — the x13 base operator share the surgery; the stride
-# literals stay as bases and document the legacy opt-in mode
+# literals stay only as the bases this surgery rewrites
 def _ivf_cells_sql(n_cells: int, base: str | None = None) -> str:
     base = X215_STRIDE_SQL if base is None else base
     pri = _X73_U("md5(CAST(vec_id AS VARCHAR) || '-ivfc')")

@@ -22,9 +22,9 @@ batch already present in ``etl_commits`` is a no-op, so a crash between
 the publish commit and a streaming checkpoint cannot double-load.
 
 The interface mirrors sinks.staged.StagedWriter (write_batch / read_table
-/ commits), so code that loads flattened tables through a writer can take
-a JdbcWriter instead without touching the flatten/KPI plans
-(``pipeline.run_etl`` itself always writes parquet through StagedWriter).
+/ commits), so ``pipeline.load_batch`` — the flatten → validate → commit →
+KPI path of ``run_etl`` and ``stream_etl`` — takes a JdbcWriter unchanged
+(``run_etl`` and ``stream_etl`` themselves build a StagedWriter).
 Tested against the embedded Derby that ships with Spark; any JDBC URL
 (Postgres at the reference's scale) takes the same code path.
 """

@@ -6,7 +6,8 @@ etl/app/shift_data_processor.py:154-183). Vanilla Spark file sinks have no
 cross-table transaction, so atomicity is re-created with staging, promote
 and a commit log:
 
-  1. every table of a batch is written under  <root>/_staging/<batch>/<table>
+  1. every table of a batch is written under  <root>/_staging/<batch>/<table>,
+     with the schema it was written with in that dir's ``_schema.json``
   2. only after ALL writes succeed is each table promoted (atomic directory
      rename) into <root>/<table>/batch=<batch>
   3. the batch commits when its line is appended to <root>/_commits.log;
@@ -15,6 +16,9 @@ and a commit log:
 The log alone decides what a table holds: ``read_table`` resolves the
 batches of the current state and of an ``as_of`` snapshot the same way, so
 readers see only logged batches — never a dir left by a crash mid-promote.
+A read takes the schema stored with the newest batch it resolves (Spark's
+file listing skips ``_``-prefixed names), so no reader pays the job that
+infers a schema from parquet footers.
 A replace is a commit too: ``write_batch(replace=True)`` logs a line that
 marks its tables replaced, a read returns the batches since the table's
 last replace, and the batches it supersedes are deleted only after that
@@ -31,6 +35,7 @@ always clear parent and children together.
 
 from __future__ import annotations
 
+import json
 import shutil
 import uuid
 from pathlib import Path
@@ -68,6 +73,7 @@ class StagedWriter:
         try:
             for name, df in tables.items():
                 df.write.mode("overwrite").parquet(str(staging / name))
+                (staging / name / "_schema.json").write_text(df.schema.json())
             for name in tables:
                 dest = self._batch_dir(name, batch_id)
                 dest.parent.mkdir(parents=True, exist_ok=True)
@@ -125,19 +131,12 @@ class StagedWriter:
         return live
 
     def read_table(
-        self,
-        spark: SparkSession,
-        name: str,
-        as_of: str | None = None,
-        schema: StructType | None = None,
+        self, spark: SparkSession, name: str, as_of: str | None = None
     ) -> DataFrame:
         """Current state, or — with ``as_of`` = a batch id — the snapshot
-        as of that commit. Raises if the snapshot needs a batch that a
-        later replace has deleted (a replace truncates history, like
-        VACUUM).
-
-        ``schema``, when the caller knows what it wrote, skips the
-        one-task job Spark otherwise runs to infer it from parquet footers."""
+        as of that commit, read with the schema stored with its newest
+        batch. Raises if the snapshot needs a batch that a later replace
+        has deleted (a replace truncates history, like VACUUM)."""
         dirs = [self._batch_dir(name, b) for b in self._snapshot(name, as_of)]
         vacuumed = [d.name for d in dirs if not d.exists()]
         if vacuumed:
@@ -147,8 +146,11 @@ class StagedWriter:
         if not dirs:
             from ..schemas import TABLE_SCHEMAS
 
-            return spark.createDataFrame([], schema or TABLE_SCHEMAS[name])
-        reader = spark.read if schema is None else spark.read.schema(schema)
+            return spark.createDataFrame([], TABLE_SCHEMAS[name])
+        stored = dirs[-1] / "_schema.json"
+        reader = spark.read
+        if stored.exists():  # a batch written before schemas were stored infers it
+            reader = reader.schema(StructType.fromJson(json.loads(stored.read_text())))
         return reader.parquet(*map(str, dirs))
 
     def table_exists(self, name: str) -> bool:

@@ -14,29 +14,18 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown testdata table {name!r}")
-    if name == "events":
-        # events.ts is INT64 TIMESTAMP(NANOS) parquet, which Spark rejects
-        # natively; read nanos as long and floor to microseconds (the
-        # testdata's actual precision — all values are whole microseconds,
-        # so this matches DuckDB's ns→us semantics exactly).
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if name == "events" and dict(df.dtypes).get("ts") == "timestamp_ntz":
+        # µs-precision parquet without UTC adjustment reads as
+        # TIMESTAMP_NTZ, which Spark refuses to cast to numeric
+        # (epoch-seconds arithmetic in range/session operators needs
+        # that). The session TZ is pinned to UTC, so reinterpreting as
+        # TIMESTAMP keeps every value identical and matches DuckDB's
+        # naive-timestamp semantics.
         from pyspark.sql import functions as F
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            # integer div: ns values (~1.7e18) exceed double's exact-integer
-            # range, so `/ 1000` would be off by ±1 µs on some rows
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif dict(df.dtypes).get("ts") == "timestamp_ntz":
-            # µs-precision parquet without UTC adjustment reads as
-            # TIMESTAMP_NTZ, which Spark refuses to cast to numeric
-            # (epoch-seconds arithmetic in range/session operators needs
-            # that). The session TZ is pinned to UTC, so reinterpreting as
-            # TIMESTAMP keeps every value identical and matches DuckDB's
-            # naive-timestamp semantics.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:

@@ -8,8 +8,9 @@ Streaming gives the same contract natively — each micro-batch of
 checkpoint replaces the `links.next` cursor.
 
 `stream_etl` reads nested shift-doc JSON files as they land (the file-drop
-equivalent of pages), flattens each micro-batch with the SAME operators as
-the batch path, and commits all four tables atomically per epoch.
+equivalent of pages) and loads each micro-batch through the batch path's
+own ``pipeline.load_batch`` (flatten → validate → one atomic four-table
+commit per epoch).
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import caching
-from ..operators import flatten, quality
+from ..pipeline import load_batch
 from ..schemas import SHIFT_DOC_SCHEMA
 from ..sinks.staged import StagedWriter
 
@@ -33,14 +34,18 @@ def stream_etl(
     refresh_kpis: bool = False,
     anchor_date=None,
 ):
-    """readStream(json pages) → flatten → atomic per-epoch multi-table write.
+    """readStream(json pages) → ``pipeline.load_batch`` per epoch: each
+    micro-batch is flattened, validated (a key violation fails the stream
+    and commits nothing, as ``run_etl``'s batch does) and committed as one
+    atomic four-table batch.
 
     With ``available_now`` the stream drains existing files and stops —
     batch-equivalent semantics for tests; without it, it runs continuously.
-    With ``refresh_kpis`` each epoch also recomputes the six KPIs over the
-    cumulative tables (the reference runs KPIs once after all pages; a
-    continuously-refreshing variant is the streaming-native analog —
-    equivalence with the batch path is asserted in tests).
+    With ``refresh_kpis`` each epoch also writes ``load_batch``'s KPI frame
+    over the cumulative tables as a replace of the previous epoch's (the
+    reference runs KPIs once after all pages; a continuously-refreshing
+    variant is the streaming-native analog — equivalence with the batch
+    path is asserted in tests).
     """
     docs = (
         spark.readStream.schema(SHIFT_DOC_SCHEMA)
@@ -55,29 +60,16 @@ def stream_etl(
     sid = _stream_identity(checkpoint_dir)
 
     def commit_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        with caching.scope():
-            tables = flatten.flatten_all(caching.persist(batch_df))
-            # an epoch that breaks a key constraint fails the stream and
-            # commits nothing, as run_etl's batch does
-            quality.validate_tables(tables)
-            writer.write_batch(tables, batch_id=_epoch_batch_id(sid, epoch_id))
-            if refresh_kpis:
-                from ..operators import kpi
-
-                sp = batch_df.sparkSession
-                # read back with the schemas just written: inference
-                # would cost a footer-reading job per table
-                shifts, breaks, allowances = (
-                    writer.read_table(sp, name, schema=tables[name].schema)
-                    for name in ("shifts", "breaks", "allowances")
-                )
-                kpis = kpi.compute_kpis(sp, shifts, breaks, allowances, anchor_date)
-                # latest epoch's KPI batch replaces the previous one
-                writer.write_batch(
-                    {"kpis": kpis},
-                    batch_id=_epoch_batch_id(sid, epoch_id, "-kpis"),
-                    replace=True,
-                )
+        batch, kpis = load_batch(
+            batch_df.sparkSession,
+            batch_df,
+            writer,
+            batch_id=_epoch_batch_id(sid, epoch_id),
+            anchor_date=anchor_date,
+        )
+        if refresh_kpis:
+            # latest epoch's KPI batch replaces the previous one
+            writer.write_batch({"kpis": kpis}, batch_id=f"{batch}-kpis", replace=True)
 
     stream = docs.writeStream.foreachBatch(commit_epoch).option(
         "checkpointLocation", str(checkpoint_dir)
@@ -346,11 +338,11 @@ def _stream_identity(checkpoint_dir: str | Path) -> str:
     return f.read_text().strip()
 
 
-def _epoch_batch_id(sid: str, epoch_id: int, suffix: str = "") -> str:
+def _epoch_batch_id(sid: str, epoch_id: int) -> str:
     """StagedWriter batch id for a streaming epoch: namespaced by the
     checkpoint identity, or the bare legacy format when ``sid`` is the
     pre-upgrade sentinel (empty)."""
-    base = f"epoch{epoch_id:06d}{suffix}"
+    base = f"epoch{epoch_id:06d}"
     return f"{sid}-{base}" if sid else base
 
 

@@ -2,6 +2,8 @@
 find planted near-duplicates (and not everything else); LSH ANN must reach
 reasonable recall vs brute force."""
 
+import re
+
 import pytest
 from pyspark.sql import Row, functions as F
 
@@ -209,12 +211,23 @@ def test_det_lsh_signature_matches_python_reference(spark):
         assert got[r.vec_id] == keys
 
 
-def test_shingle_explode_matches_shingle_rows_multiset(spark):
-    """r10 perf surgery: minhash/shingle consumers moved from the
-    window-LEAD shape (full token-row exchange + sort) to the
-    zero-exchange array shape. The contract is the identical (doc, s)
-    MULTISET — duplicates kept, short docs emit their full token string
-    once, zero-token docs emit nothing."""
+def _shingle_rows_py(rows, n: int) -> list[tuple[int, str]]:
+    """Reference shingling in plain Python: normalize (lowercase, every
+    non-[a-z0-9] non-space char to a space), split, then every n-token
+    window; a doc with 1..n-1 tokens emits its full token string."""
+    out = []
+    for doc, text in rows:
+        toks = re.sub(r"[^a-z0-9\s]", " ", text.lower(), flags=re.ASCII).split()
+        if 0 < len(toks) < n:
+            out.append((doc, " ".join(toks)))
+        out += [(doc, " ".join(toks[i : i + n])) for i in range(len(toks) - n + 1)]
+    return out
+
+
+def test_shingle_explode_matches_reference_multiset(spark):
+    """``shingle_explode`` emits the reference (doc, s) MULTISET —
+    duplicates kept, short docs emit their full token string once,
+    zero-token docs emit nothing."""
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     edge = spark.createDataFrame(
         [
@@ -228,10 +241,7 @@ def test_shingle_explode_matches_shingle_rows_multiset(spark):
         schema="doc_id long, text string",
     )
     corpus = docs.unionByName(edge)
-    a = sorted(
-        (r.doc, r.s)
-        for r in dedup.shingle_rows(corpus, "text", "doc_id", 3).collect()
-    )
+    a = sorted(_shingle_rows_py(corpus.collect(), 3))
     b = sorted(
         (r.doc, r.s)
         for r in dedup.shingle_explode(corpus, "text", "doc_id", 3).collect()

@@ -8,11 +8,14 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from shifts_etl_spark.operators import flatten
+from shifts_etl_spark.pipeline import load_batch
 from shifts_etl_spark.sinks.jdbc import JdbcWriter
+from shifts_etl_spark.sinks.staged import StagedWriter
 from shifts_etl_spark.sources.generator import generate_shift_docs, paginate
 from shifts_etl_spark.sources.pages import docs_from_pages
 
 DERBY_DRIVER = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
+FLAT_TABLES = ["shifts", "breaks", "allowances", "award_interpretations"]
 
 
 @pytest.fixture()
@@ -21,13 +24,14 @@ def writer(spark, tmp_path):
     return JdbcWriter(spark, url, batchsize=100)
 
 
-def test_jdbc_write_batch_golden_counts(spark, writer):
-    """Full flatten → JDBC load: the four tables land with the reference's
-    golden counts and survive a read back through spark.read.jdbc."""
+def test_jdbc_write_batch_golden_counts(spark, writer, tmp_path):
+    """``load_batch`` into JDBC: the four tables land with the reference's
+    golden counts, survive a read back through spark.read.jdbc, and the
+    KPIs over them equal those of the same load through StagedWriter."""
     docs = docs_from_pages(spark, paginate(generate_shift_docs(360), 50))
-    tables = flatten.flatten_all(docs)
-    writer.write_batch(tables, batch_id="page0")
-    got = {t: writer.read_table(spark, t).count() for t in tables}
+    batch, kpis = load_batch(spark, docs, writer, batch_id="page0", anchor_date="2023-02-01")
+    assert batch == "page0"
+    got = {t: writer.read_table(spark, t).count() for t in FLAT_TABLES}
     assert got == {
         "shifts": 360,
         "breaks": 242,
@@ -35,9 +39,11 @@ def test_jdbc_write_batch_golden_counts(spark, writer):
         "award_interpretations": 582,
     }
     # values, not just counts: one shift row survives the round-trip intact
-    src = tables["shifts"].orderBy("shift_id").first()
+    src = flatten.flatten_all(docs)["shifts"].orderBy("shift_id").first()
     back = writer.read_table(spark, "shifts").orderBy("shift_id").first()
     assert back == src
+    _, staged = load_batch(spark, docs, StagedWriter(tmp_path / "out"), anchor_date="2023-02-01")
+    assert sorted(kpis.collect()) == sorted(staged.collect())
 
 
 def test_jdbc_failed_batch_leaves_targets_untouched(spark, writer):

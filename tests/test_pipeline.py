@@ -286,19 +286,28 @@ def test_run_etl_counts_cover_all_batches(spark, tmp_path):
 
 
 def test_read_table_schema_matches_inference(spark, tmp_path):
+    """The schema stored with a batch gives the dtypes that inference
+    from its parquet footers gives."""
     out = tmp_path / "out"
     run_etl(spark, pages=paginate(GOLDEN_DOCS, 5), output_dir=out, anchor_date="2024-01-15")
     w = StagedWriter(out)
     for t in OUTPUT_TABLES:
-        given = w.read_table(spark, t, schema=TABLE_SCHEMAS[t])
-        assert given.dtypes == w.read_table(spark, t).dtypes, t
+        inferred = spark.read.parquet(*map(str, (out / t).glob("batch=*")))
+        assert w.read_table(spark, t).dtypes == inferred.dtypes, t
 
 
-def test_read_table_infers_schema_outside_table_schemas(spark, tmp_path):
+def test_read_table_infers_schema_outside_table_schemas(spark, tmp_path, count_jobs):
+    """A table outside TABLE_SCHEMAS reads back with the schema stored
+    with its batch: no footer-inference job. A batch without a stored
+    schema (written before schemas were stored) is read by inference."""
     w = StagedWriter(tmp_path / "out")
-    w.write_batch({"curated": spark.createDataFrame([(1, "a")], "doc_id long, text string")})
+    bid = w.write_batch({"curated": spark.createDataFrame([(1, "a")], "doc_id long, text string")})
     assert "curated" not in TABLE_SCHEMAS
-    assert w.read_table(spark, "curated").dtypes == [("doc_id", "bigint"), ("text", "string")]
+    assert count_jobs(lambda: w.read_table(spark, "curated")) == 0
+    dtypes = [("doc_id", "bigint"), ("text", "string")]
+    assert w.read_table(spark, "curated").dtypes == dtypes
+    (tmp_path / "out" / "curated" / f"batch={bid}" / "_schema.json").unlink()
+    assert w.read_table(spark, "curated").dtypes == dtypes
 
 
 def test_clear_data(spark, tmp_path):

@@ -37,22 +37,6 @@ def test_hard_negative_topk_empty_input_returns_empty_frame(spark):
 
 
 # --------------------------------------------------------------------------
-# ivf stride sentinel (ADVICE r9 #3): explicit-default is now
-# distinguishable from unset — ANY explicit stride with n_cells raises
-# --------------------------------------------------------------------------
-
-def test_ivf_explicit_stride_raises_even_at_legacy_default(spark):
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    with pytest.raises(ValueError, match="centroid_stride is ignored"):
-        simsearch.ivf_topk(emb, [0, 1], centroid_stride=16)
-    with pytest.raises(ValueError, match="centroid_stride is ignored"):
-        simsearch.ivf_probe_sweep(emb, [0, 1], centroid_stride=16)
-    # unset stride + legacy mode still defaults to the historical 16
-    legacy = simsearch.ivf_topk(emb, [0, 1], k=3, n_cells=None)
-    assert legacy.count() > 0
-
-
-# --------------------------------------------------------------------------
 # minhash_lsh_pairs shuffle contract (VERDICT r9 #5): the banded
 # self-join carries (band, band_hash, doc) only; signatures re-attach by
 # id after the pair distinct — and the results are unchanged

@@ -3151,17 +3151,15 @@ def test_ivf_probe_sweep_monotone_recall(spark):
     top-k (recall 1) because every cell is probed."""
     from shifts_etl_spark.operators.simsearch import ivf_probe_sweep
 
-    # 32 vectors on a ring -> ids 0 and 16 are the stride-16 centroids
+    # 32 vectors on a ring, 2 cells: n_probe=2 probes every cell
     import math
     rows = [Row(vec_id=i,
                 embedding=[math.cos(2 * math.pi * i / 32),
                            math.sin(2 * math.pi * i / 32)],
                 label=i % 2) for i in range(32)]
     emb = spark.createDataFrame(rows)
-    # n_cells=None pins the legacy stride sample this test is built
-    # around (ids 0 and 16 as centroids); the r8 default is fixed cells
-    out = ivf_probe_sweep(emb, [0, 5], k=3, centroid_stride=16,
-                          probes=(1, 2), n_cells=None).collect()
+    out = ivf_probe_sweep(emb, [0, 5], k=3, probes=(1, 2),
+                          n_cells=2).collect()
     per = {}
     for r in out:
         per.setdefault(r.query_id, {})[r.n_probe] = r

@@ -27,12 +27,6 @@ def test_ivf_topk_fixed_cells_default_and_guard(spark):
     assert set(per_q) == set(qids)
     for ranks in per_q.values():
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
-    # pre-flip call pattern fails loudly instead of silently running cells
-    with pytest.raises(ValueError, match="centroid_stride is ignored"):
-        simsearch.ivf_topk(emb, qids, centroid_stride=8)
-    # the legacy stride sample stays opt-in
-    legacy = simsearch.ivf_topk(emb, qids, k=5, n_cells=None)
-    assert legacy.count() > 0
 
 
 def test_block_lsh_pairs_stay_within_block_and_under_brute(spark):

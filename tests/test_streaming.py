@@ -6,6 +6,7 @@ import json
 import pytest
 from pyspark.errors import StreamingQueryException
 
+from shifts_etl_spark.operators import quality
 from shifts_etl_spark.sinks.staged import StagedWriter
 from shifts_etl_spark.sources.generator import generate_shift_docs
 from shifts_etl_spark.streaming import stream_etl, streaming_event_counts
@@ -25,6 +26,40 @@ def test_stream_etl_drains_files(spark, tmp_path):
     assert w.read_table(spark, "shifts").count() == 12
     n_breaks = sum(len(d["breaks"]) for d in docs)
     assert w.read_table(spark, "breaks").count() == n_breaks
+
+
+def _last_job_id(spark) -> int:
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+
+def test_stream_etl_epoch_job_count(spark, tmp_path, monkeypatch):
+    """One 3-file, 12-doc epoch with the KPI refresh runs 12 jobs, 2 of
+    them in validation: the epoch goes through run_etl's load path and
+    caches nothing (against an unbuilt cache of the micro-batch AQE
+    submits one cache job per scan of it: 22 jobs, 12 in validation).
+    The stream thread sets its own job group, so jobs are counted by id."""
+    docs = generate_shift_docs(days=12)
+    inp = tmp_path / "in"
+    inp.mkdir()
+    for i in range(0, 12, 4):
+        with open(inp / f"page{i}.json", "w") as f:
+            for d in docs[i : i + 4]:
+                f.write(json.dumps(d) + "\n")
+    validation = []
+    validate = quality.validate_tables
+
+    def counted(tables):
+        first = _last_job_id(spark)
+        validate(tables)
+        validation.append(_last_job_id(spark) - first)
+
+    monkeypatch.setattr(quality, "validate_tables", counted)
+    first = _last_job_id(spark)
+    stream_etl(spark, inp, tmp_path / "out", tmp_path / "ckpt",
+               available_now=True, refresh_kpis=True, anchor_date="2023-02-01")
+    assert validation == [2]
+    assert _last_job_id(spark) - first == 12
 
 
 def test_stream_etl_rejects_epoch_with_duplicate_key(spark, tmp_path):
