@@ -1,17 +1,13 @@
-"""Imports, the `_t` table loader, and helpers/constants used by more than one family module."""
+"""Imports and the helpers/constants used by more than one family module."""
 
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Window, functions as F
 
 from ...operators import bloom, clustering, countmin, curation, dedup, funnel, heavyhitters, multimodal, profile, simsearch, textstats, theta
 from ...operators.profile import profile_table
-from ...sources.tables import load_table as _t_impl
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return _t_impl(spark, sf_dir, name)
+from ...sources.tables import load_table as _t
 
 
 # --------------------------------------------------------------------------

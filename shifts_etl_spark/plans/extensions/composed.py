@@ -54,12 +54,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ...operators import dedup, profile, simsearch
+from ...sources.tables import load_table as _t
 from ._shared import (
     _STOP_EN,
     _Y_SPLIT_CASE,
     _Y_SPLIT_INNER,
     X67_SQL,
-    _t,
 )
 from .ann import (
     QUERY_IDS,

@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ...operators import bloom, clustering, countmin, curation, dedup, funnel, heavyhitters, multimodal, profile, simsearch, textstats, theta
 from ...operators.profile import profile_table
-from ...sources.tables import load_table as _t_impl
+from ...sources.tables import load_table as _t
 from ._shared import (
     X3_SQL,
     X67_SQL,
@@ -19,7 +19,6 @@ from ._shared import (
     _sign_band_ctes,
     _kmeans_cells_sql,
     _split_docs,
-    _t,
 )
 
 

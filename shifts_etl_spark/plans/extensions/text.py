@@ -7,14 +7,13 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ...operators import bloom, clustering, countmin, curation, dedup, funnel, heavyhitters, multimodal, profile, simsearch, textstats, theta
 from ...operators.profile import profile_table
-from ...sources.tables import load_table as _t_impl
+from ...sources.tables import load_table as _t
 from ._shared import (
     _STOP_EN,
     _X67_NORM,
     _Y_SPLIT_CASE,
     _Y_SPLIT_INNER,
     _split_docs,
-    _t,
 )
 
 

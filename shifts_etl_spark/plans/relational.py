@@ -15,14 +15,10 @@ Determinism rules applied throughout:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Window, functions as F
 
 from ..operators.windows import scalable_running_sum, session_window, sliding_window, tumbling_window
-from ..sources.tables import load_table as _t_impl
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return _t_impl(spark, sf_dir, name)
+from ..sources.tables import load_table as _t
 
 
 # --------------------------------------------------------------------------

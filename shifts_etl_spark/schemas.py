@@ -148,16 +148,79 @@ FOREIGN_KEYS = {  # child -> (key, parent)
     "award_interpretations": ("shift_id", "shifts"),
 }
 
-# Driver testdata tables (TESTDATA.md / FIXTURES.md §6)
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+# --------------------------------------------------------------------------
+# Driver testdata tables (TESTDATA.md / FIXTURES.md §6). load_table reads
+# them with these schemas, so no scan infers one from the parquet footers.
+# All fields are nullable, as a file scan reports them. Timestamps are
+# stored as µs without UTC adjustment: o_orderdate and l_shipdate read as
+# TIMESTAMP_NTZ, as inferred; events.ts reads as TIMESTAMP, because the
+# range/session operators do epoch-seconds arithmetic on it and NTZ does
+# not cast to numeric. The session time zone is UTC, so that reading holds
+# the stored naive values.
+# --------------------------------------------------------------------------
+
+
+def _nullable(*cols: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(n, t, True) for n, t in cols])
+
+
+_INT, _LONG, _DOUBLE, _STR = T.IntegerType(), T.LongType(), T.DoubleType(), T.StringType()
+
+TESTDATA_SCHEMAS = {
+    "region": _nullable(("r_regionkey", _INT), ("r_name", _STR)),
+    "nation": _nullable(("n_nationkey", _INT), ("n_name", _STR), ("n_regionkey", _INT)),
+    "customer": _nullable(
+        ("c_custkey", _LONG),
+        ("c_name", _STR),
+        ("c_nationkey", _INT),
+        ("c_acctbal", _DOUBLE),
+        ("c_mktsegment", _STR),
+    ),
+    "supplier": _nullable(
+        ("s_suppkey", _LONG), ("s_name", _STR), ("s_nationkey", _INT), ("s_acctbal", _DOUBLE)
+    ),
+    "part": _nullable(
+        ("p_partkey", _LONG),
+        ("p_name", _STR),
+        ("p_brand", _STR),
+        ("p_type", _STR),
+        ("p_size", _INT),
+        ("p_retailprice", _DOUBLE),
+    ),
+    "orders": _nullable(
+        ("o_orderkey", _LONG),
+        ("o_custkey", _LONG),
+        ("o_orderstatus", _STR),
+        ("o_totalprice", _DOUBLE),
+        ("o_orderdate", T.TimestampNTZType()),
+        ("o_orderpriority", _STR),
+    ),
+    "lineitem": _nullable(
+        ("l_orderkey", _LONG),
+        ("l_partkey", _LONG),
+        ("l_suppkey", _LONG),
+        ("l_linenumber", _INT),
+        ("l_quantity", _DOUBLE),
+        ("l_extendedprice", _DOUBLE),
+        ("l_discount", _DOUBLE),
+        ("l_tax", _DOUBLE),
+        ("l_returnflag", _STR),
+        ("l_linestatus", _STR),
+        ("l_shipdate", T.TimestampNTZType()),
+    ),
+    "events": _nullable(
+        ("event_id", _LONG),
+        ("ts", T.TimestampType()),
+        ("user_id", _LONG),
+        ("event_type", _STR),
+        ("value", _DOUBLE),
+        ("props", _STR),
+    ),
+    "documents": _nullable(
+        ("doc_id", _LONG), ("text", _STR), ("lang", _STR), ("source", _STR), ("n_chars", _LONG)
+    ),
+    "embeddings": _nullable(
+        ("vec_id", _LONG), ("embedding", T.ArrayType(T.FloatType(), True)), ("label", _INT)
+    ),
+}
+TESTDATA_TABLES = tuple(TESTDATA_SCHEMAS)

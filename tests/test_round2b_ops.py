@@ -17,6 +17,7 @@ from shifts_etl_spark.plans.relational import (
     q34_waiting_orders,
     q35_inactive_big_balance,
 )
+from shifts_etl_spark.schemas import TESTDATA_SCHEMAS
 from shifts_etl_spark.sources.tables import load_table
 
 SF001 = "/root/testdata/sf0.001"
@@ -213,15 +214,18 @@ def test_within_label_topk_planted(spark, tmp_path):
     from shifts_etl_spark.plans.extensions import x51_within_label_topk
 
     rows = [
-        Row(vec_id=1, embedding=[1.0, 0.0], label="a"),
-        Row(vec_id=2, embedding=[1.0, 0.0], label="a"),   # clone of 1
-        Row(vec_id=3, embedding=[0.0, 1.0], label="a"),
-        Row(vec_id=4, embedding=[1.0, 0.0], label="b"),   # same dir, other label
-        Row(vec_id=5, embedding=[0.6, 0.8], label="b"),
+        Row(vec_id=1, embedding=[1.0, 0.0], label=0),
+        Row(vec_id=2, embedding=[1.0, 0.0], label=0),   # clone of 1
+        Row(vec_id=3, embedding=[0.0, 1.0], label=0),
+        Row(vec_id=4, embedding=[1.0, 0.0], label=1),   # same dir, other label
+        Row(vec_id=5, embedding=[0.6, 0.8], label=1),
     ]
-    spark.createDataFrame(rows).write.parquet(f"{tmp_path}/embeddings.parquet")
+    # written with the contract schema load_table reads (float vectors, int labels)
+    spark.createDataFrame(rows, TESTDATA_SCHEMAS["embeddings"]).write.parquet(
+        f"{tmp_path}/embeddings.parquet"
+    )
     out = x51_within_label_topk(spark, str(tmp_path)).collect()
-    top_a = [r for r in out if r.label == "a" and r.rank == 1][0]
+    top_a = [r for r in out if r.label == 0 and r.rank == 1][0]
     assert (top_a.id_a, top_a.id_b, top_a.cosine) == (1, 2, 1.0)
     assert all({r.id_a, r.id_b} != {1, 4} for r in out)  # no cross-label pair
 
