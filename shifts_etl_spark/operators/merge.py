@@ -48,12 +48,13 @@ def merge_into(
 ) -> int:
     """MERGE into a staged-sink table in place: read current → merge →
     one replace commit, which deletes the old batches only after the
-    merged batch is logged. Returns the post-merge row count."""
+    merged batch is logged. Returns the post-merge row count, which the
+    write logged: no job re-reads the table."""
     writer = StagedWriter(root)
     current = writer.read_table(spark, table)
     merged = merge_dataframes(current, updates, key, delete_col)
     writer.write_batch({table: merged}, replace=True)
-    return writer.read_table(spark, table).count()
+    return writer.row_count(table)
 
 
 def scd2_from_changelog(

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import datetime as dt
 from collections.abc import Iterable
-from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -40,7 +39,8 @@ def run_etl(
     """E1 — full pipeline. Provide either ``pages`` (iterable of page dicts,
     e.g. from sources.generator.paginate) or ``api_url`` (paginated HTTP).
 
-    Returns row counts per persisted table. Raises quality.IntegrityError
+    Returns row counts per persisted table, summed from the counts the
+    writes logged (``StagedWriter.row_count``). Raises quality.IntegrityError
     (nothing persisted) on constraint violations — the rollback semantics of
     reference etl/tests/test_shift_data_processor.py:242-300 at job
     granularity.
@@ -54,18 +54,8 @@ def run_etl(
     docs = pages_src.docs_from_pages(spark, pages)
     batch, kpis = load_batch(spark, docs, writer, anchor_date=anchor_date)
     writer.write_batch({"kpis": kpis}, batch_id=f"{batch}-kpis")
-
-    # One aggregate over every committed batch of all five tables,
-    # instead of a count job pair per table.
-    rows = [
-        writer.read_table(spark, name).select(F.lit(name).alias("table"))
-        for name in OUTPUT_TABLES
-    ]
-    union = reduce(DataFrame.unionByName, rows)
-    counts = dict.fromkeys(OUTPUT_TABLES, 0)
-    for r in union.groupBy("table").count().collect():
-        counts[r["table"]] = r["count"]
-    return counts
+    # each write logged its row count: summing them re-reads no table
+    return {name: writer.row_count(name) for name in OUTPUT_TABLES}
 
 
 def load_batch(

@@ -13,6 +13,11 @@ and a commit log:
   3. the batch commits when its line is appended to <root>/_commits.log;
      any failure before that deletes the staged and promoted dirs
 
+A log line is ``<batch>\t<table>:<rows>,...[\treplace]``, tables sorted by
+name, e.g. ``3f2a\tbreaks:20,shifts:28``. Each table's row count is
+observed during its own write (``DataFrame.observe``), so the count costs
+no job, and ``row_count`` sums it over the batches a read resolves.
+
 The log alone decides what a table holds: ``read_table`` resolves the
 batches of the current state and of an ``as_of`` snapshot the same way, so
 readers see only logged batches — never a dir left by a crash mid-promote.
@@ -40,7 +45,7 @@ import shutil
 import uuid
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 
@@ -71,8 +76,13 @@ class StagedWriter:
         staging = self.root / "_staging" / batch_id
         promoted = []
         try:
+            rows = {}
             for name, df in tables.items():
-                df.write.mode("overwrite").parquet(str(staging / name))
+                obs = Observation()
+                df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                    "overwrite"
+                ).parquet(str(staging / name))
+                rows[name] = obs.get["rows"]  # set by the write's own job
                 (staging / name / "_schema.json").write_text(df.schema.json())
             for name in tables:
                 dest = self._batch_dir(name, batch_id)
@@ -81,9 +91,10 @@ class StagedWriter:
                     shutil.rmtree(dest)
                 (staging / name).rename(dest)
                 promoted.append(dest)
+            counts = ",".join(f"{name}:{n}" for name, n in sorted(rows.items()))
             mark = "\treplace" if replace else ""
             with open(self.root / "_commits.log", "a") as log:
-                log.write(f"{batch_id}\t{','.join(sorted(tables))}{mark}\n")
+                log.write(f"{batch_id}\t{counts}{mark}\n")
         except BaseException:
             for d in promoted:
                 shutil.rmtree(d, ignore_errors=True)
@@ -98,8 +109,9 @@ class StagedWriter:
                         shutil.rmtree(d, ignore_errors=True)
         return batch_id
 
-    def _log(self) -> list[tuple[str, set[str], bool]]:
-        """(batch_id, tables written, replaced?) per commit, oldest first."""
+    def _log(self) -> list[tuple[str, dict[str, int], bool]]:
+        """(batch_id, rows per table written, replaced?) per commit,
+        oldest first."""
         log = self.root / "_commits.log"
         if not log.exists():
             return []
@@ -107,28 +119,38 @@ class StagedWriter:
         for ln in log.read_text().splitlines():
             if ln:
                 bid, tabs, *mark = ln.split("\t")
-                out.append((bid, set(tabs.split(",")), mark == ["replace"]))
+                pairs = (t.rsplit(":", 1) for t in tabs.split(",") if t)
+                rows = {t: int(n) for t, n in pairs}
+                out.append((bid, rows, mark == ["replace"]))
         return out
 
     def commits(self) -> list[tuple[str, set[str]]]:
         """(batch_id, tables written) per commit, oldest first."""
-        return [(bid, tabs) for bid, tabs, _ in self._log()]
+        return [(bid, set(rows)) for bid, rows, _ in self._log()]
 
     def _batch_dir(self, name: str, batch_id: str) -> Path:
         return self.root / name / f"batch={batch_id}"
 
-    def _snapshot(self, name: str, as_of: str | None = None) -> list[str]:
-        """Batch ids ``name`` holds as of commit ``as_of`` (default: the
-        latest): those committed since its last replace, oldest first."""
-        live: list[str] = []
-        for bid, tabs, replace in self._log():
-            if name in tabs:
-                live = [bid] if replace else [*live, bid]
+    def _snapshot(self, name: str, as_of: str | None = None) -> dict[str, int]:
+        """Batch id -> rows of ``name``, for the batches it holds as of
+        commit ``as_of`` (default: the latest): those committed since its
+        last replace, oldest first."""
+        live: dict[str, int] = {}
+        for bid, rows, replace in self._log():
+            if name in rows:
+                if replace:
+                    live = {}
+                live[bid] = rows[name]
             if bid == as_of:
                 return live
         if as_of is not None:
             raise ValueError(f"unknown commit {as_of!r}")
         return live
+
+    def row_count(self, name: str, as_of: str | None = None) -> int:
+        """Rows ``read_table(spark, name, as_of)`` returns, from the log
+        alone: no Spark job."""
+        return sum(self._snapshot(name, as_of).values())
 
     def read_table(
         self, spark: SparkSession, name: str, as_of: str | None = None

@@ -1,6 +1,8 @@
+import gc
 import uuid
 
 import pytest
+from py4j.clientserver import ClientServerConnection
 
 from shifts_etl_spark.session import get_spark
 
@@ -42,6 +44,32 @@ def count_tasks(spark):
         return sum(s.numCompletedTasks for s in stages if s)
 
     return count
+
+
+@pytest.fixture
+def count_py4j():
+    """``count_py4j(fn)`` runs ``fn`` and returns the Py4J commands it
+    sent, one per round trip to the JVM
+    (``ClientServerConnection.send_command``). Garbage is collected first,
+    so the commands that free earlier work's Java objects fall outside."""
+
+    def sent(fn) -> list[str]:
+        gc.collect()
+        commands = []
+        send = ClientServerConnection.send_command
+
+        def record(self, command):
+            commands.append(command)
+            return send(self, command)
+
+        ClientServerConnection.send_command = record
+        try:
+            fn()
+        finally:
+            ClientServerConnection.send_command = send
+        return commands
+
+    return sent
 
 
 # Tests measured >= ~10 s in the full-suite profile (r11; 29m17s total,

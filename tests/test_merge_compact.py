@@ -309,3 +309,73 @@ def test_snapshot_diff_between_commits(spark, tmp_path):
     # multiset: the duplicate 'a' row is not cancelled by a single copy
     fwd_all = snapshot_diff(spark, w, "kpis", b2, b2).count()
     assert fwd_all == 0
+
+
+def _assert_logged_counts_are_scans(spark, w, tables, as_of=None):
+    for t in tables:
+        assert w.row_count(t, as_of) == w.read_table(spark, t, as_of).count(), (t, as_of)
+
+
+def test_logged_counts_equal_scans_in_every_writer_path(spark, tmp_path):
+    """The row counts the commit log holds sum to what a scan of the
+    resolved batches returns after appends, a replayed batch id, an empty
+    and a zero-partition batch, compaction and MERGE."""
+    import threading
+
+    from shifts_etl_spark.pipeline import OUTPUT_TABLES
+
+    out = tmp_path / "out"
+    w = StagedWriter(out)
+    first = run_etl(spark, pages=paginate(generate_shift_docs(days=6), 3), output_dir=out,
+                    anchor_date="2023-02-01")
+    counts = run_etl(spark, pages=paginate(generate_shift_docs(days=5, seed=7), 2),
+                     output_dir=out, anchor_date="2023-02-01")
+    assert counts == {t: w.read_table(spark, t).count() for t in OUTPUT_TABLES}
+    assert counts["kpis"] == first["kpis"] * 2 == 12
+    first_batch = w.commits()[0][0]
+    _assert_logged_counts_are_scans(spark, w, OUTPUT_TABLES, as_of=first_batch)
+    assert w.row_count("shifts", first_batch) == first["shifts"]
+
+    shifts = w.read_table(spark, "shifts")
+    w.write_batch({"shifts": shifts}, batch_id=first_batch)  # replay: no new rows
+    assert w.row_count("shifts") == counts["shifts"]
+
+    w.write_batch({"shifts": spark.createDataFrame([], shifts.schema)})
+    # no partition at all: the write's observation still reports 0, not a hang
+    no_parts = spark.createDataFrame(spark.sparkContext.emptyRDD(), shifts.schema)
+    done = threading.Thread(target=w.write_batch, args=({"shifts": no_parts},), daemon=True)
+    done.start()
+    done.join(120)
+    assert not done.is_alive()
+    assert len(w.commits()) == 6
+    assert w.row_count("shifts") == counts["shifts"]
+    _assert_logged_counts_are_scans(spark, w, ["shifts"])
+
+    assert w.compact(spark, "breaks") == 2
+    _assert_logged_counts_are_scans(spark, w, ["breaks"])
+
+    updates = shifts.limit(2).withColumn("shift_id", F.concat("shift_id", F.lit("-new")))
+    n = merge_into(spark, str(out), "shifts", updates, "shift_id")
+    assert n == w.row_count("shifts") == counts["shifts"] + 2
+    _assert_logged_counts_are_scans(spark, w, OUTPUT_TABLES)
+
+
+def test_logged_counts_equal_scans_after_stream_epochs(spark, tmp_path):
+    """Two stream_etl epochs (4 files, then 2) append four tables each and
+    replace the KPI batch: the logged counts still equal the scans."""
+    from shifts_etl_spark.pipeline import OUTPUT_TABLES
+
+    docs = generate_shift_docs(days=12)
+    inp = tmp_path / "in"
+    inp.mkdir()
+    for i in range(0, 12, 2):
+        with open(inp / f"p{i:02d}.json", "w") as f:
+            for d in docs[i : i + 2]:
+                f.write(json.dumps(d) + "\n")
+    out = tmp_path / "stream"
+    stream_etl(spark, inp, out, tmp_path / "ck", available_now=True, refresh_kpis=True,
+               anchor_date="2023-02-01")
+    w = StagedWriter(out)
+    assert len(w.commits()) == 4  # two epochs, each a load and a KPI replace
+    assert w.row_count("shifts") == 12 and w.row_count("kpis") == 6
+    _assert_logged_counts_are_scans(spark, w, OUTPUT_TABLES)
