@@ -10,9 +10,11 @@ which combined with the staged atomic sink gives the reference's
 Scale notes: ``validate_tables`` folds every PK and FK check into one
 shuffle (each table scanned once into one (check, key, role) row per
 check it takes part in, the four unioned and grouped on (check, key), with
-map-side partial counts) and one ``isEmpty`` over the violating groups.
-Only when that finds something do the per-check functions re-run in
-order, to name the first broken constraint and sample its keys.
+map-side partial counts) and takes the first five violating groups in
+(check, key) order with one action. The lowest violating check names the
+broken constraint, as a check-by-check pass in listing order would, and
+its groups give the sample keys, so clean and failing batches alike run
+that one job.
 """
 
 from __future__ import annotations
@@ -27,53 +29,39 @@ class IntegrityError(Exception):
     psycopg2.IntegrityError in the reference rollback test."""
 
 
-def duplicate_keys(df: DataFrame, key: str) -> DataFrame:
-    return (
-        df.groupBy(key).agg(F.count(F.lit(1)).alias("n")).where(F.col("n") > 1)
-    )
-
-
-def check_unique(df: DataFrame, key: str, table: str = "?") -> None:
-    dups = duplicate_keys(df, key)
-    if not dups.isEmpty():
-        sample = [r[key] for r in dups.limit(5).collect()]
-        raise IntegrityError(
-            f"duplicate primary key in {table}.{key}: {sample}"
-        )
-
-
-def orphan_rows(child: DataFrame, key: str, parent: DataFrame) -> DataFrame:
-    return child.join(
-        F.broadcast(parent.select(key).distinct()), key, "left_anti"
-    )
-
-
-def check_foreign_key(
-    child: DataFrame, key: str, parent: DataFrame, table: str = "?"
-) -> None:
-    orphans = orphan_rows(child, key, parent)
-    if not orphans.isEmpty():
-        sample = [r[key] for r in orphans.select(key).limit(5).collect()]
-        raise IntegrityError(f"orphan foreign key in {table}.{key}: {sample}")
-
-
 # Row roles of the folded check: a PK row, or one side of an FK edge.
 _PK, _CHILD, _PARENT = 0, 1, 2
+
+
+def _constraints(tables: dict[str, DataFrame]) -> list[tuple[int, str, str, str | None]]:
+    """(check id, table, key, parent table or None for a PK) per
+    constraint the tables take part in, PKs then FKs in schemas.py
+    listing order. Check ids number the parts of the folded check: a PK
+    is one part, an FK two (its child and parent sides) and takes the
+    first one's number."""
+    from ..schemas import FOREIGN_KEYS, PRIMARY_KEYS
+
+    out, n_parts = [], 0
+    for name, pk in PRIMARY_KEYS.items():
+        if name in tables:
+            out.append((n_parts, name, pk, None))
+            n_parts += 1
+    for name, (key, parent) in FOREIGN_KEYS.items():
+        if name in tables and parent in tables:
+            out.append((n_parts, name, key, parent))
+            n_parts += 2
+    return out
 
 
 def violations(tables: dict[str, DataFrame]) -> DataFrame | None:
     """(check, key) groups that break a PK or FK of the 4 tables: more
     than one PK row, or child rows with no parent row. A NULL child key is
-    an orphan, as in the left-anti join of :func:`orphan_rows`. Keys are
-    compared as strings (every PK/FK column in schemas.py is one). None
-    when ``tables`` holds no constrained table."""
-    from ..schemas import FOREIGN_KEYS, PRIMARY_KEYS
-
+    an orphan, as in a left-anti join. Keys are compared as strings (every
+    PK/FK column in schemas.py is one). None when ``tables`` holds no
+    constrained table."""
     # per table, one (check, key, role) struct per check it takes part in,
     # as SQL: one selectExpr per table is a few Py4J calls, where building
-    # the same structs from Column calls took four times as many. Check ids
-    # number the parts in listing order: a PK is one part, an FK two (its
-    # child and parent sides) and takes the first one's number
+    # the same structs from Column calls took four times as many
     rows: dict[str, list[str]] = {}
 
     def add(name: str, check: int, key: str, role: int) -> None:
@@ -81,16 +69,12 @@ def violations(tables: dict[str, DataFrame]) -> DataFrame | None:
             f"struct({check} AS check, CAST(`{key}` AS STRING) AS key, {role} AS role)"
         )
 
-    n_parts = 0
-    for name, pk in PRIMARY_KEYS.items():
-        if name in tables:
-            add(name, n_parts, pk, _PK)
-            n_parts += 1
-    for name, (key, parent) in FOREIGN_KEYS.items():
-        if name in tables and parent in tables:
-            add(name, n_parts, key, _CHILD)
-            add(parent, n_parts, key, _PARENT)
-            n_parts += 2
+    for check, name, key, parent in _constraints(tables):
+        if parent is None:
+            add(name, check, key, _PK)
+        else:
+            add(name, check, key, _CHILD)
+            add(parent, check, key, _PARENT)
     if not rows:
         return None
     union = reduce(
@@ -114,22 +98,24 @@ def violations(tables: dict[str, DataFrame]) -> DataFrame | None:
 
 
 def validate_tables(tables: dict[str, DataFrame]) -> None:
-    """Run the reference's constraint set over the 4 flattened tables: one
-    shuffle and one ``isEmpty`` on the clean path. On a violation the
-    per-check functions re-run in order, so the error names the first
-    broken constraint exactly as a check-by-check pass would."""
-    from ..schemas import FOREIGN_KEYS, PRIMARY_KEYS
-
+    """Run the reference's constraint set over the 4 flattened tables in
+    one job. The error names the first broken constraint in listing order
+    with up to five of its keys: a duplicate PK key once, an orphan FK key
+    once per orphan child row."""
     bad = violations(tables)
-    if bad is None or bad.isEmpty():
+    if bad is None:
         return
-    for name, pk in PRIMARY_KEYS.items():
-        if name in tables:
-            check_unique(tables[name], pk, name)
-    for name, (key, parent) in FOREIGN_KEYS.items():
-        if name in tables and parent in tables:
-            check_foreign_key(tables[name], key, tables[parent], name)
-    raise IntegrityError(f"integrity violation: {bad.limit(5).collect()}")
+    rows = bad.orderBy("check", "key").limit(5).collect()
+    if not rows:
+        return
+    check = rows[0]["check"]
+    _, name, key, parent = next(c for c in _constraints(tables) if c[0] == check)
+    rows = [r for r in rows if r["check"] == check]
+    if parent is None:
+        sample = [r["key"] for r in rows]
+        raise IntegrityError(f"duplicate primary key in {name}.{key}: {sample}")
+    sample = [r["key"] for r in rows for _ in range(min(r["n_child"], 5))][:5]
+    raise IntegrityError(f"orphan foreign key in {name}.{key}: {sample}")
 
 
 def k_anonymity_histogram(

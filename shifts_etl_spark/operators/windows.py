@@ -84,10 +84,9 @@ _NUMERIC_PREFIXES = (
 
 def scalable_running_sum(
     df: DataFrame,
-    order_col: str,
+    order_col: str | list[str],
     value_col,
     out_col: str = "running_sum",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Two-pass prefix sum — the 100 TB replacement for an ORDER BY-only
     window (which collapses to ONE partition, the reference's W1 hazard,
@@ -107,9 +106,11 @@ def scalable_running_sum(
     earlier repartitionByRange + spark_partition_id form cost a SECOND
     full-data exchange (hash by _pid after the range exchange — Catalyst
     cannot see that range partitions already cluster _pid); the bucket
-    expression keeps the data path to one exchange. Non-numeric order
-    columns (strings) fall back to that form. approxQuantile runs eagerly
-    at plan build (same pattern as layout.py's z-order buckets).
+    expression keeps the data path to one exchange. A non-numeric order
+    column (strings), or a LIST of order columns (a composite order such
+    as sinks/shards.py's (hash, id)), falls back to that form.
+    approxQuantile runs eagerly at plan build (same pattern as layout.py's
+    z-order buckets).
 
     ``value_col`` / ``out_col`` may be LISTS of equal length: all
     cumulative columns share one bucketing pass, one exchange, and one
@@ -128,8 +129,11 @@ def scalable_running_sum(
     if len(value_cols) != len(out_cols):
         raise ValueError("value_col and out_col lists must align")
 
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    dtype = dict(df.dtypes).get(order_col, "")
+    if isinstance(order_col, str):
+        order_cols, dtype = [order_col], dict(df.dtypes).get(order_col, "")
+    else:
+        order_cols, dtype = list(order_col), ""
+    n = df.sparkSession.sparkContext.defaultParallelism
     if dtype.startswith(_NUMERIC_PREFIXES) and n > 1:
         if dtype == "date":
             ord_num = F.unix_date(F.col(order_col)).cast("double")
@@ -152,17 +156,18 @@ def scalable_running_sum(
         keyed = with_ord.withColumn("_pid", bkt).drop("_ord")
     else:
         # fallback: physical range partitioning (orderable-but-unquantilable
-        # types); costs one extra data exchange for the _pid clustering.
+        # types, composite orders); costs one extra data exchange for the
+        # _pid clustering.
         # localCheckpoint: the driver-side totals fold below and the
         # returned plan must observe the SAME sampled range boundaries
         # (RangePartitioner re-samples per RDD instantiation), so pin the
         # keyed frame once; lineage truncation also spares the re-scan.
-        if num_partitions:
-            keyed = df.repartitionByRange(num_partitions, F.col(order_col))
-        else:
-            keyed = df.repartitionByRange(F.col(order_col))
-        keyed = keyed.withColumn("_pid", F.spark_partition_id()).localCheckpoint()
-    local_w = W.partitionBy("_pid").orderBy(order_col).rowsBetween(
+        keyed = (
+            df.repartitionByRange(*map(F.col, order_cols))
+            .withColumn("_pid", F.spark_partition_id())
+            .localCheckpoint()
+        )
+    local_w = W.partitionBy("_pid").orderBy(*order_cols).rowsBetween(
         W.unboundedPreceding, W.currentRow
     )
     with_local = keyed
@@ -179,9 +184,8 @@ def scalable_running_sum(
     # withColumn arithmetic, ...): projection collapse clones the derived
     # expression into the aggregate branch and the attribute dedup loses
     # it. The driver fold sidesteps the window entirely; its cost is
-    # bounded by cluster parallelism, never by data (same shape as
-    # sinks/shards.py). Pinned by tests/test_windows_profile.py's
-    # derived-order-column regression.
+    # bounded by cluster parallelism, never by data. Pinned by
+    # tests/test_windows_profile.py's derived-order-column regression.
     totals_df = keyed.groupBy("_pid").agg(
         *[F.sum(vc).alias(f"_total_{j}") for j, vc in enumerate(value_cols)]
     )

@@ -9,14 +9,14 @@ Scale design (100 TB):
     free of any driver-side permutation state. repartitionByRange on the
     hash gives the sorted-cluster layout; no ORDER BY-only window ever
     sees the data (the single-partition hazard, SURVEY.md §4).
-  - **Shard assignment is a two-pass prefix sum** (the w4 /
-    scalable_running_sum shape, inlined) over token counts in hash
-    order: shard_id = floor(cum_before / tokens_per_shard) — each shard
-    is a contiguous hash-order span, so assignment needs no global sort
-    beyond the one range exchange the prefix sum already pays. The
-    cross-bucket offsets fold on the driver over ≤ #partitions totals
-    rows (bounded by parallelism, never data) — no single-partition
-    window anywhere.
+  - **Shard assignment is a two-pass prefix sum**
+    (operators/windows.scalable_running_sum over the composite order
+    (hash, id)) of token counts in hash order: shard_id =
+    floor(cum_before / tokens_per_shard) — each shard is a contiguous
+    hash-order span, so assignment needs no global sort beyond the one
+    range exchange the prefix sum already pays. The cross-bucket offsets
+    fold on the driver over ≤ #partitions totals rows (bounded by
+    parallelism, never data) — no single-partition window anywhere.
   - **The write is partitionBy("shard_id")** — one directory per shard,
     each written by the tasks that already hold its rows. The manifest
     aggregates (docs, tokens, xor-of-row-hashes checksum) per shard in
@@ -34,6 +34,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.textstats import normalize_text, token_count
+from ..operators.windows import scalable_running_sum
 
 
 def assign_shards(
@@ -46,52 +47,19 @@ def assign_shards(
     """(id, n_tokens, shard_id) — deterministic hash-order spans of
     ~tokens_per_shard tokens. Boundary docs spill into the next shard
     (floor of cum-before), so every doc lands in exactly one shard."""
-    from pyspark.sql import Window as W
-
     sized = docs.select(
         F.col(id_col),
         token_count(normalize_text(F.col(text_col))).alias("n_tokens"),
         F.xxhash64(F.col(id_col), F.lit(seed)).alias("_shuffle_ord"),
     )
-    # two-pass prefix sum in hash order (the w4 shape, inlined): range
-    # exchange clusters the hash order; per-bucket window is local; the
-    # cross-bucket offsets are a DRIVER-side fold over <= #partitions
-    # totals rows (bounded by cluster parallelism, never by data) and
-    # rejoin as a broadcast literal frame.
-    keyed = (
-        sized.repartitionByRange(F.col("_shuffle_ord"), F.col(id_col))
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
+    summed = scalable_running_sum(sized, ["_shuffle_ord", id_col], "n_tokens", "cum")
+    return summed.select(
+        id_col,
+        "n_tokens",
+        F.floor((F.col("cum") - F.col("n_tokens")) / tokens_per_shard)
+        .cast("long")
+        .alias("shard_id"),
     )
-    try:
-        totals = sorted(
-            (r["_pid"], r["t"])
-            for r in keyed.groupBy("_pid").agg(F.sum("n_tokens").alias("t")).collect()
-        )
-        offsets, acc = [], 0
-        for pid, t in totals:
-            offsets.append((pid, acc))
-            acc += t
-        off = docs.sparkSession.createDataFrame(
-            offsets or [(0, 0)], "_pid int, _offset bigint"
-        )
-        w = W.partitionBy("_pid").orderBy("_shuffle_ord", id_col).rowsBetween(
-            W.unboundedPreceding, W.currentRow
-        )
-        summed = (
-            keyed.withColumn("_local", F.sum("n_tokens").over(w))
-            .join(F.broadcast(off), "_pid")
-            .withColumn("cum", F.col("_local") + F.col("_offset"))
-        )
-        return summed.select(
-            id_col,
-            "n_tokens",
-            F.floor((F.col("cum") - F.col("n_tokens")) / tokens_per_shard)
-            .cast("long")
-            .alias("shard_id"),
-        ).localCheckpoint()
-    finally:
-        keyed.unpersist()
 
 
 def write_training_shards(

@@ -23,7 +23,10 @@ batches of the current state and of an ``as_of`` snapshot the same way, so
 readers see only logged batches — never a dir left by a crash mid-promote.
 A read takes the schema stored with the newest batch it resolves (Spark's
 file listing skips ``_``-prefixed names), so no reader pays the job that
-infers a schema from parquet footers.
+infers a schema from parquet footers. Every batch a log in this line format
+names was written with its schema; a log in the older format without row
+counts does not parse (``clear_data`` starts a fresh one), so there is no
+reader for batches stored without one.
 A replace is a commit too: ``write_batch(replace=True)`` logs a line that
 marks its tables replaced, a read returns the batches since the table's
 last replace, and the batches it supersedes are deleted only after that
@@ -169,11 +172,8 @@ class StagedWriter:
             from ..schemas import TABLE_SCHEMAS
 
             return spark.createDataFrame([], TABLE_SCHEMAS[name])
-        stored = dirs[-1] / "_schema.json"
-        reader = spark.read
-        if stored.exists():  # a batch written before schemas were stored infers it
-            reader = reader.schema(StructType.fromJson(json.loads(stored.read_text())))
-        return reader.parquet(*map(str, dirs))
+        schema = json.loads((dirs[-1] / "_schema.json").read_text())
+        return spark.read.schema(StructType.fromJson(schema)).parquet(*map(str, dirs))
 
     def table_exists(self, name: str) -> bool:
         return bool(self._snapshot(name))

@@ -312,13 +312,6 @@ def _stream_identity(checkpoint_dir: str | Path) -> str:
     epochs can never silently collide with batches an earlier stream
     already committed to the same output dir.
 
-    Pre-namespacing checkpoints (Spark offset state already present, no
-    identity file — a stream created before this upgrade) committed bare
-    ``epochNNNNNN`` batch ids; they get the LEGACY sentinel (empty id →
-    ``_epoch_batch_id`` emits the bare format) so a crashed epoch replays
-    under the SAME id it was committed as, instead of being re-committed
-    under a fresh namespace and breaking exactly-once across the upgrade.
-
     The identity file is written atomically (temp + rename); like
     StagedWriter's staging-rename commit this assumes a local/posix-rename
     filesystem for the checkpoint dir."""
@@ -329,21 +322,16 @@ def _stream_identity(checkpoint_dir: str | Path) -> str:
     p.mkdir(parents=True, exist_ok=True)
     f = p / "stream_identity"
     if not f.exists():
-        offsets = p / "offsets"
-        legacy = offsets.is_dir() and any(offsets.iterdir())
-        sid = "" if legacy else uuid.uuid4().hex[:12]
         tmp = p / f"stream_identity.tmp.{uuid.uuid4().hex[:8]}"
-        tmp.write_text(sid)
+        tmp.write_text(uuid.uuid4().hex[:12])
         os.replace(tmp, f)
     return f.read_text().strip()
 
 
 def _epoch_batch_id(sid: str, epoch_id: int) -> str:
-    """StagedWriter batch id for a streaming epoch: namespaced by the
-    checkpoint identity, or the bare legacy format when ``sid`` is the
-    pre-upgrade sentinel (empty)."""
-    base = f"epoch{epoch_id:06d}"
-    return f"{sid}-{base}" if sid else base
+    """StagedWriter batch id for a streaming epoch, namespaced by the
+    checkpoint identity."""
+    return f"{sid}-epoch{epoch_id:06d}"
 
 
 def streaming_blocklist_scrub(
@@ -397,23 +385,9 @@ def streaming_blocklist_scrub(
 def _admitted_hashes(spark: SparkSession, writer: StagedWriter) -> DataFrame:
     """The seen-hash set for online-admission dedup: the hashes-only
     ``admitted_hashes`` sidecar (one 32-hex column — the anti-join's scan
-    never touches admitted text). A pre-sidecar output dir (admitted
-    exists, sidecar doesn't) is backfilled ONCE from the admitted table
-    under a fixed batch id, so write_batch's idempotency makes the
-    upgrade replay-safe; after that the derive path never runs again
-    (every epoch appends its survivors' hashes alongside the survivors).
-    """
-    from ..operators.textstats import normalize_text
-
-    if not writer.table_exists("admitted_hashes") and writer.table_exists(
-        "admitted"
-    ):
-        derived = writer.read_table(spark, "admitted").select(
-            F.md5(normalize_text(F.col("text"))).alias("content_hash")
-        )
-        writer.write_batch(
-            {"admitted_hashes": derived}, batch_id="hashes-backfill"
-        )
+    never touches admitted text). Every epoch appends its survivors'
+    hashes in the same write_batch as the survivors, so the sidecar
+    covers the admitted table from its first commit."""
     if writer.table_exists("admitted_hashes"):
         return writer.read_table(spark, "admitted_hashes")
     return spark.createDataFrame([], "content_hash string")
@@ -425,12 +399,14 @@ def _admitted_sigs(
     """The seen-SIGNATURE set for online NEAR-dup admission: the
     (doc_id, 64-long MinHash) ``admitted_sigs`` sidecar — the anti-join
     side incremental_minhash_dedup reads via ``history_sig_col``, so
-    near-dup admission never scans admitted text (~0.5 KB/doc). Same
-    lazy-upgrade contract as _admitted_hashes: a pre-sidecar output dir
-    is backfilled ONCE from the admitted table under a fixed batch id;
-    ``sig_kwargs`` (num_hashes / shingle_n / hash_fn) must match the
-    admission call's, which streaming_curation_admit guarantees by
-    deriving both from one config."""
+    near-dup admission never scans admitted text (~0.5 KB/doc). A stream
+    that turns on ``neardup_threshold`` after it has admitted docs finds
+    ``admitted`` without the sidecar: the sidecar is then backfilled ONCE
+    from the admitted table under a fixed batch id, so write_batch's
+    idempotency makes the backfill replay-safe. ``sig_kwargs``
+    (num_hashes / shingle_n / hash_fn) must match the admission call's,
+    which streaming_curation_admit guarantees by deriving both from one
+    config."""
     from ..operators.dedup import minhash_signatures
 
     if not writer.table_exists("admitted_sigs") and writer.table_exists(
@@ -481,9 +457,7 @@ def streaming_curation_admit(
     can never diverge). The per-epoch dedup anti-join therefore scans one
     32-hex column, never the admitted corpus — the 100 TB shape
     incremental_exact_dedup documents — and the streaming query carries
-    zero state-store bytes and restarts cold. An output dir admitted to
-    BEFORE the sidecar existed is upgraded lazily: the first epoch
-    derives the missing sidecar from the admitted table once.
+    zero state-store bytes and restarts cold.
 
     ``compact_every=N`` rewrites the sidecars' accumulated per-epoch
     batch dirs into one after every N epochs (StagedWriter.compact, the
@@ -498,14 +472,14 @@ def streaming_curation_admit(
     ``admitted_sigs`` sidecar — signature-estimated Jaccard ≥ threshold
     vs history or a lower-id batch mate drops the doc. The sidecar is
     appended atomically WITH each epoch (same write_batch) and, like
-    the hash sidecar, means admission never rescans admitted text; a
-    pre-sidecar output dir backfills once. ``neardup_kwargs`` tunes the
-    LSH — ONLY num_hashes / bands / shingle_n / hash_fn /
-    max_bucket_size are accepted (anything else raises: a ``threshold``
-    key would collide with ``neardup_threshold``, and re-keyed
-    text/id columns would desync the admitted_sigs sidecar, which
-    mirrors only the signature-family kwargs and hard-codes the doc_id
-    rename) — and MUST stay constant across a stream's lifetime, since
+    the hash sidecar, means admission never rescans admitted text; an
+    output dir admitted to without near-dup admission backfills it once.
+    ``neardup_kwargs`` tunes the LSH — ONLY num_hashes / bands /
+    shingle_n / hash_fn / max_bucket_size are accepted (anything else
+    raises: a ``threshold`` key would collide with ``neardup_threshold``,
+    and re-keyed text/id columns would desync the admitted_sigs sidecar,
+    which mirrors only the signature-family kwargs and hard-codes the
+    doc_id rename) — and MUST stay constant across a stream's lifetime, since
     signatures in the sidecar embed the family.
 
     Known coverage gap (documented, accepted): a doc with fewer than

@@ -178,8 +178,8 @@ def test_rollback_on_orphan_fk(spark, tmp_path):
     breaks_bad = tables["breaks"].withColumn(
         "shift_id", tables["breaks"].shift_id.substr(1, 5)
     )
-    with pytest.raises(quality.IntegrityError):
-        quality.check_foreign_key(breaks_bad, "shift_id", tables["shifts"], "breaks")
+    with pytest.raises(IntegrityError, match=r"orphan foreign key in breaks\.shift_id"):
+        quality.validate_tables({**tables, "breaks": breaks_bad})
 
 
 @pytest.fixture(scope="module")
@@ -207,30 +207,36 @@ def _violate(tables, kind, name):
     return {**tables, name: bad}
 
 
-def _per_check_error(tables, kind, name) -> str:
-    with pytest.raises(IntegrityError) as e:
-        if kind == "pk":
-            quality.check_unique(tables[name], PRIMARY_KEYS[name], name)
-        else:
-            key, parent = FOREIGN_KEYS[name]
-            quality.check_foreign_key(tables[name], key, tables[parent], name)
-    return str(e.value)
-
-
 CONSTRAINTS = [("pk", t) for t in PRIMARY_KEYS] + [("fk", t) for t in FOREIGN_KEYS]
+CONSTRAINT_IDS = [f"{k}-{t}" for k, t in CONSTRAINTS]
+
+# the messages a check-by-check pass raises on the golden docs, one
+# constraint broken by _violate at a time
+PER_CHECK_ERRORS = {
+    ("pk", "shifts"): "duplicate primary key in shifts.shift_id: "
+    "['b2b9437a-28df-4ec4-8e4a-2bbdc241330b']",
+    ("pk", "breaks"): "duplicate primary key in breaks.break_id: "
+    "['16419f82-8b9d-4434-a465-e150bd9c66b3']",
+    ("pk", "allowances"): "duplicate primary key in allowances.allowance_id: "
+    "['815ef6d1-3b8f-4a18-b7f8-a88b17fc695a']",
+    ("pk", "award_interpretations"): "duplicate primary key in "
+    "award_interpretations.award_id: ['60e7a113-ec1b-4ca1-b91e-1d4c1ff49b78']",
+    ("fk", "breaks"): "orphan foreign key in breaks.shift_id: ['no-such-shift']",
+    ("fk", "allowances"): "orphan foreign key in allowances.shift_id: ['no-such-shift']",
+    ("fk", "award_interpretations"): "orphan foreign key in "
+    "award_interpretations.shift_id: ['no-such-shift']",
+}
 
 
-@pytest.mark.parametrize("kind,name", CONSTRAINTS, ids=[f"{k}-{t}" for k, t in CONSTRAINTS])
+@pytest.mark.parametrize("kind,name", CONSTRAINTS, ids=CONSTRAINT_IDS)
 def test_validate_tables_reports_single_violation_like_per_check(golden_tables, kind, name):
     """The folded check finds each of the seven constraints on its own and
-    raises the very message the per-check function raises."""
+    raises the very message a check-by-check pass raises."""
     tables = _violate(golden_tables, kind, name)
     assert quality.violations(tables).count() == 1
-    expected = _per_check_error(tables, kind, name)
-    assert name in expected
     with pytest.raises(IntegrityError) as e:
         quality.validate_tables(tables)
-    assert str(e.value) == expected
+    assert str(e.value) == PER_CHECK_ERRORS[kind, name]
 
 
 def test_validate_tables_null_child_key_is_orphan(golden_tables):
@@ -243,12 +249,26 @@ def test_validate_tables_null_child_key_is_orphan(golden_tables):
 
 
 def test_validate_tables_clean_in_few_jobs(spark, count_jobs):
-    """Clean tables over a batch as run_etl ingests it: one isEmpty job,
-    not a job pair per check. Every input of the check union is one
+    """Clean tables over a batch as run_etl ingests it: one job, not a job
+    pair per check. Every input of the check union is one
     partition, so its groupBy needs no exchange."""
     docs = docs_from_pages(spark, paginate(generate_shift_docs(28), 7))
     tables = flatten.flatten_all(docs)
     assert count_jobs(lambda: quality.validate_tables(tables)) == 1
+
+
+@pytest.mark.parametrize("kind,name", CONSTRAINTS, ids=CONSTRAINT_IDS)
+def test_validate_tables_fails_in_one_job(spark, count_jobs, kind, name):
+    """A failing batch names its broken constraint from the same one job
+    that passes a clean batch: no plan re-runs per check."""
+    docs = docs_from_pages(spark, paginate(generate_shift_docs(28), 7))
+    tables = _violate(flatten.flatten_all(docs), kind, name)
+
+    def check():
+        with pytest.raises(IntegrityError, match=f"in {name}\\."):
+            quality.validate_tables(tables)
+
+    assert count_jobs(check) == 1
 
 
 def test_warm_run_etl_28_days_in_13_tasks(spark, tmp_path, count_tasks):
@@ -357,16 +377,27 @@ def test_read_table_schema_matches_inference(spark, tmp_path):
 
 def test_read_table_infers_schema_outside_table_schemas(spark, tmp_path, count_jobs):
     """A table outside TABLE_SCHEMAS reads back with the schema stored
-    with its batch: no footer-inference job. A batch without a stored
-    schema (written before schemas were stored) is read by inference."""
+    with its batch: no footer-inference job."""
     w = StagedWriter(tmp_path / "out")
-    bid = w.write_batch({"curated": spark.createDataFrame([(1, "a")], "doc_id long, text string")})
+    w.write_batch({"curated": spark.createDataFrame([(1, "a")], "doc_id long, text string")})
     assert "curated" not in TABLE_SCHEMAS
     assert count_jobs(lambda: w.read_table(spark, "curated")) == 0
-    dtypes = [("doc_id", "bigint"), ("text", "string")]
-    assert w.read_table(spark, "curated").dtypes == dtypes
-    (tmp_path / "out" / "curated" / f"batch={bid}" / "_schema.json").unlink()
-    assert w.read_table(spark, "curated").dtypes == dtypes
+    assert w.read_table(spark, "curated").dtypes == [("doc_id", "bigint"), ("text", "string")]
+
+
+def test_log_without_row_counts_does_not_parse(spark, tmp_path):
+    """A commit line in the format from before row counts were logged (a
+    batch id and bare table names) is rejected by every reader of the log,
+    so no output dir that reads can hold a batch stored without its
+    schema."""
+    out = tmp_path / "out"
+    out.mkdir()
+    (out / "_commits.log").write_text("abc123\tbreaks,shifts\n")
+    w = StagedWriter(out)
+    with pytest.raises(ValueError):
+        w.commits()
+    with pytest.raises(ValueError):
+        w.read_table(spark, "shifts")
 
 
 def test_clear_data(spark, tmp_path):

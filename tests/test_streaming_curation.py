@@ -102,34 +102,6 @@ def test_streaming_admission_end_to_end(spark, tmp_path):
     assert history.count() == 2 and history.distinct().count() == 2
 
 
-def test_pre_sidecar_output_dir_backfills_once(spark, tmp_path):
-    """An output dir admitted to BEFORE the hashes sidecar existed must
-    still dedup against its history: the first epoch derives the sidecar
-    from the admitted table once (idempotent batch id), then appends."""
-    out = tmp_path / "out"
-    w = StagedWriter(out)
-    legacy = spark.createDataFrame(
-        [(1, "s0", GOOD)], "doc_id long, source string, text string"
-    )
-    w.write_batch({"admitted": legacy}, batch_id="pre-sidecar-epoch")
-    assert not w.table_exists("admitted_hashes")
-
-    input_dir = tmp_path / "in"
-    input_dir.mkdir()
-    _drop(input_dir, "e1.json", [
-        {"doc_id": 7, "source": "s2", "text": GOOD},   # dup of history
-        {"doc_id": 8, "source": "s2", "text": GOOD2},  # fresh
-    ])
-    q = streaming_curation_admit(spark, input_dir, tmp_path / "ckpt", out)
-    q.awaitTermination()
-    ids = {r.doc_id for r in w.read_table(spark, "admitted").collect()}
-    assert ids == {1, 8}
-    # sidecar now covers history + the new epoch, and the backfill ran once
-    assert w.table_exists("admitted_hashes")
-    assert _admitted_hashes(spark, w).count() == 2
-    assert sum(1 for bid, _ in w.commits() if bid == "hashes-backfill") == 1
-
-
 def test_sidecar_compaction_keeps_dedup_correct(spark, tmp_path):
     """compact_every folds the sidecar's per-epoch batch dirs into one
     without changing dedup semantics: cross-epoch duplicates are still
@@ -208,25 +180,22 @@ def test_sidecar_file_count_bounded_across_3n_epochs(spark, tmp_path):
         == admitted
 
 
-def test_legacy_checkpoint_keeps_unnamespaced_ids(tmp_path):
-    """A checkpoint created BEFORE batch-id namespacing (Spark offset
-    state present, no stream_identity file) committed bare epochNNNNNN
-    ids; on restart the crashed epoch must replay under the SAME id, not
-    a freshly namespaced one (which write_batch would commit twice)."""
+def test_checkpoint_gets_namespaced_ids(tmp_path):
+    """Every checkpoint gets its own batch-id namespace, kept across
+    restarts — also one that holds Spark offset state but no identity
+    file."""
+    fresh = tmp_path / "fresh"
+    sid = _stream_identity(fresh)
+    assert sid and _epoch_batch_id(sid, 3) == f"{sid}-epoch000003"
+    assert _stream_identity(fresh) == sid
+
     ckpt = tmp_path / "ckpt"
     (ckpt / "offsets").mkdir(parents=True)
     (ckpt / "offsets" / "0").write_text("{}")
-    sid = _stream_identity(ckpt)
-    assert sid == ""
-    assert _epoch_batch_id(sid, 3) == "epoch000003"
-    # the sentinel persists: a second call (post-restart) agrees
-    assert _stream_identity(ckpt) == ""
-
-    # a genuinely fresh checkpoint still gets its own namespace
-    fresh = tmp_path / "fresh"
-    sid2 = _stream_identity(fresh)
-    assert sid2 and _epoch_batch_id(sid2, 3) == f"{sid2}-epoch000003"
-    assert _stream_identity(fresh) == sid2
+    sid2 = _stream_identity(ckpt)
+    assert sid2 and sid2 != sid
+    assert _epoch_batch_id(sid2, 3) == f"{sid2}-epoch000003"
+    assert _stream_identity(ckpt) == sid2
 
 
 def test_pii_bearing_boilerplate_is_blocked(spark, tmp_path):

@@ -35,7 +35,7 @@ def test_scalable_prefix_sum_partition_count(spark):
     # coalescing to observe the range-partitioned execution shape itself
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try:
-        out = scalable_running_sum(ev, "event_id", "value", "rs", num_partitions=8)
+        out = scalable_running_sum(ev, "event_id", "value", "rs")
         assert out.rdd.getNumPartitions() > 1
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -81,7 +81,7 @@ def test_scalable_prefix_sum_bigint_sums_exact(spark):
     df = spark.createDataFrame(
         [(i, big + i) for i in range(8)], "id long, v long"
     )
-    out = {r.id: r.rs for r in scalable_running_sum(df, "id", "v", "rs", num_partitions=4).collect()}
+    out = {r.id: r.rs for r in scalable_running_sum(df, "id", "v", "rs").collect()}
     acc = 0
     for i in range(8):
         acc += big + i
