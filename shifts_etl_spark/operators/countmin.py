@@ -84,14 +84,6 @@ def cm_build(
     )
 
 
-def cm_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge sketches built with identical (depth, width): sum cell-wise."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("depth", "bucket").agg(F.sum("cnt").alias("cnt"))
-
-
 def cm_estimate(
     sketch: DataFrame, probes: DataFrame, key_col: str, width: int,
     depth: int | None = None,

@@ -79,13 +79,3 @@ def check_expectations(df: DataFrame, rules: list[Expect]) -> DataFrame:
         (F.coalesce("violations", F.lit(0)) == 0).alias("passed"),
     )
 
-
-def assert_expectations(df: DataFrame, rules: list[Expect]) -> None:
-    """Raise ValueError listing every failed rule (gate-style API)."""
-    failed = [
-        (r["rule"], r["violations"])
-        for r in check_expectations(df, rules).collect()
-        if not r["passed"]
-    ]
-    if failed:
-        raise ValueError(f"expectations failed: {failed}")

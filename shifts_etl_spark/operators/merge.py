@@ -109,49 +109,6 @@ def scd2_from_changelog(
     )
 
 
-# (delta aggregate fn, partial-state merge fn) per supported measure —
-# algebraic states only, so refresh cost is delta-sized, never table-sized.
-_PARTIAL_FNS = {
-    "sum": (F.sum, F.sum),
-    "count": (F.count, F.sum),
-    "min": (F.min, F.min),
-    "max": (F.max, F.max),
-}
-
-
-def partial_aggregate(
-    delta: DataFrame, keys: list[str], measures: dict[str, str]
-) -> DataFrame:
-    """Collapse a delta batch to per-key partial aggregate states
-    (map-side combinable; the shuffle carries one state row per key)."""
-    exprs = [
-        _PARTIAL_FNS[how][0](col).alias(col) for col, how in measures.items()
-    ]
-    return delta.groupBy(*keys).agg(*exprs)
-
-
-def merge_partial_aggregates(
-    current: DataFrame | None,
-    delta_partial: DataFrame,
-    keys: list[str],
-    measures: dict[str, str],
-) -> DataFrame:
-    """Incremental materialized-aggregate maintenance: merge a delta's
-    partial states into the stored aggregate table without touching the
-    base data — refresh cost is O(|delta| + |touched keys|), the reason
-    warehouse rollups stay cheap at 100 TB. Supported measures are
-    algebraic (sum/count/min/max); keep AVG as (sum, count) and divide at
-    read time. Merging is a union + re-aggregate with each measure's
-    MERGE function (count partials merge by SUM), so the plan is one
-    combinable aggregate over table-keys + delta-keys rows."""
-    if current is None:
-        return delta_partial
-    exprs = [
-        _PARTIAL_FNS[how][1](col).alias(col) for col, how in measures.items()
-    ]
-    return current.unionByName(delta_partial).groupBy(*keys).agg(*exprs)
-
-
 def scd2_intervals(
     events: DataFrame,
     attr: "F.Column | None" = None,

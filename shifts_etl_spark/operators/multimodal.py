@@ -15,20 +15,10 @@ JVM↔Python per-row chatter; metadata-only queries never touch blob bytes
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
-
-BLOB_META_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), False),
-        T.StructField("byte_len", T.LongType(), False),
-        T.StructField("sha256", T.StringType(), False),
-    ]
-)
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -56,32 +46,6 @@ def decode_image(blob: bytes):  # pragma: no cover - stub by design
         "image decoding requires a codec library not present in this "
         "container; register a decoder or use extract_features' "
         "deterministic byte-level features"
-    )
-
-
-def blob_metadata(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Typed metadata per blob via mapInPandas (Arrow-batched)."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = pdf["blob"]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "media_type": pdf["media_type"],
-                    "byte_len": blobs.map(
-                        lambda b: len(b) if b is not None else 0
-                    ).astype("int64"),
-                    "sha256": blobs.map(
-                        lambda b: hashlib.sha256(
-                            bytes(b) if b is not None else b""
-                        ).hexdigest()
-                    ),
-                }
-            )
-
-    return df.select(id_col, "media_type", "blob").mapInPandas(
-        extract, BLOB_META_SCHEMA
     )
 
 

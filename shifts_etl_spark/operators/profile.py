@@ -48,25 +48,6 @@ def profile_table(df: DataFrame, approx_distinct: bool = True) -> DataFrame:
     return stacked.select("p.*")
 
 
-def observed_metrics(df, action=None, **metric_exprs):
-    """Pipeline telemetry for free: attach an Observation so the metrics
-    (any aggregate expressions) are collected DURING the action's single
-    pass — no second scan, unlike profiling after the fact. Returns
-    (action_result, metrics_dict).
-
-    At 100 TB this is the difference between "write + audit re-scan"
-    (2× IO) and "write with row-count/null-count/sum telemetry attached"
-    (1×). Default action counts the frame.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    named = [c.alias(n) for n, c in metric_exprs.items()]
-    observed = df.observe(obs, *named)
-    result = action(observed) if action else observed.count()
-    return result, obs.get
-
-
 def embedding_covariance(
     emb: DataFrame,
     vec_col: str = "embedding",

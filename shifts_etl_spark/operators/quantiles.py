@@ -167,27 +167,6 @@ def quantile_sketch(
     )
 
 
-def merge_sketches(a: DataFrame, b: DataFrame, k: int = 200) -> DataFrame:
-    """Merge two sketch frames (the re-aggregation property): union the
-    rows, one merge pass."""
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _Sketch(k)
-        for _, row in pdf.iterrows():
-            sk.merge(_Sketch.from_row(row, k))
-        return pd.DataFrame([sk.to_row(0)])
-
-    both = a.select("levels", "items", "n").unionByName(
-        b.select("levels", "items", "n")
-    )
-    return (
-        both.withColumn("shard", F.lit(0))
-        .groupBy("shard")
-        .applyInPandas(merge_group, schema=_SKETCH_T)
-        .drop("shard")
-    )
-
-
 def sketch_quantiles(sketch: DataFrame, probs: list[float], k: int = 200) -> DataFrame:
     """Evaluate ``probs`` against a (single-row) sketch frame → (prob,
     approx_value) rows, deterministic order."""

@@ -132,14 +132,3 @@ def theta_intersect_estimate(
     )
     return below.cast("double") / theta
 
-
-def theta_difference_estimate(
-    ks_a: Column, ks_b: Column, k_a: Column, k_b: Column
-) -> Column:
-    """|A \\ B| estimate: A's retained hashes below the shared theta that
-    B did not retain, scaled back up. Below theta both sketches hold
-    EVERY distinct hash of their set, so absence from B's sketch there
-    really means absence from B."""
-    theta = F.least(_theta_of(ks_a, k_a), _theta_of(ks_b, k_b))
-    only_a = F.size(F.filter(F.array_except(ks_a, ks_b), lambda x: x < theta))
-    return only_a.cast("double") / theta

@@ -9,7 +9,7 @@ window (SURVEY.md §4, W1).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 
 def tumbling_window(
@@ -76,15 +76,9 @@ def session_window(
     )
 
 
-_NUMERIC_PREFIXES = (
-    "tinyint", "smallint", "int", "bigint", "float", "double", "decimal",
-    "date", "timestamp",
-)
-
-
 def scalable_running_sum(
     df: DataFrame,
-    order_col: str | list[str],
+    order_col: str,
     value_col,
     out_col: str = "running_sum",
 ) -> DataFrame:
@@ -102,15 +96,14 @@ def scalable_running_sum(
       3. broadcast the prefix-summed bucket offsets back and add.
 
     ROWS-frame semantics (each row gets its own prefix including itself);
-    ``order_col`` must be unique (callers tie-break) and non-null. The
+    ``order_col`` must be unique (callers tie-break), non-null, and
+    numeric, date or timestamp: anything else raises ``TypeError``. The
     earlier repartitionByRange + spark_partition_id form cost a SECOND
     full-data exchange (hash by _pid after the range exchange — Catalyst
     cannot see that range partitions already cluster _pid); the bucket
-    expression keeps the data path to one exchange. A non-numeric order
-    column (strings), or a LIST of order columns (a composite order such
-    as sinks/shards.py's (hash, id)), falls back to that form.
-    approxQuantile runs eagerly at plan build (same pattern as layout.py's
-    z-order buckets).
+    expression keeps the data path to one exchange. approxQuantile runs
+    eagerly at plan build; with one core there is one bucket and no
+    boundaries to sample.
 
     ``value_col`` / ``out_col`` may be LISTS of equal length: all
     cumulative columns share one bucketing pass, one exchange, and one
@@ -129,45 +122,35 @@ def scalable_running_sum(
     if len(value_cols) != len(out_cols):
         raise ValueError("value_col and out_col lists must align")
 
-    if isinstance(order_col, str):
-        order_cols, dtype = [order_col], dict(df.dtypes).get(order_col, "")
+    dtype = df.schema[order_col].dataType
+    if isinstance(dtype, T.DateType):
+        ord_num = F.unix_date(F.col(order_col)).cast("double")
+    elif isinstance(dtype, (T.NumericType, T.TimestampType, T.TimestampNTZType)):
+        ord_num = F.col(order_col).cast("double")
     else:
-        order_cols, dtype = list(order_col), ""
+        raise TypeError(
+            f"scalable_running_sum orders by a numeric, date or timestamp "
+            f"column; {order_col!r} is {dtype.simpleString()}"
+        )
     n = df.sparkSession.sparkContext.defaultParallelism
-    if dtype.startswith(_NUMERIC_PREFIXES) and n > 1:
-        if dtype == "date":
-            ord_num = F.unix_date(F.col(order_col)).cast("double")
-        else:
-            ord_num = F.col(order_col).cast("double")
-        probs = [i / n for i in range(1, n)]
-        with_ord = df.withColumn("_ord", ord_num)
+    with_ord = df.withColumn("_ord", ord_num)
+    bounds = []
+    if n > 1:
         # 0.01 relative error: boundaries only gate bucket BALANCE, not
         # correctness (the offset join is exact whatever the cut points) —
         # the looser sketch is measurably cheaper on the eager pass
+        probs = [i / n for i in range(1, n)]
         bounds = sorted(set(with_ord.approxQuantile("_ord", probs, 0.01)))
-        if bounds:
-            bkt = F.aggregate(
-                F.lit(bounds),
-                F.lit(0),
-                lambda acc, b: acc + (F.col("_ord") > b).cast("int"),
-            )
-        else:
-            bkt = F.lit(0)
-        keyed = with_ord.withColumn("_pid", bkt).drop("_ord")
-    else:
-        # fallback: physical range partitioning (orderable-but-unquantilable
-        # types, composite orders); costs one extra data exchange for the
-        # _pid clustering.
-        # localCheckpoint: the driver-side totals fold below and the
-        # returned plan must observe the SAME sampled range boundaries
-        # (RangePartitioner re-samples per RDD instantiation), so pin the
-        # keyed frame once; lineage truncation also spares the re-scan.
-        keyed = (
-            df.repartitionByRange(*map(F.col, order_cols))
-            .withColumn("_pid", F.spark_partition_id())
-            .localCheckpoint()
+    if bounds:
+        bkt = F.aggregate(
+            F.lit(bounds),
+            F.lit(0),
+            lambda acc, b: acc + (F.col("_ord") > b).cast("int"),
         )
-    local_w = W.partitionBy("_pid").orderBy(*order_cols).rowsBetween(
+    else:
+        bkt = F.lit(0)
+    keyed = with_ord.withColumn("_pid", bkt).drop("_ord")
+    local_w = W.partitionBy("_pid").orderBy(order_col).rowsBetween(
         W.unboundedPreceding, W.currentRow
     )
     with_local = keyed

@@ -54,27 +54,6 @@ SHIFT_DOC_SCHEMA = T.StructType(
     ]
 )
 
-# Page envelope (reference api/app/models.py:46-65)
-PAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("results", T.ArrayType(SHIFT_DOC_SCHEMA), False),
-        T.StructField(
-            "links",
-            T.StructType(
-                [
-                    T.StructField("base", T.StringType(), True),
-                    T.StructField("prev", T.StringType(), True),
-                    T.StructField("next", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-        T.StructField("start", T.IntegerType(), True),
-        T.StructField("limit", T.IntegerType(), True),
-        T.StructField("size", T.IntegerType(), True),
-    ]
-)
-
 # --------------------------------------------------------------------------
 # Flattened relational tables (sink schema; reference initdb.sql:3-46)
 # --------------------------------------------------------------------------

@@ -14,7 +14,6 @@ so a 100 TB/day feed costs the same state as a toy one.
 
 from __future__ import annotations
 
-import math
 from pathlib import Path
 
 from pyspark.sql import SparkSession, functions as F
@@ -95,18 +94,3 @@ def streaming_value_psi(
         .start()
     )
 
-
-def reference_probs_uniform() -> list[float]:
-    return [1.0 / N_BINS] * N_BINS
-
-
-def psi_of_counts(counts: list[int], ref_probs: list[float]) -> float:
-    """Plain-Python mirror of the projection (for tests)."""
-    n = sum(counts)
-    total = sum(ref_probs)
-    out = 0.0
-    for c, r in zip(counts, ref_probs):
-        p = (c + 0.5) / (n + 0.5 * N_BINS)
-        r_s = ((r / total) * n + 0.5) / (n + 0.5 * N_BINS)
-        out += (p - r_s) * (math.log(p) - math.log(r_s))
-    return round(out, 6)

@@ -81,70 +81,6 @@ def stream_etl(
     return stream.start()
 
 
-def streaming_dedupe(
-    spark: SparkSession,
-    input_dir: str | Path,
-    checkpoint_dir: str | Path,
-    key: str = "event_id",
-    watermark: str = "1 hour",
-    query_name: str = "deduped_events",
-):
-    """Exactly-once event ingestion: dropDuplicates on the event key within
-    the watermark horizon — the streaming analog of the PK-uniqueness gate
-    (state holds one entry per key until the watermark passes it, so state
-    size is bounded by arrival rate × horizon, not by history)."""
-    events = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .json(str(input_dir))
-    )
-    deduped = events.withWatermark("ts", watermark).dropDuplicates([key, "ts"])
-    return (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_dedupe_within_watermark(
-    spark: SparkSession,
-    input_dir: str | Path,
-    checkpoint_dir: str | Path,
-    key: str = "event_id",
-    watermark: str = "1 hour",
-    query_name: str = "deduped_events_ww",
-):
-    """Retry-tolerant exactly-once: dropDuplicatesWithinWatermark dedups
-    on the KEY ALONE for events arriving within the watermark delay of
-    each other — a producer retry that re-stamps ts still collapses to
-    one row, which the (key, ts)-keyed form above cannot do. State stays
-    bounded the same way: one entry per key, expired once the watermark
-    passes its first arrival."""
-    events = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .json(str(input_dir))
-    )
-    deduped = events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        [key]
-    )
-    return (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def streaming_event_counts(
     spark: SparkSession,
     input_dir: str | Path,
@@ -175,44 +111,6 @@ def streaming_event_counts(
         agg.writeStream.outputMode("complete")
         .format("memory")
         .queryName("event_counts")
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_enriched_counts(
-    spark: SparkSession,
-    input_dir: str | Path,
-    checkpoint_dir: str | Path,
-    dim: DataFrame,
-    dim_key: str = "user_id",
-    dim_attr: str = "segment",
-    query_name: str = "enriched_counts",
-):
-    """Stream-static enrichment: each micro-batch joins the event stream to
-    a static dimension (broadcast — the dim never shuffles the stream) and
-    aggregates per dimension attribute. The static side is re-resolved per
-    micro-batch, so a dim refreshed on disk is picked up without a restart
-    — the streaming analog of the reference's FK joins, and the 100 TB
-    pattern for enriching a firehose against slowly-changing metadata."""
-    events = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .json(str(input_dir))
-    )
-    enriched = events.join(F.broadcast(dim), dim_key, "left").groupBy(
-        F.coalesce(F.col(dim_attr), F.lit("unknown")).alias(dim_attr)
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 4).alias("sum_value"),
-    )
-    return (
-        enriched.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
         .option("checkpointLocation", str(checkpoint_dir))
         .trigger(availableNow=True)
         .start()

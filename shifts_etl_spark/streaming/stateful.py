@@ -19,8 +19,6 @@ from typing import Any, Iterable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-from pyspark.sql import functions as F
 
 SESSION_OUT_SCHEMA = (
     "user_id long, session_start timestamp, n_events long, sum_value double"
@@ -133,86 +131,3 @@ def run_streaming_sessionize(
         .start()
     )
 
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4.x stateful v2): typed state handles +
-# RocksDB state store. The v2 twin of the applyInPandasWithState ops above.
-
-TOTALS_OUT_SCHEMA = "user_id long, n_events long, sum_value double, max_value double"
-
-
-class RunningTotalsProcessor(StatefulProcessor):
-    """Per-key lifetime aggregate in a typed ValueState — the shape every
-    feature-store "user profile" stream maintains. State is one fixed-size
-    tuple per key (bounded by keyspace, not traffic); RocksDB spills it
-    off-heap, so a 10^9-key profile table survives executor memory."""
-
-    def init(self, handle) -> None:
-        self._agg = handle.getValueState("agg", "n long, total double, mx double")
-
-    def handleInputRows(self, key, rows, timerValues):
-        prev = self._agg.get() if self._agg.exists() else None
-        n, total, mx = prev if prev is not None else (0, 0.0, None)
-        for pdf in rows:
-            if len(pdf) == 0:
-                continue
-            n += int(len(pdf))
-            total += float(pdf["value"].sum())
-            batch_max = float(pdf["value"].max())
-            mx = batch_max if mx is None else max(mx, batch_max)
-        self._agg.update((n, total, mx))
-        yield pd.DataFrame(
-            [{"user_id": key[0], "n_events": n, "sum_value": total,
-              "max_value": mx}]
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_running_totals(
-    spark: SparkSession,
-    input_dir: str | Path,
-    checkpoint_dir: str | Path,
-    query_name: str = "user_totals",
-):
-    """Per-user running (count, sum, max) over an event stream via
-    transformWithStateInPandas in Update mode: each micro-batch emits the
-    keys it touched with their new lifetime totals. Requires the RocksDB
-    state store (set here; HDFS-backed in-memory provider does not
-    support the v2 API) and the ``protobuf`` package (the v2 state
-    protocol wire format) — environments without it should use the
-    applyInPandasWithState ops above, which cover the same semantics."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise RuntimeError(
-            "transformWithStateInPandas needs the 'protobuf' package for "
-            "its state-server protocol; use the applyInPandasWithState "
-            "operators in this module instead"
-        ) from exc
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    events = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .json(str(input_dir))
-    )
-    totals = events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotalsProcessor(),
-        outputStructType=TOTALS_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-    return (
-        totals.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -109,9 +109,7 @@ SLOW_TESTS = {
     "tests/test_round9_ops.py::test_semantic_dedup_band_knob_certified_shape",
     "tests/test_round9_ops.py::test_semantic_dedup_banded_drops_subset_of_exact",
     "tests/test_session.py::test_archive_round_trip",
-    "tests/test_stateful_skew.py::test_stream_stream_join",
     "tests/test_stateful_skew.py::test_streaming_sessionize",
-    "tests/test_streaming.py::test_stream_join_left_outer_emits_unmatched",
     "tests/test_streaming_curation.py::test_streaming_neardup_admission",
     "tests/test_training_pipeline.py::test_cross_doc_dup_filter_stage",
     "tests/test_training_pipeline.py::test_length_quantile_stage_drops_outlier_doc",
@@ -121,6 +119,17 @@ SLOW_TESTS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    # an id whose file was collected but which names no item is stale: a
+    # deleted or renamed test would otherwise drop out of the slow set.
+    # A command line naming single tests (file::test) collects files in part.
+    if not any("::" in arg for arg in config.args):
+        collected = {item.nodeid for item in items}
+        files = {nodeid.split("::")[0] for nodeid in collected}
+        stale = sorted(
+            t for t in SLOW_TESTS if t.split("::")[0] in files and t not in collected
+        )
+        if stale:
+            raise pytest.UsageError(f"SLOW_TESTS names no collected test: {stale}")
     for item in items:
         if item.nodeid in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)

@@ -4,7 +4,7 @@ build, and the compression-ratio signal's monotonicity
 (textstats.compression_signal)."""
 
 import pytest
-from pyspark.sql import Row, functions as F
+from pyspark.sql import Row
 
 from shifts_etl_spark.operators import countmin, textstats
 
@@ -42,20 +42,6 @@ def test_grid_size_capped(zipfish):
     sketch = countmin.cm_build(df, "k", depth=4, width=64).collect()
     assert len(sketch) <= 4 * 64
     assert {r["depth"] for r in sketch} == {0, 1, 2, 3}
-
-
-def test_merge_equals_single_pass(spark, zipfish):
-    df, _ = zipfish
-    half_a = df.where(F.xxhash64("k") % 2 == 0)
-    half_b = df.where(F.xxhash64("k") % 2 != 0)
-    merged = countmin.cm_merge(
-        countmin.cm_build(half_a, "k", depth=3, width=128),
-        countmin.cm_build(half_b, "k", depth=3, width=128),
-    )
-    single = countmin.cm_build(df, "k", depth=3, width=128)
-    m = {(r["depth"], r["bucket"]): r["cnt"] for r in merged.collect()}
-    s = {(r["depth"], r["bucket"]): r["cnt"] for r in single.collect()}
-    assert m == s
 
 
 def test_compression_signal_orders_entropy(spark):

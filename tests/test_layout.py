@@ -1,230 +1,6 @@
-"""Range-clustered layout (sinks/layout.py): files cover disjoint ranges
-of the cluster column, and a range filter's scan prunes to few files."""
+"""Physical-plan layout: a same-keyed self-join pays its shuffle once."""
 
-import pytest
 from pyspark.sql import functions as F
-
-from shifts_etl_spark.sinks.layout import file_ranges, write_range_clustered
-
-
-@pytest.fixture(scope="module")
-def clustered_path(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("layout") / "orders")
-    df = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    write_range_clustered(df, path, "o_totalprice", num_files=8)
-    return path
-
-
-def test_files_cover_disjoint_ranges(spark, clustered_path):
-    ranges = [
-        (lo, hi)
-        for _, lo, hi in file_ranges(spark, clustered_path, "o_totalprice")
-        if lo is not None
-    ]
-    assert len(ranges) >= 4
-    ranges.sort()
-    for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
-        assert hi_prev <= lo_next
-
-
-def test_roundtrip_preserves_rows(spark, clustered_path):
-    src = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    out = spark.read.parquet(clustered_path)
-    assert out.count() == src.count()
-    assert out.agg(F.sum("o_orderkey")).first()[0] == src.agg(
-        F.sum("o_orderkey")
-    ).first()[0]
-
-
-def test_range_filter_touches_few_files(spark, clustered_path):
-    ranges = file_ranges(spark, clustered_path, "o_totalprice")
-    los = sorted(lo for _, lo, _ in ranges if lo is not None)
-    cutoff = los[1]  # below the 2nd file's range → ≤2 files can match
-    matching = [
-        name for name, lo, hi in ranges if lo is not None and lo < cutoff
-    ]
-    assert len(matching) <= 2
-    got = spark.read.parquet(clustered_path).where(
-        F.col("o_totalprice") < cutoff
-    )
-    want = (
-        spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .where(F.col("o_totalprice") < cutoff)
-    )
-    assert got.count() == want.count()
-
-
-def test_schema_evolution_merged_read(spark, tmp_path):
-    from pyspark.sql import Row
-
-    from shifts_etl_spark.sources.evolution import (
-        read_evolving_parquet,
-        union_evolving,
-    )
-
-    b1 = str(tmp_path / "b1")
-    b2 = str(tmp_path / "b2")
-    spark.createDataFrame(
-        [Row(doc_id=1, text="alpha"), Row(doc_id=2, text="beta")]
-    ).write.parquet(b1)
-    spark.createDataFrame(
-        [Row(doc_id=3, text="gamma", lang="en")]
-    ).write.parquet(b2)
-
-    merged = read_evolving_parquet(spark, b1, b2)
-    assert set(merged.columns) == {"doc_id", "text", "lang"}
-    rows = {r["doc_id"]: r["lang"] for r in merged.collect()}
-    assert rows == {1: None, 2: None, 3: "en"}
-
-    unioned = union_evolving(
-        [spark.read.parquet(b1), spark.read.parquet(b2)]
-    )
-    assert set(unioned.columns) == {"doc_id", "text", "lang"}
-    assert unioned.count() == 3
-
-
-def test_corrupt_record_quarantine(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from shifts_etl_spark.sources.quarantine import read_json_with_quarantine
-
-    p = tmp_path / "feed"
-    p.mkdir()
-    (p / "data.jsonl").write_text(
-        '{"doc_id": 1, "text": "good row"}\n'
-        '{"doc_id": 2, "text": "also good"}\n'
-        "{not json at all\n"
-        '{"doc_id": "NaN-ish", "text": 3}\n'
-    )
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    clean, bad = read_json_with_quarantine(spark, str(p), schema)
-    assert {r["doc_id"] for r in clean.collect()} == {1, 2}
-    raws = [r["raw"] for r in bad.collect()]
-    assert len(raws) == 2 and any("not json" in r for r in raws)
-
-
-def test_z_order_prunes_both_dimensions(spark, tmp_path):
-    from shifts_etl_spark.sinks.layout import write_z_ordered
-
-    src = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    path = str(tmp_path / "zorders")
-    write_z_ordered(src, path, "o_totalprice", "o_custkey", num_files=16)
-
-    out = spark.read.parquet(path)
-    assert out.count() == src.count()
-
-    # per-file bounding boxes in both dimensions
-    boxes = []
-    for name, lo, hi in file_ranges(spark, path, "o_totalprice"):
-        if lo is None:
-            continue
-        (ck,) = [
-            r for r in file_ranges(spark, path, "o_custkey") if r[0] == name
-        ]
-        boxes.append((lo, hi, ck[1], ck[2]))
-    assert len(boxes) >= 8
-
-    # a box query covering ~1/4 of each dimension must prune most files
-    p_lo, p_hi = src.approxQuantile("o_totalprice", [0.25, 0.5], 0.01)
-    c_lo, c_hi = src.approxQuantile("o_custkey", [0.25, 0.5], 0.01)
-    touched = [
-        b
-        for b in boxes
-        if not (b[1] < p_lo or b[0] > p_hi or b[3] < c_lo or b[2] > c_hi)
-    ]
-    assert len(touched) <= len(boxes) // 2
-
-
-def test_z_order_three_columns_prunes_each_dimension(spark, tmp_path):
-    """N-column interleave: a box query on any pair of the three cluster
-    columns prunes files, and the full 3-D box prunes hardest."""
-    from shifts_etl_spark.sinks.layout import write_z_ordered, z_value_n
-
-    src = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    path = str(tmp_path / "z3")
-    cols = ["o_totalprice", "o_custkey", "o_orderkey"]
-    write_z_ordered(src, path, *cols, num_files=16)
-
-    out = spark.read.parquet(path)
-    assert out.count() == src.count()
-
-    per_col = {c: dict((n, (lo, hi)) for n, lo, hi in file_ranges(spark, path, c)) for c in cols}
-    names = [n for n in per_col[cols[0]] if per_col[cols[0]][n][0] is not None]
-    assert len(names) >= 8
-
-    # quartile box in each dimension
-    box = {c: src.approxQuantile(c, [0.25, 0.5], 0.01) for c in cols}
-
-    def touched(dims):
-        n = 0
-        for name in dims and names:
-            hit = all(
-                not (per_col[c][name][1] < box[c][0] or per_col[c][name][0] > box[c][1])
-                for c in dims
-            )
-            n += hit
-        return n
-
-    total = len(names)
-    # each single-dimension quartile filter already prunes some files,
-    # and the full 3-D box prunes at least as hard as any single dim
-    for c in cols:
-        assert touched([c]) < total
-    assert touched(cols) <= min(touched([c]) for c in cols)
-    assert touched(cols) <= total // 2
-
-    # >63-bit interleave is rejected, not silently wrapped
-    with pytest.raises(ValueError):
-        z_value_n([F.lit(0)] * 8, bits=8)
-
-
-def test_manifest_pruned_read_equivalence(spark, clustered_path):
-    import json
-    from pathlib import Path
-
-    from shifts_etl_spark.sinks.layout import read_range_pruned, write_manifest
-
-    write_manifest(spark, clustered_path, "o_totalprice")
-    manifest = json.loads(
-        (Path(clustered_path) / "_manifest_o_totalprice.json").read_text()
-    )
-    los = sorted(e["lo"] for e in manifest)
-    lo, hi = los[0], los[1]  # narrow band near the low end
-
-    pruned = read_range_pruned(spark, clustered_path, "o_totalprice", lo, hi)
-    full = spark.read.parquet(clustered_path).where(
-        (F.col("o_totalprice") >= lo) & (F.col("o_totalprice") <= hi)
-    )
-    assert pruned.count() == full.count() > 0
-    # the pruned plan reads fewer files than exist
-    n_kept = sum(1 for e in manifest if not (e["hi"] < lo or e["lo"] > hi))
-    assert n_kept < len(manifest)
-    # out-of-domain range → zero files, empty frame with the right schema
-    assert read_range_pruned(
-        spark, clustered_path, "o_totalprice", 10**9, 10**9 + 1
-    ).count() == 0
-
-
-def test_hive_partitioned_write_prunes_directories(spark, tmp_path):
-    from shifts_etl_spark.sinks.layout import write_range_clustered
-
-    from shifts_etl_spark.sources.tables import load_table
-
-    src = load_table(spark, "/root/testdata/sf0.001", "events")
-    path = str(tmp_path / "ev_part")
-    write_range_clustered(
-        src, path, "ts", num_files=2, partition_by=["event_type"]
-    )
-    out = spark.read.parquet(path).where(F.col("event_type") == "click")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(event_type" in plan
-    want = src.where("event_type = 'click'").count()
-    assert out.count() == want > 0
 
 
 def test_self_join_reuses_shuffle_exchange(spark):

@@ -245,44 +245,6 @@ def test_scd2_from_changelog_collapses_runs(spark):
     ]
 
 
-def test_incremental_aggregate_matches_full_recompute(spark):
-    from shifts_etl_spark.operators.merge import (
-        merge_partial_aggregates,
-        partial_aggregate,
-    )
-
-    measures = {"v": "sum", "n": "count", "lo": "min", "hi": "max"}
-
-    def batch(seed, n):
-        return spark.range(n).select(
-            (F.col("id") % 7).alias("k"),
-            (F.col("id") * seed % 100).cast("double").alias("v"),
-            F.lit(1).alias("n"),
-            (F.col("id") * seed % 53).alias("lo"),
-            (F.col("id") * seed % 53).alias("hi"),
-        )
-
-    batches = [batch(3, 40), batch(11, 25), batch(7, 60)]
-    state = None
-    for b in batches:
-        state = merge_partial_aggregates(
-            state, partial_aggregate(b, ["k"], measures), ["k"], measures
-        )
-    got = {r["k"]: (r["v"], r["n"], r["lo"], r["hi"]) for r in state.collect()}
-
-    full = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    exp = {
-        r["k"]: (r["v"], r["n"], r["lo"], r["hi"])
-        for r in full.groupBy("k").agg(
-            F.sum("v").alias("v"), F.count("n").alias("n"),
-            F.min("lo").alias("lo"), F.max("hi").alias("hi"),
-        ).collect()
-    }
-    assert got == exp
-    # avg is derivable from the (sum, count) pair without a base rescan
-    assert all(n > 0 for (_, n, _, _) in got.values())
-
-
 def test_snapshot_diff_between_commits(spark, tmp_path):
     """Inserts appear as _op=insert in forward diff; reversing the
     snapshot order flips them to deletes; identical snapshots diff

@@ -9,7 +9,6 @@ from pyspark.sql import Row, functions as F
 
 from shifts_etl_spark.operators.bpe import END, _apply_merge, _initial_symbols
 from shifts_etl_spark.operators.dedup import duplicate_ngram_coverage
-from shifts_etl_spark.sinks.shards import assign_shards
 
 
 def _py_greedy_merge(symbols, a, b):
@@ -85,30 +84,6 @@ def test_dup_ngram_coverage_matches_python_reference(spark):
     }
     for i, (n_tok, cov) in enumerate(ref):
         assert got[i] == (n_tok, cov), (i, texts[i], got[i], (n_tok, cov))
-
-
-def test_shard_assignment_conservation_random(spark):
-    rng = random.Random(7)
-    texts = [
-        " ".join(f"t{rng.randrange(50)}" for _ in range(rng.randint(1, 40)))
-        for _ in range(200)
-    ]
-    df = spark.createDataFrame(
-        [Row(doc_id=i, text=t) for i, t in enumerate(texts)],
-        "doc_id bigint, text string",
-    )
-    out = assign_shards(df, tokens_per_shard=100, seed=3).collect()
-    # exactly-once membership and token conservation
-    assert sorted(r["doc_id"] for r in out) == list(range(200))
-    assert sum(r["n_tokens"] for r in out) == sum(len(t.split()) for t in texts)
-    # every shard's token load is < budget + max_doc (boundary spill bound)
-    loads = {}
-    for r in out:
-        loads[r["shard_id"]] = loads.get(r["shard_id"], 0) + r["n_tokens"]
-    max_doc = max(len(t.split()) for t in texts)
-    assert all(v < 100 + max_doc for v in loads.values())
-    # shard ids are a contiguous 0..K range
-    assert sorted(loads) == list(range(len(loads)))
 
 
 def _py_span_intervals(texts, span_len=40, min_docs=2):

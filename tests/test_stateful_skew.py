@@ -1,15 +1,8 @@
-"""Stateful streaming sessionization + skew helpers."""
+"""Stateful streaming sessionization."""
 
 import json
 
-import pytest
-from pyspark.sql import functions as F
-
-from shifts_etl_spark.operators.skew import salted_aggregate, salted_join
-from shifts_etl_spark.sources.tables import load_table
 from shifts_etl_spark.streaming.stateful import run_streaming_sessionize
-
-SF = "/root/testdata/sf0.001"
 
 
 def test_streaming_sessionize(spark, tmp_path):
@@ -44,62 +37,3 @@ def test_streaming_sessionize(spark, tmp_path):
     assert (1, 1, 4.0) in got, f"user1 session2 wrong: {got}"
     assert (2, 1, 8.0) in got, f"user2 session wrong: {got}"
 
-
-def test_salted_aggregate_matches_plain(spark):
-    ev = load_table(spark, SF, "events")
-    plain = {
-        (r.event_type): (r.n, r.total)
-        for r in ev.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 6).alias("total"))
-        .collect()
-    }
-    salted = {
-        (r.event_type): (r.n, round(r.total, 6))
-        for r in salted_aggregate(
-            ev, ["event_type"], {"n": "count(*)", "total": "sum(value)"}
-        ).collect()
-    }
-    assert set(plain) == set(salted)
-    for k in plain:
-        assert plain[k][0] == salted[k][0]
-        assert plain[k][1] == pytest.approx(salted[k][1], rel=1e-9)
-
-
-def test_salted_join_matches_plain(spark):
-    o = load_table(spark, SF, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, SF, "customer").select("c_custkey", "c_mktsegment")
-    c = c.withColumnRenamed("c_custkey", "o_custkey")
-    plain = o.join(c, "o_custkey").groupBy("c_mktsegment").count()
-    salted = salted_join(o, c, "o_custkey").groupBy("c_mktsegment").count()
-    assert {tuple(r) for r in plain.collect()} == {tuple(r) for r in salted.collect()}
-
-
-def test_stream_stream_join(spark, tmp_path):
-    """Purchases attributed to views of the same user within 10 minutes,
-    both sides streaming."""
-    import json as _json
-
-    from shifts_etl_spark.streaming.stream_join import run_purchase_attribution
-
-    inp = tmp_path / "ss"
-    inp.mkdir()
-
-    def ev(eid, ts, uid, etype, v):
-        return {"event_id": eid, "ts": ts, "user_id": uid,
-                "event_type": etype, "value": v, "props": "{}"}
-
-    rows = [
-        ev(1, "2024-01-01T10:00:00.000Z", 1, "view", 5.0),
-        ev(2, "2024-01-01T10:05:00.000Z", 1, "purchase", 0.0),  # attributed to 1
-        ev(3, "2024-01-01T09:40:00.000Z", 2, "view", 7.0),
-        ev(4, "2024-01-01T10:00:00.000Z", 2, "purchase", 0.0),  # view too old
-        ev(5, "2024-01-01T10:20:00.000Z", 3, "purchase", 0.0),  # no view at all
-    ]
-    with open(inp / "a.json", "w") as f:
-        for r in rows:
-            f.write(_json.dumps(r) + "\n")
-    q = run_purchase_attribution(spark, inp, tmp_path / "ck3", query_name="attr_t")
-    q.awaitTermination()
-    got = {(r.purchase_id, r.view_value)
-           for r in spark.sql("SELECT * FROM attr_t").collect()}
-    assert got == {(2, 5.0)}

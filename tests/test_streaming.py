@@ -2,6 +2,7 @@
 drop with availableNow and verify batch-equivalent results + windowed agg."""
 
 import json
+import math
 
 import pytest
 from pyspark.errors import StreamingQueryException
@@ -124,31 +125,6 @@ def test_stream_etl_restart_is_exactly_once(spark, tmp_path):
     assert shifts.select("shift_id").distinct().count() == 8
 
 
-def test_stream_static_enrichment(spark, tmp_path):
-    from shifts_etl_spark.streaming.micro_batch import streaming_enriched_counts
-
-    inp = tmp_path / "ev2"
-    inp.mkdir()
-    rows = [
-        {"event_id": i, "ts": "2024-01-01T00:10:00.000Z", "user_id": i % 3,
-         "event_type": "click", "value": 1.0, "props": "{}"}
-        for i in range(12)
-    ]
-    with open(inp / "events.json", "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-    dim = spark.createDataFrame(
-        [(0, "gold"), (1, "silver")], ["user_id", "segment"]
-    )
-    q = streaming_enriched_counts(spark, inp, tmp_path / "ckpt3", dim)
-    q.awaitTermination()
-    got = {
-        r["segment"]: r["n_events"]
-        for r in spark.sql("SELECT * FROM enriched_counts").collect()
-    }
-    assert got == {"gold": 4, "silver": 4, "unknown": 4}
-
-
 def test_streaming_merge_upsert(spark, tmp_path):
     from shifts_etl_spark.sinks.staged import StagedWriter
     from shifts_etl_spark.streaming.micro_batch import streaming_merge_upsert
@@ -182,208 +158,22 @@ def test_streaming_merge_upsert(spark, tmp_path):
     assert t2 == {"a": 9.0, "c": 3.0}
 
 
-def test_stream_join_left_outer_emits_unmatched(spark, tmp_path):
-    """Outer stream-stream join: the unmatched purchase emits with NULL
-    view columns only after a LATER batch's watermark closes its window."""
-    import time
-
-    from shifts_etl_spark.streaming.stream_join import run_purchase_attribution
-
-    inp = tmp_path / "oev"
-    inp.mkdir()
-
-    def ev(eid, hhmm, uid, etype):
-        return {"event_id": eid, "ts": f"2024-01-01T{hhmm}:00.000Z",
-                "user_id": uid, "event_type": etype, "value": 1.0, "props": "{}"}
-
-    with open(inp / "a_first.json", "w") as f:
-        for r in [ev(1, "00:00", 1, "view"), ev(2, "00:05", 1, "purchase"),
-                  ev(3, "00:05", 2, "purchase")]:  # user 2: no view
-            f.write(json.dumps(r) + "\n")
-    time.sleep(1.1)  # file source orders batches by modification time
-    with open(inp / "b_flush.json", "w") as f:
-        # advance BOTH sides' watermarks past 00:05 (+1h delay)
-        for r in [ev(8, "03:00", 9, "view"), ev(9, "03:00", 9, "purchase")]:
-            f.write(json.dumps(r) + "\n")
-
-    q = run_purchase_attribution(
-        spark, inp, tmp_path / "ckpt", how="left_outer", query_name="attr_outer"
-    )
-    q.awaitTermination()
-    rows = {r["purchase_id"]: r for r in spark.sql("SELECT * FROM attr_outer").collect()}
-    assert rows[2]["view_ts"] is not None  # matched within 10 min
-    assert 3 in rows and rows[3]["view_ts"] is None  # unmatched, null-padded
-    assert rows[9]["view_ts"] is not None  # same-batch match emits promptly
-
-
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """Stateful v2 (transformWithStateInPandas): lifetime per-user totals
-    survive across separate drains of the same checkpoint — batch 2 emits
-    user 1's totals INCLUDING batch 1's events. Needs protobuf (the v2
-    state protocol); containers without it exercise the gate error."""
-    import pytest
-
-    from shifts_etl_spark.streaming.stateful import streaming_running_totals
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        with pytest.raises(RuntimeError, match="protobuf"):
-            streaming_running_totals(spark, tmp_path, tmp_path / "ck")
-        pytest.skip("protobuf not installed: TWS v2 gate verified instead")
-
-    inp = tmp_path / "ev"
-    inp.mkdir()
-
-    def drop(name, rows):
-        with open(inp / name, "w") as f:
-            for uid, val in rows:
-                f.write(json.dumps({
-                    "event_id": len(name) + uid, "ts": "2024-01-01T10:00:00.000Z",
-                    "user_id": uid, "event_type": "click", "value": val,
-                    "props": "{}",
-                }) + "\n")
-
-    drop("b1.json", [(1, 1.0), (1, 2.0), (2, 5.0)])
-    q = streaming_running_totals(spark, inp, tmp_path / "ck", query_name="tot1")
-    q.awaitTermination()
-    got = {r.user_id: r for r in spark.sql("SELECT * FROM tot1").collect()}
-    assert (got[1].n_events, got[1].sum_value, got[1].max_value) == (2, 3.0, 2.0)
-    assert (got[2].n_events, got[2].sum_value, got[2].max_value) == (1, 5.0, 5.0)
-
-    drop("b2.json", [(1, 10.0)])
-    q2 = streaming_running_totals(spark, inp, tmp_path / "ck", query_name="tot2")
-    q2.awaitTermination()
-    got2 = {r.user_id: r for r in spark.sql("SELECT * FROM tot2").collect()}
-    assert (got2[1].n_events, got2[1].sum_value, got2[1].max_value) == (3, 13.0, 10.0)
-    assert 2 not in got2  # untouched keys are not re-emitted in Update mode
-
-
-def test_streaming_heavy_hitters_sketch_state_across_batches(spark, tmp_path):
-    """Sharded MG sketch: with one micro-batch per file, the hot
-    event_type's estimate must accumulate across batches (sketch state
-    carries over); rare singletons never cross the absolute floor."""
-    import json as _json
-
-    from shifts_etl_spark.streaming.sketches import run_streaming_heavy_hitters
-
-    inp, ckpt = tmp_path / "in", tmp_path / "ckpt"
-    inp.mkdir()
-
-    def drop(name, types):
-        with open(inp / name, "w") as f:
-            for i, t in enumerate(types):
-                f.write(_json.dumps({
-                    "event_id": hash((name, i)) % 10**9,
-                    "ts": "2024-01-01T10:00:00.000Z",
-                    "user_id": 1, "event_type": t, "value": 1.0,
-                    "props": "{}",
-                }) + "\n")
-
-    # batch 1: hot appears 30/40 times; rare0..9 once each
-    # batch 2: 20 more hot events -> estimate must include batch-1 state
-    drop("e1.json", ["hot"] * 30 + [f"rare{i}" for i in range(10)])
-    drop("e2.json", ["hot"] * 20)
-    q = run_streaming_heavy_hitters(
-        spark, inp, ckpt, min_frac=0.5, query_name="hh_test",
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination()
-    rows = spark.sql("select * from hh_test").collect()
-    assert rows, "no heavy hitters emitted"
-    assert not any(r.item.startswith("rare") for r in rows)
-    final = max((r for r in rows if r.item == "hot"), key=lambda r: r.shard_n)
-    assert final.shard_n >= 50
-    assert final.est >= 50 - 60 // 51  # MG underestimate bound
-
-
-def test_streaming_distinct_count_sketch(spark, tmp_path):
-    """KMV sketch per key: exact below k, within ~3/sqrt(k) above it,
-    and accumulating across per-file micro-batches."""
-    import json as _json
-
-    from shifts_etl_spark.streaming.sketches import run_streaming_distinct_count
-
-    inp, ckpt = tmp_path / "in", tmp_path / "ckpt"
-    inp.mkdir()
-
-    def drop(name, pairs):
-        with open(inp / name, "w") as f:
-            for i, (t, uid) in enumerate(pairs):
-                f.write(_json.dumps({
-                    "event_id": hash((name, i)) % 10**9,
-                    "ts": "2024-01-01T10:00:00.000Z",
-                    "user_id": uid, "event_type": t, "value": 1.0,
-                    "props": "{}",
-                }) + "\n")
-
-    # 'small': 10 distinct users (< k=64 -> exact, duplicates collapse)
-    # 'big': 500 distinct users split across two files -> approximate
-    drop("e1.json", [("small", u % 10) for u in range(40)]
-                  + [("big", u) for u in range(250)])
-    drop("e2.json", [("big", u) for u in range(250, 500)])
-    q = run_streaming_distinct_count(
-        spark, inp, ckpt, k=64, query_name="dc_test", max_files_per_trigger=1
-    )
-    q.awaitTermination()
-    rows = spark.sql("select * from dc_test").collect()
-    small = [r for r in rows if r.key == "small"][-1]
-    assert small.est_distinct == 10.0  # sketch not full -> exact
-    big = max((r for r in rows if r.key == "big"), key=lambda r: r.n_rows)
-    assert big.n_rows == 500
-    assert abs(big.est_distinct - 500) / 500 < 3 / (64 ** 0.5)  # ~37%
-
-
-def test_streaming_quantiles_sketch(spark, tmp_path):
-    """KLL sketch per key: exact below k, cumulative across micro-batches
-    (the second file shifts the distribution and p50 follows)."""
-    import json as _json
-
-    from shifts_etl_spark.streaming.sketches import run_streaming_quantiles
-
-    inp, ckpt = tmp_path / "in", tmp_path / "ckpt"
-    inp.mkdir()
-
-    def drop(name, pairs):
-        with open(inp / name, "w") as f:
-            for i, (t, v) in enumerate(pairs):
-                f.write(_json.dumps({
-                    "event_id": hash((name, i)) % 10**9,
-                    "ts": "2024-01-01T10:00:00.000Z",
-                    "user_id": i, "event_type": t, "value": v,
-                    "props": "{}",
-                }) + "\n")
-
-    # batch 1: values 1..100 -> p50=50; batch 2 adds 101..300 ->
-    # cumulative 1..300, p50=150, p95=285 (n=300 > k=200 -> approximate
-    # but within the small-n compaction error)
-    drop("e1.json", [("lat", float(v)) for v in range(1, 101)])
-    drop("e2.json", [("lat", float(v)) for v in range(101, 301)])
-    q = run_streaming_quantiles(
-        spark, inp, ckpt, k=200, query_name="qs_test", max_files_per_trigger=1
-    )
-    q.awaitTermination()
-    rows = spark.sql("select * from qs_test").collect()
-    first = min((r for r in rows if r.key == "lat"), key=lambda r: r.n_rows)
-    final = max((r for r in rows if r.key == "lat"), key=lambda r: r.n_rows)
-    # file order is not guaranteed: the first micro-batch is either e1
-    # (100 rows, median 50) or e2 (200 rows, median 200) — both are
-    # under k=200, so either way the first emission must be EXACT
-    assert (first.n_rows, first.p50) in {(100, 50.0), (200, 200.0)}
-    assert final.n_rows == 300  # cross-batch accumulation
-    assert abs(final.p50 - 150) <= 6  # 2% rank error envelope
-    assert abs(final.p95 - 285) <= 6
+def _psi_of_counts(counts: list[int], ref_probs: list[float]) -> float:
+    """Plain-Python mirror of streaming_value_psi's projection."""
+    n, total, k = sum(counts), sum(ref_probs), len(counts)
+    out = 0.0
+    for c, r in zip(counts, ref_probs):
+        p = (c + 0.5) / (n + 0.5 * k)
+        r_s = ((r / total) * n + 0.5) / (n + 0.5 * k)
+        out += (p - r_s) * (math.log(p) - math.log(r_s))
+    return round(out, 6)
 
 
 def test_streaming_value_psi_flags_shifted_window(spark, tmp_path):
     """Two event-time windows: hour 0 matches the uniform reference,
     hour 1 is concentrated in one bin → its PSI must be much larger;
     both values must equal the plain-Python mirror of the projection."""
-    from shifts_etl_spark.streaming.drift import (
-        psi_of_counts,
-        reference_probs_uniform,
-        streaming_value_psi,
-    )
+    from shifts_etl_spark.streaming.drift import N_BINS, streaming_value_psi
 
     inp = tmp_path / "psi_in"
     inp.mkdir()
@@ -402,7 +192,7 @@ def test_streaming_value_psi_flags_shifted_window(spark, tmp_path):
         for r in rows:
             f.write(json.dumps(r) + "\n")
 
-    ref = reference_probs_uniform()
+    ref = [1.0 / N_BINS] * N_BINS
     q = streaming_value_psi(
         spark, inp, tmp_path / "psi_ckpt", ref, lo=0.0, hi=10.0,
         query_name="psi_test",
@@ -413,8 +203,8 @@ def test_streaming_value_psi_flags_shifted_window(spark, tmp_path):
     assert set(got) == {0, 1}
     assert got[0].n_events == 10 and got[1].n_events == 10
     assert got[1].psi > 10 * max(got[0].psi, 1e-9)
-    assert abs(got[0].psi - psi_of_counts([1] * 10, ref)) < 1e-9
-    assert abs(got[1].psi - psi_of_counts([10] + [0] * 9, ref)) < 1e-9
+    assert abs(got[0].psi - _psi_of_counts([1] * 10, ref)) < 1e-9
+    assert abs(got[1].psi - _psi_of_counts([10] + [0] * 9, ref)) < 1e-9
 
 
 def test_streaming_blocklist_scrub_stateless(spark, tmp_path):

@@ -88,6 +88,36 @@ def test_scalable_prefix_sum_bigint_sums_exact(spark):
         assert out[i] == acc
 
 
+def test_scalable_prefix_sum_rejects_string_order(spark):
+    df = spark.createDataFrame([("a", 1.0)], "k string, v double")
+    with pytest.raises(TypeError, match="'k' is string"):
+        scalable_running_sum(df, "k", "v", "rs")
+
+
+def test_scalable_prefix_sum_one_core(spark, monkeypatch, count_jobs):
+    """At one core every row is in one bucket: building submits no
+    approxQuantile job, three runs persist nothing, and the sum is still
+    the exact global prefix sum."""
+    ev = load_table(spark, SF, "events").select("event_id", "value")
+
+    def build():
+        return scalable_running_sum(ev, "event_id", "value", "rs")
+
+    sampled = count_jobs(build)
+    monkeypatch.setattr(
+        type(spark.sparkContext), "defaultParallelism", property(lambda sc: 1)
+    )
+    assert count_jobs(build) < sampled
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    runs = [build().collect() for _ in range(3)]
+    assert jsc.getPersistentRDDs().size() == before
+    out = {r.event_id: r.rs for r in runs[-1]}
+    w = Window.orderBy("event_id").rowsBetween(Window.unboundedPreceding, 0)
+    for r in ev.select("event_id", F.sum("value").over(w).alias("rs")).collect():
+        assert out[r.event_id] == pytest.approx(r.rs, rel=1e-9)
+
+
 def test_profile_table_shape(spark):
     orders = load_table(spark, SF, "orders")
     prof = profile_table(orders).collect()
@@ -128,14 +158,11 @@ def test_approx_aggregates_error_bound(spark):
 def test_multimodal_metadata_and_features(spark):
     docs = load_table(spark, SF, "documents").limit(50)
     blobs = multimodal.attach_blob(docs)
-    meta = multimodal.blob_metadata(blobs).collect()
-    assert len(meta) == 50
     src = {r.doc_id: r.n_chars for r in docs.select("doc_id", "n_chars").collect()}
-    for r in meta:
-        assert r.byte_len == src[r.doc_id]  # ascii text: bytes == chars
-        assert len(r.sha256) == 64
     feats = multimodal.extract_features(blobs).collect()
+    assert len(feats) == 50
     for r in feats:
+        assert r.byte_len == src[r.doc_id]  # ascii text: bytes == chars
         assert r.n_frames == (max(r.byte_len, 1) + 255) // 256
         assert sum(r.features) == pytest.approx(1.0)
         assert 0 < r.mean_byte < 128  # ascii
@@ -183,8 +210,8 @@ def test_multimodal_null_blob_safe(spark):
          Row(doc_id=2, blob=b"abc", media_type="x")],
         schema,
     )
-    meta = {r.doc_id: r for r in multimodal.blob_metadata(df).collect()}
-    assert meta[1].byte_len == 0
+    feats = {r.doc_id: r for r in multimodal.extract_features(df).collect()}
+    assert feats[1].byte_len == 0
     rs = {r.doc_id: r for r in multimodal.resize_images(df, width=4, height=2).collect()}
     assert len(rs[1].resized) == 8  # null blob → 1-byte placeholder sampled
     fr = multimodal.frame_sample(df).collect()
@@ -205,28 +232,6 @@ def test_hll_union_matches_exact_within_bound(spark):
         ev.where("event_type = 'view'").select("user_id").distinct().count()
     )
     assert got["view"] == pytest.approx(exact_view, rel=0.05)
-
-
-def test_observed_metrics_single_pass(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from shifts_etl_spark.operators.profile import observed_metrics
-
-    li = spark.read.parquet(f"{SF}/lineitem.parquet")
-    out = str(tmp_path / "obs")
-    result, metrics = observed_metrics(
-        li,
-        action=lambda d: d.write.mode("overwrite").parquet(out),
-        n_rows=F.count(F.lit(1)),
-        null_keys=F.sum(F.col("l_orderkey").isNull().cast("long")),
-        total_qty=F.sum("l_quantity"),
-    )
-    assert metrics["n_rows"] == li.count()
-    assert metrics["null_keys"] == 0
-    assert metrics["total_qty"] == pytest.approx(
-        li.agg(F.sum("l_quantity")).first()[0]
-    )
-    assert spark.read.parquet(out).count() == metrics["n_rows"]
 
 
 def test_pca_whiten_matches_numpy_replica(spark):
