@@ -54,8 +54,9 @@ def break_free_islands(shifts: DataFrame, breaks: DataFrame) -> DataFrame:
     unique, ROWS over them == the RANGE-tie semantics over the raw rows.
     That window has no partition key, so it runs in one partition, but no
     fact-table row enters it: it sees one row per day, a bound that holds
-    at any data size (hundreds a year). It is also lazy — no sampling job
-    at plan build, unlike a range-partitioned prefix sum."""
+    at any data size (hundreds a year). It is also lazy at any size — no
+    sampling job at plan build, unlike ``windows.scalable_running_sum``
+    on an input above one file split."""
     j = shifts.join(breaks, "shift_id", "left").select(
         "shift_date", F.col("break_id")
     )

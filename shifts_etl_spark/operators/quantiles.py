@@ -218,8 +218,9 @@ def det_quantile_sketch_quantiles(
     Scale shape: global ranks come from the w4 two-pass prefix-count
     (windows.scalable_running_sum — one data exchange, no
     single-partition sort); the survivor frame is ≤ k rows and
-    broadcast-joined to the probe list. Runs an EAGER count() (and the
-    prefix helper's eager approxQuantile) at plan-construction time.
+    broadcast-joined to the probe list. Runs an EAGER count() at
+    plan-construction time (and, on an input above one file split, the
+    prefix helper's eager approxQuantile and bucket totals).
     Prefer :func:`quantile_sketch` when sketches must persist and
     re-merge; this variant answers the same quantile queries one-shot
     with a certified result."""

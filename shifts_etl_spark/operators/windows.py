@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
+from ..session import split_partitions
+
 
 def tumbling_window(
     events: DataFrame, every: str = "1 hour", ts_col: str = "ts"
@@ -101,9 +103,16 @@ def scalable_running_sum(
     earlier repartitionByRange + spark_partition_id form cost a SECOND
     full-data exchange (hash by _pid after the range exchange — Catalyst
     cannot see that range partitions already cluster _pid); the bucket
-    expression keeps the data path to one exchange. approxQuantile runs
-    eagerly at plan build; with one core there is one bucket and no
-    boundaries to sample.
+    expression keeps the data path to one exchange.
+
+    The bucket count is the partitions a file scan would split the input
+    into (``session.split_partitions`` of Catalyst's size estimate for
+    its analyzed plan; no job), at most defaultParallelism. With several
+    buckets, approxQuantile and the totals collect() run eagerly at plan
+    build. With one (an input under ``spark.sql.files.openCostInBytes``,
+    or one core) every offset is 0: building runs no job. An input
+    Catalyst under-estimates (a large explode of a small scan) lands in
+    one bucket, one partition, like an under-estimated broadcast side.
 
     ``value_col`` / ``out_col`` may be LISTS of equal length: all
     cumulative columns share one bucketing pass, one exchange, and one
@@ -132,7 +141,10 @@ def scalable_running_sum(
             f"scalable_running_sum orders by a numeric, date or timestamp "
             f"column; {order_col!r} is {dtype.simpleString()}"
         )
-    n = df.sparkSession.sparkContext.defaultParallelism
+    # the analyzed plan's estimate gives the optimized plan's bucket count
+    # on the catalog's inputs, and costs a tenth of optimizing the input
+    planned = df._jdf.queryExecution().analyzed().stats().sizeInBytes()
+    n = split_partitions(df.sparkSession, planned)
     with_ord = df.withColumn("_ord", ord_num)
     bounds = []
     if n > 1:
@@ -176,9 +188,11 @@ def scalable_running_sum(
         totals_df.schema[f"_total_{j}"].dataType.simpleString()
         for j in range(len(value_cols))
     ]
+    # one bucket: every offset is 0, so there are no totals to collect
+    totals = totals_df.collect() if bounds else []
     rows = sorted(
         (int(r["_pid"]), tuple(r[f"_total_{j}"] for j in range(len(value_cols))))
-        for r in totals_df.collect()
+        for r in totals
     )
     # Rejoin the <= #partitions folded offsets as LITERAL ARRAYS indexed
     # by _pid (element_at), not as a broadcast-join frame: a join adds a

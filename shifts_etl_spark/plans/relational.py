@@ -362,7 +362,7 @@ FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
 
 def w1_running_sum(spark, sf_dir):
     """W1 running sum over a global order (unique key → RANGE==ROWS),
-    computed with the two-pass range-partitioned prefix sum — reference
+    computed with the two-pass range-bucketed prefix sum — reference
     RESULT parity without the reference's single-partition window plan
     (the data-sized Exchange SinglePartition this query carried through
     round 1; only the N_partitions-row offsets frame is ever ordered
@@ -450,7 +450,7 @@ SELECT * FROM (
 
 
 def w4_scalable_prefix_sum(spark, sf_dir):
-    """The 100 TB replacement for W1: two-pass range-partitioned prefix sum
+    """The 100 TB replacement for W1: two-pass range-bucketed prefix sum
     (no single-partition window). Semantics identical to SUM OVER (ORDER BY
     unique key)."""
     ev = _t(spark, sf_dir, "events").select("event_id", "value")

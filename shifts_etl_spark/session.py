@@ -53,6 +53,7 @@ from __future__ import annotations
 import atexit
 import fcntl
 import hashlib
+import math
 import os
 import shutil
 import subprocess
@@ -99,7 +100,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # static conf: measured working sets are 122-139 generated classes
@@ -144,6 +145,28 @@ def get_spark(
         atexit.register(spark.sparkContext.stop)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def driver_memory() -> str:
+    """Default driver heap: half the machine's physical memory, at most
+    16g. A fixed 16g let the driver JVM outgrow a 16 GB machine and be
+    killed by the kernel."""
+    half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2 // (1 << 20)
+    return f"{min(half_mb, 16 << 10)}m"
+
+
+def split_partitions(spark: SparkSession, nbytes: int) -> int:
+    """Partitions for ``nbytes`` of data: ``nbytes`` over the split size
+    Spark's file scans use for one file of that size
+    (``FilePartition.maxSplitBytes``), read from the session's SQL conf,
+    so data is split like a parquet file of the same size. At least 1, at
+    most defaultParallelism: one partition up to
+    ``spark.sql.files.openCostInBytes`` (4 MB)."""
+    conf = spark._jsparkSession.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    cores = spark.sparkContext.defaultParallelism
+    split = min(conf.filesMaxPartitionBytes(), max(open_cost, (nbytes + open_cost) // cores))
+    return max(1, min(cores, math.ceil(nbytes / split)))
 
 
 def java_binary() -> str | None:

@@ -44,6 +44,7 @@ always clear parent and children together.
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import uuid
 from pathlib import Path
@@ -55,6 +56,9 @@ from pyspark.sql.types import StructType
 class StagedWriter:
     def __init__(self, root: str | Path):
         self.root = Path(root)
+        self._log_path = self.root / "_commits.log"
+        # (_log_key() when parsed, the parse); None: no log
+        self._parsed: tuple = (None, ())
 
     def write_batch(
         self,
@@ -96,8 +100,7 @@ class StagedWriter:
                 promoted.append(dest)
             counts = ",".join(f"{name}:{n}" for name, n in sorted(rows.items()))
             mark = "\treplace" if replace else ""
-            with open(self.root / "_commits.log", "a") as log:
-                log.write(f"{batch_id}\t{counts}{mark}\n")
+            self._append(f"{batch_id}\t{counts}{mark}\n")
         except BaseException:
             for d in promoted:
                 shutil.rmtree(d, ignore_errors=True)
@@ -112,20 +115,31 @@ class StagedWriter:
                         shutil.rmtree(d, ignore_errors=True)
         return batch_id
 
-    def _log(self) -> list[tuple[str, dict[str, int], bool]]:
+    def _log(self) -> tuple[tuple[str, dict[str, int], bool], ...]:
         """(batch_id, rows per table written, replaced?) per commit,
-        oldest first."""
-        log = self.root / "_commits.log"
-        if not log.exists():
-            return []
-        out = []
-        for ln in log.read_text().splitlines():
-            if ln:
-                bid, tabs, *mark = ln.split("\t")
-                pairs = (t.rsplit(":", 1) for t in tabs.split(",") if t)
-                rows = {t: int(n) for t, n in pairs}
-                out.append((bid, rows, mark == ["replace"]))
-        return out
+        oldest first. Parsed once per change of the file, which is known
+        by its inode, size and mtime: the log is only appended to, and
+        ``clear_data`` deletes it."""
+        key = self._log_key()
+        if key != self._parsed[0]:
+            self._parsed = (key, _parse_log(self._log_path.read_text()) if key else ())
+        return self._parsed[1]
+
+    def _log_key(self) -> tuple[int, int, int] | None:
+        try:
+            st = os.stat(self._log_path)
+        except FileNotFoundError:
+            return None
+        return st.st_ino, st.st_size, st.st_mtime_ns
+
+    def _append(self, line: str) -> None:
+        """Commit ``line``. A writer whose parse was current before the
+        append adds the line to it rather than parsing the log again."""
+        current = self._log_key() == self._parsed[0]
+        with open(self._log_path, "a") as log:
+            log.write(line)
+        if current:
+            self._parsed = (self._log_key(), self._parsed[1] + _parse_log(line))
 
     def commits(self) -> list[tuple[str, set[str]]]:
         """(batch_id, tables written) per commit, oldest first."""
@@ -190,6 +204,18 @@ class StagedWriter:
         df = self.read_table(spark, name).coalesce(target_partitions)
         self.write_batch({name: df}, replace=True)
         return len(live)
+
+
+def _parse_log(text: str) -> tuple[tuple[str, dict[str, int], bool], ...]:
+    """The commits of a ``_commits.log`` text, oldest first."""
+    out = []
+    for ln in text.splitlines():
+        if ln:
+            bid, tabs, *mark = ln.split("\t")
+            pairs = (t.rsplit(":", 1) for t in tabs.split(",") if t)
+            rows = {t: int(n) for t, n in pairs}
+            out.append((bid, rows, mark == ["replace"]))
+    return tuple(out)
 
 
 def clear_outputs(root: str | Path, tables: list[str]) -> None:

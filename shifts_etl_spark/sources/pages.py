@@ -13,7 +13,8 @@ part file per child table. A union of per-page frames would have
 parallelism × pages partitions, and even one relation is split by
 ``LocalTableScanExec`` into one partition per row, up to defaultParallelism.
 So the batch is coalesced to the partition count Spark's file scans would
-give the same bytes (``FilePartition.maxSplitBytes``): one partition up to
+give the same bytes (``session.split_partitions``, the rule that also sizes
+``operators/windows.scalable_running_sum``'s buckets): one partition up to
 ``spark.sql.files.openCostInBytes`` (4 MB), defaultParallelism above
 (defaultParallelism - 1) × that. A 28-doc batch (9 KB) runs a warm
 ``run_etl`` in 19 tasks instead of 101.
@@ -36,7 +37,6 @@ partition per page, so executors pull the pages in parallel.
 from __future__ import annotations
 
 import json
-import math
 from collections.abc import Callable, Iterable, Iterator
 from urllib.parse import urljoin, urlparse
 
@@ -46,6 +46,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _make_type_verifier
 
 from ..schemas import SHIFT_DOC_SCHEMA
+from ..session import split_partitions
 
 _verify_doc = _make_type_verifier(SHIFT_DOC_SCHEMA)
 _ARROW_DOC_SCHEMA = to_arrow_schema(SHIFT_DOC_SCHEMA)
@@ -94,24 +95,12 @@ def docs_from_pages(spark: SparkSession, pages: Iterable[dict]) -> DataFrame:
     ``iter_http_pages`` generator fetches as it goes); each doc is checked
     against the schema, then all docs form a single Arrow-built local
     relation (one plan leaf, a ``LocalRelation`` below 48 MB), coalesced to
-    ``_batch_partitions`` of its Arrow bytes: its partition count follows its
-    size, not its page count or the core count."""
+    ``session.split_partitions`` of its Arrow bytes: its partition count
+    follows its size, not its page count or the core count."""
     docs = [d for p in pages for d in p["results"]]
     for d in docs:
         _verify_doc(d)
     table = pa.Table.from_pylist(docs, schema=_ARROW_DOC_SCHEMA)
     df = spark.createDataFrame(table, SHIFT_DOC_SCHEMA)
-    return df.coalesce(_batch_partitions(spark, table.nbytes))
-
-
-def _batch_partitions(spark: SparkSession, nbytes: int) -> int:
-    """Partitions for ``nbytes`` of batch data: the split size Spark's file
-    scans use (``FilePartition.maxSplitBytes``, one file of ``nbytes``),
-    read from the session's SQL conf, so a local batch is split like a
-    parquet file of the same size. At least 1."""
-    conf = spark._jsparkSession.sessionState().conf()
-    open_cost = conf.filesOpenCostInBytes()
-    per_core = (nbytes + open_cost) // spark.sparkContext.defaultParallelism
-    split = min(conf.filesMaxPartitionBytes(), max(open_cost, per_core))
-    return max(1, math.ceil(nbytes / split))
+    return df.coalesce(split_partitions(spark, table.nbytes))
 

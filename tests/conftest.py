@@ -99,6 +99,7 @@ SLOW_TESTS = {
     "tests/test_pipeline.py::test_cli_curate_smoke",
     "tests/test_pipeline.py::test_cli_prepare_smoke",
     "tests/test_pipeline.py::test_custom_datasource_reads_api",
+    "tests/test_plan_build.py::test_allowlisted_builds_still_submit_jobs",
     "tests/test_properties.py::test_flatten_invariants",
     "tests/test_properties_sketches.py::test_rollup_fold_order_invariance",
     "tests/test_quantiles.py::test_det_variant_boundary_sizes",

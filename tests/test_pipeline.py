@@ -21,6 +21,7 @@ from shifts_etl_spark.schemas import (
     SHIFT_DOC_SCHEMA,
     TABLE_SCHEMAS,
 )
+from shifts_etl_spark.sinks import staged
 from shifts_etl_spark.sinks.staged import StagedWriter
 from shifts_etl_spark.sources.generator import generate_shift_docs, paginate
 from shifts_etl_spark.sources.pages import docs_from_pages, iter_http_pages
@@ -154,6 +155,47 @@ def test_run_etl_counts_golden(spark, tmp_path):
         "award_interpretations": 2,
         "kpis": 6,
     }
+
+
+def test_run_etl_parses_commit_log_once(spark, tmp_path, monkeypatch):
+    """One run_etl parses ``_commits.log`` once, however long it is, and
+    extends that parse with its own two commits: a 20,000-line log
+    (20,000 stream epochs, each replacing the KPIs) costs one parse, not
+    one per read of the log, and gives the counts an empty log gives."""
+    out = tmp_path / "out"
+    out.mkdir()
+    epochs = "".join(f"e{i}\tkpis:0\treplace\n" for i in range(20000))
+    (out / "_commits.log").write_text(epochs)
+    parsed = []
+    parse = staged._parse_log
+    monkeypatch.setattr(
+        staged, "_parse_log", lambda text: parsed.append(text.count("\n")) or parse(text)
+    )
+    counts = run_etl(
+        spark, pages=paginate(GOLDEN_DOCS, limit=1), output_dir=out, anchor_date="2024-01-15"
+    )
+    assert parsed == [20000, 1, 1]
+    assert counts == {
+        "shifts": 2,
+        "breaks": 2,
+        "allowances": 3,
+        "award_interpretations": 2,
+        "kpis": 6,
+    }
+
+
+def test_commit_log_reparsed_when_it_changes(tmp_path):
+    """A writer's parse follows commits of another writer and a clear."""
+    log = tmp_path / "_commits.log"
+    log.write_text("a\tshifts:2\n")
+    writer = StagedWriter(tmp_path)
+    assert writer.row_count("shifts") == 2
+    with open(log, "a") as f:
+        f.write("b\tshifts:3\n")
+    assert writer.row_count("shifts") == 5
+    clear_data(tmp_path)
+    assert writer.row_count("shifts") == 0
+    assert writer.commits() == []
 
 
 def test_rollback_on_duplicate_pk(spark, tmp_path):

@@ -1,4 +1,5 @@
-"""The start-up archive of ``session.get_spark`` and its CPU count.
+"""The start-up archive of ``session.get_spark``, its CPU count and its
+default driver heap.
 
 The unit tests run no JVM: they build a fake Spark install (``jars/``,
 ``conf/``) and a fake ``java`` under a tmp dir. The round trip starts real
@@ -270,3 +271,10 @@ def test_archive_round_trip(tmp_path):
         assert "[cds" not in r.stdout + r.stderr
     finally:
         shutil.rmtree(cache)  # the archive is ~176 MB
+
+
+@pytest.mark.parametrize("gib, heap", [(16, "8192m"), (3, "1536m"), (64, "16384m")])
+def test_driver_memory_is_half_the_machine_at_most_16g(monkeypatch, gib, heap):
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * (1 << 30) // 4096}
+    monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+    assert session.driver_memory() == heap

@@ -1,8 +1,11 @@
 """Windows operators, scalable prefix sum equivalence, table profile, IVF
 recall, approx-aggregate error bounds, multimodal plumbing."""
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import Row, Window, functions as F
+from pyspark.sql.classic.dataframe import DataFrame
 
 from shifts_etl_spark.operators import multimodal, simsearch
 from shifts_etl_spark.operators.profile import profile_table
@@ -12,44 +15,106 @@ from shifts_etl_spark.sources.tables import load_table
 SF = "/root/testdata/sf0.001"
 
 
-def test_scalable_prefix_sum_matches_global_window(spark):
+@contextmanager
+def lowered_splits(spark):
+    """File-scan split size lowered to a quarter of a few-KB input, so the
+    sf0.001 inputs here (one bucket at the default 4 MB open cost) take
+    defaultParallelism buckets and the sampled path stays under test."""
+    confs = {
+        "spark.sql.files.openCostInBytes": "1",
+        "spark.sql.files.maxPartitionBytes": "4096",
+    }
+    saved = {k: spark.conf.getAll.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@pytest.fixture
+def small_splits(spark):
+    with lowered_splits(spark):
+        yield
+
+
+def build_buckets(monkeypatch, build):
+    """``build()``'s frame and the buckets its approxQuantile cut points
+    made (1 when it sampled nothing)."""
+    cuts = []
+    sample = DataFrame.approxQuantile
+
+    def spy(self, *args, **kwargs):
+        cuts.append(sample(self, *args, **kwargs))
+        return cuts[-1]
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "approxQuantile", spy)
+        df = build()
+    return df, len(set(cuts[0])) + 1 if cuts else 1
+
+
+def global_prefix_sums(ev):
+    w = Window.orderBy("event_id").rowsBetween(Window.unboundedPreceding, 0)
+    return {
+        r.event_id: r.rs
+        for r in ev.select("event_id", F.sum("value").over(w).alias("rs")).collect()
+    }
+
+
+def test_scalable_prefix_sum_matches_global_window(spark, small_splits):
     ev = load_table(spark, SF, "events").select("event_id", "value")
     two_pass = {
         r.event_id: r.rs
         for r in scalable_running_sum(ev, "event_id", "value", "rs").collect()
     }
-    w = Window.orderBy("event_id").rowsBetween(Window.unboundedPreceding, 0)
-    single = {
-        r.event_id: r.rs
-        for r in ev.select("event_id", F.sum("value").over(w).alias("rs")).collect()
-    }
+    single = global_prefix_sums(ev)
     assert set(two_pass) == set(single)
     for k in single:
         assert two_pass[k] == pytest.approx(single[k], rel=1e-9)
 
 
-def test_scalable_prefix_sum_partition_count(spark):
-    """The point of the two-pass form: no single-partition stage."""
+def test_scalable_prefix_sum_partition_count(spark, small_splits, monkeypatch):
+    """The point of the two-pass form: no single-partition stage. An input
+    of several splits takes one bucket per split, at most
+    defaultParallelism, and the result is still the exact global prefix
+    sum."""
     ev = load_table(spark, SF, "events").select("event_id", "value")
-    # AQE legitimately coalesces this tiny dataset to one partition; disable
-    # coalescing to observe the range-partitioned execution shape itself
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        out = scalable_running_sum(ev, "event_id", "value", "rs")
-        assert out.rdd.getNumPartitions() > 1
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    # and the result is still the exact global prefix sum
-    w = Window.orderBy("event_id").rowsBetween(Window.unboundedPreceding, 0)
-    single = {
-        r.event_id: r.rs
-        for r in ev.select("event_id", F.sum("value").over(w).alias("rs")).collect()
-    }
+    out, buckets = build_buckets(
+        monkeypatch, lambda: scalable_running_sum(ev, "event_id", "value", "rs")
+    )
+    assert buckets == spark.sparkContext.defaultParallelism == 4
+    single = global_prefix_sums(ev)
     for r in out.collect():
         assert r.rs == pytest.approx(single[r.event_id], rel=1e-9)
 
 
-def test_scalable_prefix_sum_derived_order_column(spark):
+def test_scalable_prefix_sum_one_split_builds_without_jobs(spark, monkeypatch, count_jobs):
+    """An input under one file split (here ~10 KB against the 4 MB open
+    cost) is one bucket: building samples nothing and collects no bucket
+    totals, so it submits no job, and the sum is the global window's. The
+    same input under lowered split confs samples."""
+    ev = load_table(spark, SF, "events").select("event_id", "value")
+
+    def build():
+        return scalable_running_sum(ev, "event_id", "value", "rs")
+
+    assert count_jobs(build) == 0
+    out, buckets = build_buckets(monkeypatch, build)
+    assert buckets == 1
+    single = global_prefix_sums(ev)
+    assert {r.event_id: r.rs for r in out.collect()} == pytest.approx(single, rel=1e-9)
+    with lowered_splits(spark):
+        assert count_jobs(build) > 0
+        assert build_buckets(monkeypatch, build)[1] == 4
+
+
+def test_scalable_prefix_sum_derived_order_column(spark, small_splits):
     """Regression for the Spark 4.1.2 Catalyst bug (VERDICT r2 #3): a
     DERIVED order column (xxhash64 of the key) under the default
     32-partition session used to raise INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND
@@ -74,14 +139,18 @@ def test_scalable_prefix_sum_derived_order_column(spark):
         assert out[h] == pytest.approx(acc, rel=1e-9)
 
 
-def test_scalable_prefix_sum_bigint_sums_exact(spark):
+def test_scalable_prefix_sum_bigint_sums_exact(spark, small_splits, monkeypatch):
     """Integral value columns must fold at bigint precision on the driver
     (a double carrier would truncate past 2^53)."""
     big = 1 << 54
     df = spark.createDataFrame(
         [(i, big + i) for i in range(8)], "id long, v long"
     )
-    out = {r.id: r.rs for r in scalable_running_sum(df, "id", "v", "rs").collect()}
+    rs, buckets = build_buckets(
+        monkeypatch, lambda: scalable_running_sum(df, "id", "v", "rs")
+    )
+    assert buckets > 1
+    out = {r.id: r.rs for r in rs.collect()}
     acc = 0
     for i in range(8):
         acc += big + i
@@ -94,28 +163,28 @@ def test_scalable_prefix_sum_rejects_string_order(spark):
         scalable_running_sum(df, "k", "v", "rs")
 
 
-def test_scalable_prefix_sum_one_core(spark, monkeypatch, count_jobs):
-    """At one core every row is in one bucket: building submits no
-    approxQuantile job, three runs persist nothing, and the sum is still
-    the exact global prefix sum."""
+def test_scalable_prefix_sum_one_core(spark, small_splits, monkeypatch, count_jobs):
+    """At one core every row is in one bucket, however many splits the
+    input has: building an input that samples at four cores submits no
+    job, three runs persist nothing, and the sum is still the exact global
+    prefix sum."""
     ev = load_table(spark, SF, "events").select("event_id", "value")
 
     def build():
         return scalable_running_sum(ev, "event_id", "value", "rs")
 
-    sampled = count_jobs(build)
+    assert count_jobs(build) > 0
     monkeypatch.setattr(
         type(spark.sparkContext), "defaultParallelism", property(lambda sc: 1)
     )
-    assert count_jobs(build) < sampled
+    assert count_jobs(build) == 0
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
     runs = [build().collect() for _ in range(3)]
     assert jsc.getPersistentRDDs().size() == before
     out = {r.event_id: r.rs for r in runs[-1]}
-    w = Window.orderBy("event_id").rowsBetween(Window.unboundedPreceding, 0)
-    for r in ev.select("event_id", F.sum("value").over(w).alias("rs")).collect():
-        assert out[r.event_id] == pytest.approx(r.rs, rel=1e-9)
+    for event_id, rs in global_prefix_sums(ev).items():
+        assert out[event_id] == pytest.approx(rs, rel=1e-9)
 
 
 def test_profile_table_shape(spark):
