@@ -12,8 +12,7 @@ Layout (see SURVEY.md §7):
                 multimodal, curation and the other extension operators
   functions/    scalar/vector column helpers (epoch-ms parsing, cosine, ...)
   sinks/        staged atomic multi-table parquet writes; JDBC sink
-  streaming/    micro-batch analog of the paginated ingest, plus stateful
-                sessionization, PSI drift and online admission
+  streaming.py  micro-batch analog of the paginated ingest (stream_etl)
   plans/        the named-query catalog with DuckDB oracle twins
   pipeline.py   end-to-end orchestration (run_etl / clear_data, curate,
                 prepare_training_data)

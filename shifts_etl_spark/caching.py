@@ -36,8 +36,8 @@ _SCOPES: contextvars.ContextVar[tuple[list[DataFrame], ...]] = (
 
 _AMBIENT: list[DataFrame] = []
 _AMBIENT_BOUND = 12
-# serializes append, trim and drain, so concurrent threads
-# (parallel streaming queries, pooled entry sweeps) cannot race a pop
+# serializes append, trim and drain, so concurrent threads (pooled
+# entry sweeps, a stream_etl epoch beside the driver) cannot race a pop
 _AMBIENT_LOCK = threading.Lock()
 
 

@@ -10,7 +10,7 @@ an LLM pre-training data pipeline (context-window preparation).
   via operators/windows.scalable_running_sum); packs are
   floor(cum_before/budget), i.e. boundary docs spill into the next pack
   (deterministic, SQL-mirrorable — exact greedy packing is inherently
-  sequential and lives in streaming/stateful.py territory if ever needed).
+  sequential and has no batch plan).
 """
 
 from __future__ import annotations

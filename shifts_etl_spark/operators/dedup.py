@@ -73,8 +73,6 @@ def _fan_out(df: DataFrame) -> DataFrame:
     round-robin shuffle of the raw rows buys full parallelism. No-op cost
     at scale (big inputs already have many splits, and the shuffle is
     bounded by the input size)."""
-    if df.isStreaming:  # .rdd is illegal on streaming frames; the
-        return df       # source's own partitioning governs there
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     return df.repartition(target) if df.rdd.getNumPartitions() < target else df
@@ -816,28 +814,18 @@ def incremental_exact_dedup(
     history: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    history_hash_col: str | None = None,
 ) -> DataFrame:
     """Continuous-ingestion dedup: collapse the incoming batch on its
     normalized content hash, then drop every hash already present in the
     historical corpus (left_anti). Both sides reduce to hashes before any
     join — the anti-join shuffles (16-byte hash, id, count) rows, never
-    documents. At 100 TB the history side is a pre-computed hash table
-    you append each batch's survivors to: pass it via
-    ``history_hash_col`` (the name of the md5 column in ``history``) and
-    this function never touches history text at all — the scan reads one
-    32-hex column instead of the corpus. Without it, ``history`` is a
-    document table and the hash table is built on the fly (small-corpus
-    convenience path)."""
+    documents."""
     h = F.md5(normalize_text(F.col(text_col)))
     batch = (
         incoming.groupBy(h.alias("content_hash"))
         .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
     )
-    seen_col = (
-        F.col(history_hash_col) if history_hash_col is not None else h
-    )
-    seen = history.select(seen_col.alias("content_hash")).dropDuplicates()
+    seen = history.select(h.alias("content_hash")).dropDuplicates()
     return batch.join(seen, "content_hash", "left_anti")
 
 
@@ -853,8 +841,6 @@ def incremental_minhash_dedup(
     max_bucket_size: int | None = 500,
     hash_fn: str = "xxhash64",
     history_sig_col: str | None = None,
-    incoming_sig_df: DataFrame | None = None,
-    exact_precollapse: bool = True,
 ) -> DataFrame:
     """Continuous-ingestion NEAR-dup admission — the banded-MinHash
     counterpart of :func:`incremental_exact_dedup`: an incoming doc is
@@ -866,33 +852,24 @@ def incremental_minhash_dedup(
     the min qualifying partner, null when admitted — est_jaccard of
     that partner, keep).
 
-    The 100 TB shape mirrors incremental_exact_dedup's: pass
-    ``history_sig_col`` (the name of a precomputed array<long> MinHash
-    column in ``history``) and this function never touches history TEXT
-    at all — the admitted corpus keeps a (id, 64-long signature)
-    sidecar, ~0.5 KB/doc, exactly what streaming_curation_admit's
-    hashes sidecar does for the exact stage. Without it, history is a
-    document table and signatures are built on the fly (small-corpus
-    convenience path). ``incoming_sig_df`` is the same shortcut for the
-    batch side: a precomputed (doc, sig) frame (minhash_signatures
-    output, SAME num_hashes/shingle_n/hash_fn) skips the batch's
-    signature pass — streaming_curation_admit computes batch signatures
-    once and shares them between admission and its sidecar append.
+    The 100 TB shape: pass ``history_sig_col`` (the name of a
+    precomputed array<long> MinHash column in ``history``) and this
+    function never touches history TEXT at all — the admitted corpus keeps a (id, 64-long signature)
+    sidecar, ~0.5 KB/doc (the x242 catalog entry). Without it, history
+    is a document table and signatures are built on the fly
+    (small-corpus convenience path).
 
-    ``exact_precollapse`` (default True — the x237 30× lesson: piles of
+    The batch is exact-collapsed first (the x237 30× lesson: piles of
     EXACT copies share identical signatures, so every band bucket they
     land in grows with the pile and in-bucket pair work grows with its
     SQUARE; the first 30×-replica smoke measured 5.8× for the
-    uncollapsed form vs ~1× collapsed) groups the batch by normalized
-    content hash first and runs LSH on min-id representatives only.
+    uncollapsed form vs ~1× collapsed): it is grouped by normalized
+    content hash and LSH runs on min-id representatives only.
     Non-representatives are exact duplicates of a lower-id batch mate
     by construction, so their verdict is closed-form: matched_id =
     their representative's match if it has one (it is lower), else the
-    representative itself, est 1.0. One deliberate improvement over the
-    raw form: shingle-less exact duplicates (empty/whitespace docs),
-    invisible to LSH, are now deduped too. Set False only when the
-    batch is already exact-collapsed (streaming_curation_admit's near
-    -dup stage runs AFTER incremental_exact_dedup, so it does).
+    representative itself, est 1.0. Shingle-less exact duplicates
+    (empty/whitespace docs), invisible to LSH, are deduped too.
 
     Scale shape: both sides reduce to signatures before any join; the
     bucket join shuffles (band, hash, id, side-bit) rows — signatures
@@ -910,40 +887,24 @@ def incremental_minhash_dedup(
     r = num_hashes // bands
     hf = _hash_family(hash_fn)
 
-    if exact_precollapse:
-        keyed = incoming.select(
-            F.col(id_col).alias("doc_id"),
-            F.md5(normalize_text(F.col(text_col))).alias("_g"),
-        )
-        gmap = caching.persist(
-            keyed.join(
-                keyed.groupBy("_g").agg(F.min("doc_id").alias("rep")), "_g"
-            ).select("doc_id", "rep")
-        )
-        rep_ids = gmap.where(F.col("doc_id") == F.col("rep")).select(
-            F.col("doc_id").alias("_rep_id")
-        )
-        lsh_incoming = incoming.join(
-            rep_ids, F.col(id_col) == F.col("_rep_id"), "semi"
-        )
-    else:
-        gmap = incoming.select(F.col(id_col).alias("doc_id")).withColumn(
-            "rep", F.col("doc_id")
-        )
-        rep_ids = gmap.select(F.col("doc_id").alias("_rep_id"))
-        lsh_incoming = incoming
-
-    if incoming_sig_df is not None:
-        inc_sig = incoming_sig_df.select("doc", "sig")
-        if exact_precollapse:
-            inc_sig = inc_sig.join(
-                rep_ids, F.col("doc") == F.col("_rep_id"), "semi"
-            )
-    else:
-        inc_sig = minhash_signatures(
-            lsh_incoming, text_col, id_col, num_hashes, shingle_n, hash_fn
-        )
-    inc_sig = inc_sig.withColumn("is_hist", F.lit(False))
+    keyed = incoming.select(
+        F.col(id_col).alias("doc_id"),
+        F.md5(normalize_text(F.col(text_col))).alias("_g"),
+    )
+    gmap = caching.persist(
+        keyed.join(
+            keyed.groupBy("_g").agg(F.min("doc_id").alias("rep")), "_g"
+        ).select("doc_id", "rep")
+    )
+    rep_ids = gmap.where(F.col("doc_id") == F.col("rep")).select(
+        F.col("doc_id").alias("_rep_id")
+    )
+    lsh_incoming = incoming.join(
+        rep_ids, F.col(id_col) == F.col("_rep_id"), "semi"
+    )
+    inc_sig = minhash_signatures(
+        lsh_incoming, text_col, id_col, num_hashes, shingle_n, hash_fn
+    ).withColumn("is_hist", F.lit(False))
     if history_sig_col is not None:
         hist_sig = history.select(
             F.col(id_col).alias("doc"),
@@ -954,9 +915,8 @@ def incremental_minhash_dedup(
         hist_sig = minhash_signatures(
             history, text_col, id_col, num_hashes, shingle_n, hash_fn
         ).withColumn("is_hist", F.lit(True))
-    # persist: banding, the two by-id sig re-attaches, and (in collapse
-    # mode) the rep filter all read this union; the caller's scope owns
-    # it (the minhash_lsh_pairs contract)
+    # persist: banding and the two by-id sig re-attaches all read this
+    # union; the caller's scope owns it (the minhash_lsh_pairs contract)
     sigs = caching.persist(inc_sig.unionByName(hist_sig))
 
     band_hashes = F.array(

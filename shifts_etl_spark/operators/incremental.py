@@ -7,10 +7,8 @@ should cost O(day), not O(history). Every supported measure is ALGEBRAIC
 stores mergeable partials keyed by the rollup dimensions and a day's
 update is: aggregate the new batch (map-side combinable), union with the
 state, re-aggregate — one shuffle of |keys| rows, never a history scan.
-The same contract as streaming/micro_batch.streaming_merge_upsert, but
-for batch backfills and the staged-parquet state the engine's sinks
-manage; and the batch analog of what HLL/theta/quantile sketch rows do
-for non-algebraic statistics (x31/x33/x58).
+It is the batch analog of what HLL/theta/quantile sketch rows do for
+non-algebraic statistics (x31/x33/x58).
 
 Semantics pinned by pytest: folding partitions in ANY order equals the
 one-shot aggregate over the concatenation (associativity +

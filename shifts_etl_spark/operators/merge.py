@@ -1,60 +1,11 @@
-"""MERGE / upsert — lakehouse-style `MERGE INTO target USING updates ON key`
-over the staged-parquet layout (no Delta in this container; same contract).
-
-Semantics (the common subset):
-  - matched rows  → replaced by the update row (whole-row upsert)
-  - unmatched     → inserted
-  - ``delete_col``: updates with that boolean column true delete instead
-
-Plan shape: ONE full-outer join between target and updates on the key —
-the update side is usually dim-sized, so it broadcasts; the rewrite cost is
-one pass over the target. (Table formats with file-level stats prune the
-rewrite to touched files; the staged layout rewrites the table — the join
-itself is identical.)
+"""Slowly-changing-dimension type-2 history: collapse a change log into
+per-key validity intervals [valid_from, valid_to), the as-of-joinable
+dimension shape a warehouse MERGE pipeline maintains.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from ..sinks.staged import StagedWriter
-
-
-def merge_dataframes(
-    target: DataFrame,
-    updates: DataFrame,
-    key: str,
-    delete_col: str | None = None,
-) -> DataFrame:
-    """Pure-DataFrame MERGE: returns the post-merge table."""
-    if delete_col is not None:
-        deletes = updates.where(F.col(delete_col)).select(key)
-        updates = updates.where(~F.col(delete_col)).drop(delete_col)
-        target = target.join(F.broadcast(deletes), key, "left_anti")
-    # upsert = updates win on key collision, target rows otherwise
-    survivors = target.join(
-        F.broadcast(updates.select(key)), key, "left_anti"
-    )
-    return survivors.unionByName(updates)
-
-
-def merge_into(
-    spark: SparkSession,
-    root: str,
-    table: str,
-    updates: DataFrame,
-    key: str,
-    delete_col: str | None = None,
-) -> int:
-    """MERGE into a staged-sink table in place: read current → merge →
-    one replace commit, which deletes the old batches only after the
-    merged batch is logged. Returns the post-merge row count, which the
-    write logged: no job re-reads the table."""
-    writer = StagedWriter(root)
-    current = writer.read_table(spark, table)
-    merged = merge_dataframes(current, updates, key, delete_col)
-    writer.write_batch({table: merged}, replace=True)
-    return writer.row_count(table)
+from pyspark.sql import DataFrame, functions as F
 
 
 def scd2_from_changelog(

@@ -1,7 +1,7 @@
 """Mergeable multi-level quantile sketch (KLL/MRL-style compactors).
 
-Completes the engine's sketch family (HLL x31, theta x33, count-min x55,
-KMV / Misra-Gries in streaming/) with the one primitive those can't give:
+Completes the engine's sketch family (HLL x31, theta/KMV x33, count-min
+x55, Misra-Gries heavy hitters) with the one primitive those can't give:
 approximate QUANTILES that re-aggregate. ``percentile_approx`` answers one
 query over one scan; a persisted, mergeable sketch is the 100 TB shape for
 feature-normalization cutoffs (build per partition/day, merge upward, query

@@ -1,10 +1,10 @@
 """Window / time-series operators.
 
-Batch analogs of the streaming window zoo over ``events`` (SURVEY.md §2.10:
-the reference is strictly batch, so tumbling/sliding/session windows are
-expressed as group-bys — SQL-expressible, DuckDB-oracle-checkable), plus the
-scale-out replacement for the reference's single-partition running-sum
-window (SURVEY.md §4, W1).
+Time windows over ``events`` (SURVEY.md §2.10: the reference is strictly
+batch, so tumbling/sliding/session windows are expressed as group-bys —
+SQL-expressible, DuckDB-oracle-checkable), plus the scale-out replacement
+for the reference's single-partition running-sum window (SURVEY.md §4,
+W1).
 """
 
 from __future__ import annotations

@@ -4,7 +4,7 @@ etl/app/main.py:31-67, SURVEY.md §3).
 
 `run_etl` = ingest pages → ``load_batch`` → persist the 6 KPIs. ``load_batch``
 (flatten to 4 tables → integrity-validate → atomically persist → the lazy
-KPI frame) is the one load path: ``streaming.micro_batch.stream_etl`` runs
+KPI frame) is the one load path: ``streaming.stream_etl`` runs
 it per epoch. One lazy logical plan per table and no cache: the batch is a
 JVM-held local relation (sources/pages.py), so the checks and the writes
 re-scan it cheaply, and the KPIs are one lazy query over the tables just
@@ -291,9 +291,7 @@ def curate(
     aggregate per stage (a handful of rows on the driver).
 
     Sibling of ``prepare_training_data`` (corpus membership + mixture +
-    split with full accounting, this function) and of
-    ``streaming.micro_batch.streaming_curation_admit`` (the online
-    admission variant of the same filters)."""
+    split with full accounting, this function)."""
     from pyspark.sql import Window
 
     from .operators import curation as cur, dedup as dd

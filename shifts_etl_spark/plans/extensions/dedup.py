@@ -260,10 +260,9 @@ def x240_incremental_neardup(spark, sf_dir):
     the LSH; exact-dup verdicts expand in closed form — the x237 30x
     lesson applied: without it the first 30x-replica smoke measured
     5.8x). At 100 TB the history side is a (id, signature) sidecar and
-    its text is never scanned (history_sig_col, the
-    incremental_exact_dedup contract). The id split makes 'history or
-    lower-id batch mate' collapse to partner_id < doc_id, which the
-    oracle mirrors literally."""
+    its text is never scanned (history_sig_col, the x242 entry). The
+    id split makes 'history or lower-id batch mate' collapse to
+    partner_id < doc_id, which the oracle mirrors literally."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.incremental_minhash_dedup(
         docs.where(F.col("doc_id") >= 250),
@@ -342,9 +341,9 @@ def x242_incremental_neardup_sidecar(spark, sf_dir):
     """The x240 admission with the history side fed ONLY a (doc_id,
     signature) sidecar — the 100 TB shape incremental_minhash_dedup
     documents (``history_sig_col``), where admitted text is NEVER
-    rescanned; until r9 that path was pytest-pinned only (the streaming
-    twin), this entry certifies it value-for-value against the text
-    path: history signatures are precomputed with minhash_signatures
+    rescanned; until r9 that path was pytest-pinned only, this entry
+    certifies it value-for-value against the text path: history
+    signatures are precomputed with minhash_signatures
     (SAME md5 family / 64 hashes / 3-shingles) and handed over as a
     bare two-column frame, while the ORACLE is literally X240's
     text-path SQL — a hash match proves the sidecar path reproduces

@@ -19,7 +19,7 @@ give multi-table (or even multi-partition) atomicity on its own:
 
 Idempotent per ``batch_id`` like the parquet StagedWriter: a replayed
 batch already present in ``etl_commits`` is a no-op, so a crash between
-the publish commit and a streaming checkpoint cannot double-load.
+the publish commit and ``stream_etl``'s checkpoint cannot double-load.
 
 The interface mirrors sinks.staged.StagedWriter (write_batch / read_table
 / commits), so ``pipeline.load_batch`` — the flatten → validate → commit →

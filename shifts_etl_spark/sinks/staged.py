@@ -30,7 +30,7 @@ reader for batches stored without one.
 A replace is a commit too: ``write_batch(replace=True)`` logs a line that
 marks its tables replaced, a read returns the batches since the table's
 last replace, and the batches it supersedes are deleted only after that
-line is written (compaction, MERGE and the streaming KPI refresh all go
+line is written (compaction and the streaming KPI refresh both go
 through it). Deleting them truncates history, like VACUUM.
 
 On a real cluster the same protocol holds on HDFS (rename is atomic per

@@ -110,8 +110,6 @@ SLOW_TESTS = {
     "tests/test_round9_ops.py::test_semantic_dedup_band_knob_certified_shape",
     "tests/test_round9_ops.py::test_semantic_dedup_banded_drops_subset_of_exact",
     "tests/test_session.py::test_archive_round_trip",
-    "tests/test_stateful_skew.py::test_streaming_sessionize",
-    "tests/test_streaming_curation.py::test_streaming_neardup_admission",
     "tests/test_training_pipeline.py::test_cross_doc_dup_filter_stage",
     "tests/test_training_pipeline.py::test_length_quantile_stage_drops_outlier_doc",
     "tests/test_training_pipeline.py::test_prepare_training_data",

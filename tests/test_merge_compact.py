@@ -1,4 +1,5 @@
-"""MERGE/upsert, compaction, and streaming-vs-batch KPI equivalence."""
+"""Compaction, time travel, replace commits, and streaming-vs-batch KPI
+equivalence."""
 
 import json
 
@@ -6,40 +7,10 @@ import pytest
 
 from pyspark.sql import Row, functions as F
 
-from shifts_etl_spark.operators.merge import merge_into
 from shifts_etl_spark.pipeline import run_etl
 from shifts_etl_spark.sinks.staged import StagedWriter
 from shifts_etl_spark.sources.generator import generate_shift_docs, paginate
-from shifts_etl_spark.streaming.micro_batch import stream_etl
-
-
-def test_merge_upsert_and_delete(spark, tmp_path):
-    out = tmp_path / "t"
-    run_etl(spark, pages=paginate(generate_shift_docs(days=10), 5), output_dir=out,
-            anchor_date="2023-02-01")
-    w = StagedWriter(out)
-    before = {r.shift_id: r for r in w.read_table(spark, "shifts").collect()}
-    ids = sorted(before)
-
-    updates = spark.createDataFrame(
-        [
-            Row(**{**before[ids[0]].asDict(), "shift_cost": None, "_del": False}),
-            Row(**{**before[ids[1]].asDict(), "_del": True}),
-            Row(shift_id="NEW-1", shift_date=before[ids[0]].shift_date,
-                shift_start=None, shift_finish=None, shift_cost=None, _del=False),
-        ],
-        w.read_table(spark, "shifts").schema.add("_del", "boolean"),
-    )
-    n = merge_into(spark, out, "shifts", updates, "shift_id", delete_col="_del")
-    after = {r.shift_id: r for r in w.read_table(spark, "shifts").collect()}
-    assert n == len(after) == 10  # 10 - 1 delete + 1 insert
-    assert ids[1] not in after                      # deleted
-    assert after[ids[0]].shift_cost is None         # updated
-    assert "NEW-1" in after                         # inserted
-    assert after[ids[2]] == before[ids[2]]          # untouched rows survive
-    merge_commit = w.commits()[-1][0]
-    assert sorted(w.read_table(spark, "shifts", as_of=merge_commit).collect()) \
-        == sorted(after.values())
+from shifts_etl_spark.streaming import stream_etl
 
 
 def test_compaction(spark, tmp_path):
@@ -281,7 +252,7 @@ def _assert_logged_counts_are_scans(spark, w, tables, as_of=None):
 def test_logged_counts_equal_scans_in_every_writer_path(spark, tmp_path):
     """The row counts the commit log holds sum to what a scan of the
     resolved batches returns after appends, a replayed batch id, an empty
-    and a zero-partition batch, compaction and MERGE."""
+    and a zero-partition batch, compaction and a replace commit."""
     import threading
 
     from shifts_etl_spark.pipeline import OUTPUT_TABLES
@@ -317,9 +288,11 @@ def test_logged_counts_equal_scans_in_every_writer_path(spark, tmp_path):
     _assert_logged_counts_are_scans(spark, w, ["breaks"])
 
     updates = shifts.limit(2).withColumn("shift_id", F.concat("shift_id", F.lit("-new")))
-    n = merge_into(spark, str(out), "shifts", updates, "shift_id")
-    assert n == w.row_count("shifts") == counts["shifts"] + 2
+    replaced = w.write_batch({"shifts": shifts.unionByName(updates)}, replace=True)
+    assert w.row_count("shifts") == counts["shifts"] + 2
     _assert_logged_counts_are_scans(spark, w, OUTPUT_TABLES)
+    assert sorted(w.read_table(spark, "shifts", as_of=replaced).collect()) \
+        == sorted(w.read_table(spark, "shifts").collect())
 
 
 def test_logged_counts_equal_scans_after_stream_epochs(spark, tmp_path):

@@ -1,12 +1,9 @@
-"""Round-9 fixes: streaming neardup_kwargs validation and the re-keyed
-scale-correct defaults (x13 fixed-cell IVF, x6/x121 band-blocked NN, x36
-banded SemDeDup candidates, x242 sidecar-path certification).
+"""Round-9 fixes: the re-keyed scale-correct defaults (x13 fixed-cell
+IVF, x6/x121 band-blocked NN, x36 banded SemDeDup candidates, x242
+sidecar-path certification).
 """
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import Row, functions as F
 
 from shifts_etl_spark.operators import curation, dedup, simsearch
 
@@ -83,29 +80,3 @@ def test_semantic_dedup_band_knob_certified_shape(spark):
             base.select("vec_id", "cell")
         ).count() == 0
     )
-
-
-def test_streaming_neardup_kwargs_validated(spark, tmp_path):
-    from shifts_etl_spark.streaming.micro_batch import (
-        streaming_curation_admit,
-    )
-
-    (tmp_path / "in").mkdir()
-    with pytest.raises(ValueError, match="unsupported neardup_kwargs"):
-        streaming_curation_admit(
-            spark,
-            tmp_path / "in",
-            tmp_path / "ckpt",
-            tmp_path / "out",
-            neardup_threshold=0.5,
-            neardup_kwargs={"threshold": 0.7},
-        )
-    with pytest.raises(ValueError, match="unsupported neardup_kwargs"):
-        streaming_curation_admit(
-            spark,
-            tmp_path / "in",
-            tmp_path / "ckpt",
-            tmp_path / "out",
-            neardup_threshold=0.5,
-            neardup_kwargs={"text_col": "body"},
-        )

@@ -24,10 +24,8 @@ from shifts_etl_spark.session import get_spark
 
 
 def norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return v
+    if isinstance(v, float) and math.isnan(v):
+        return "NaN"
     return v
 
 

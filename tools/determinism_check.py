@@ -11,7 +11,6 @@ Usage: python tools/determinism_check.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
-import math
 import sys
 import time
 from pathlib import Path
@@ -20,18 +19,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entry_mod
 from shifts_etl_spark.session import get_spark
-
-
-def norm_cell(v):
-    if isinstance(v, float) and math.isnan(v):
-        return "NaN"
-    return v
-
-
-def canon(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(norm_cell(r[i]) for i in order) for r in rows]
-    return sorted(out, key=repr)
+from tools.check_correctness import canon
 
 
 CONFIGS = [
